@@ -472,15 +472,16 @@ def build_index(
                     ],
                 )
 
-    finally:
-        # join the concurrent docs writer even on failure (a resume in the
-        # same session must never race a still-running writer), then drop
-        # the caches — the postings stage was their last consumer
         if docs_future is not None:
-            try:
-                pending_lineage.append(docs_future.result())
-            except Exception:
-                pass  # surfaces via the missing docs table downstream
+            # re-raises a failed docs write (after the cleanup below), so
+            # meta — the build's completion marker — is never written
+            # without docs
+            pending_lineage.append(docs_future.result())
+    finally:
+        # shutdown joins the concurrent docs writer even on failure (a
+        # resume in the same session must never race a still-running
+        # writer), then drop the caches — the postings stage was their
+        # last consumer
         if pool is not None:
             pool.shutdown()
         if dlen is not None:
@@ -717,7 +718,9 @@ def _table_num_rows(store: IndexStore, table: str) -> int:
 
 def _dl_array(store: IndexStore, num_docs: int) -> np.ndarray:
     """Dense uint32 doclength array reassembled from shard_sizes' packed
-    runs — driver-side pyarrow read of n_shards skinny rows."""
+    runs — driver-side pyarrow read of n_shards skinny rows. Raises
+    ``ValueError`` unless the runs tile [0, num_docs) exactly: a gap would
+    score its docs with doclength 0, an overlap would overwrite lengths."""
     import glob
 
     import pyarrow.parquet as papq
@@ -725,11 +728,17 @@ def _dl_array(store: IndexStore, num_docs: int) -> np.ndarray:
     t = papq.read_table(
         glob.glob(store.path("shard_sizes") + "/*.parquet"),
         columns=["start_docid", "count", "dl_bin"],
-    )
-    dl = np.zeros(num_docs, np.uint32)
-    for s, c, b in zip(
-        t["start_docid"].to_pylist(), t["count"].to_pylist(), t["dl_bin"].to_pylist()
+    ).sort_by("start_docid")
+    starts = np.asarray(t["start_docid"].to_pylist(), np.int64)
+    counts = np.asarray(t["count"].to_pylist(), np.int64)
+    if not (
+        np.array_equal(starts, np.cumsum(counts) - counts) and counts.sum() == num_docs
     ):
+        raise ValueError(
+            f"{store.path('shard_sizes')}: rows do not tile [0, {num_docs})"
+        )
+    dl = np.zeros(num_docs, np.uint32)
+    for s, c, b in zip(starts.tolist(), counts.tolist(), t["dl_bin"].to_pylist()):
         dl[s : s + c] = np.frombuffer(b, "<u4")
     return dl
 

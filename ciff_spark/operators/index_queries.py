@@ -161,7 +161,7 @@ def _bm25_indexed_filtered(query: str, lang: str):
     """Metadata-filtered index-backed search: top-k restricted to documents
     with ``lang = <lang>`` while idf/avgdl stay collection-level — the
     standard filtered-search semantics (`IndexReader.topk(doc_filter=...)`,
-    a semi-join on the contributions before aggregation). The oracle runs
+    the kernel's allowed-doc mask). The oracle runs
     the SAME whole-collection BM25 pipeline with the result set re-joined
     against the metadata predicate."""
 
@@ -242,7 +242,7 @@ QUERIES: dict[str, tuple] = {
     "bm25_idx_wand_rare": (_bm25_indexed(Q_RARE, "wand"), bm25_topk_sql(Q_RARE, K)),
     "bm25_idx_wand_multi": (_bm25_indexed(Q_MULTI, "wand"), bm25_topk_sql(Q_MULTI, K)),
     # metadata-filtered search: results restricted to lang='es' docs,
-    # collection-level idf/avgdl (doc_filter semi-join on contributions)
+    # collection-level idf/avgdl (doc_filter as the kernel's allowed mask)
     "bm25_idx_filtered_es": (
         _bm25_indexed_filtered(Q_MIX, "es"),
         bm25_topk_sql(Q_MIX, K, where="fd.lang = 'es'"),

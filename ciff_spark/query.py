@@ -1,19 +1,19 @@
 """Query side: BM25 top-k over a built index (exact and Block-Max WAND), and
 the index-free relational BM25 used for SQL-oracle parity.
 
-Three implementations of the same pinned semantics:
+Two engines implement the same pinned semantics:
 
 - ``bm25_topk_relational``: pure DataFrame ops straight off a corpus table
   (tokenize → tf → doc/term stats → joins → score → top-k). 100% built-in
   expressions — Catalyst/AQE plan it, no Python in the loop. This is also the
   definition the DuckDB driver-oracle SQL mirrors fragment-by-fragment.
-- ``IndexReader.topk(mode="exact")``: decode the term-pruned posting blocks
-  (Parquet predicate pushdown on ``term``), attach doclengths per docid-shard
-  via cogroup with ``shard_sizes`` (never joining the wide docs table),
-  score vectorized, hash-agg per (qid, docid), per-qid window top-k.
-- ``IndexReader.topk(mode="wand")``: per (shard) Arrow group runs the
-  interval block-max kernel (ciff_spark.wand) — decodes only blocks whose
-  upper bound can still beat the running top-k threshold.
+- ``IndexReader.topk``: one per-docid-shard Arrow stage over the
+  pgroup- and term-pruned postings scan, doclengths from a per-reader
+  broadcast (never a join against the wide docs table). ``mode="wand"`` runs
+  the interval block-max kernel (ciff_spark.wand), which decodes only blocks
+  whose upper bound can still beat the running top-k threshold;
+  ``mode="exact"`` decodes every block (``exhaustive_topk``). Every doc lives
+  in one shard, so a per-qid window over the per-shard top-k is exact.
 
 All paths break ties by ascending docid and (for driver-facing outputs)
 round scores to ``SCORE_DECIMALS``.
@@ -21,24 +21,22 @@ round scores to ``SCORE_DECIMALS``.
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ciff_spark.functions.codec import decode_block_dict
+from ciff_spark.build import _dl_array
 from ciff_spark.functions.scoring import (
     SCORE_DECIMALS,
     idf_col,
     idf_np,
     idf_sql,
     tfnorm_col,
-    tfnorm_np,
     tfnorm_sql,
 )
 from ciff_spark.functions.tokenizer import tokenize_expr, tokenize_py, tokenize_sql
 from ciff_spark.store import IndexStore
-from ciff_spark.wand import wand_topk
+from ciff_spark.wand import allowed_mask, exhaustive_topk, wand_topk
 
 #: below this many docid shards, ``shared_theta`` seeding is skipped (the
 #: result is identical either way): the seed pass is an extra Spark job plus
@@ -161,13 +159,6 @@ ORDER BY round(s, {SCORE_DECIMALS}) DESC, scored.docid ASC LIMIT {k}
 # Index-backed top-k
 # ---------------------------------------------------------------------------
 
-#: docs at or below which the reader broadcasts the dense doclength array
-#: (4 B/doc — 20 MB at the gate) instead of cogrouping the shard_sizes table
-#: into every topk job: one exchange and one parquet scan fewer per query
-#: batch. Same gate value as BuildConfig.dl_broadcast_max_docs.
-DL_BROADCAST_MAX_DOCS = 5_000_000
-
-
 class IndexReader:
     def __init__(self, spark: SparkSession, root: str) -> None:
         self.spark = spark
@@ -175,32 +166,24 @@ class IndexReader:
         # meta is one row: read it driver-side with pyarrow — a topk call
         # should cost exactly ONE Spark job, not warmup jobs for metadata
         self.meta = self.store.meta_local()
-        self._dl_bc = None  # lazily-built doclength broadcast (or False)
+        avgdl = float(self.meta["avgdl"])
+        # sound WAND pruning under avgdl drift (post-compaction) — see wand.py
+        self.bound_scale = max(
+            1.0, avgdl / (float(self.meta.get("bounds_avgdl") or avgdl) or 1.0)
+        )
+        self._dl_bc = None  # lazily-built doclength broadcast
 
     def _dl_broadcast(self):
         """Broadcast of the dense doclength array, built once per reader
-        from a driver-side pyarrow read of shard_sizes — only when the doc
-        count is under the gate AND the bins fully cover 0..N-1 (a gap means
-        a corrupt index; the cogroup path's fail-loud check handles it)."""
+        from a driver-side pyarrow read of shard_sizes (``_dl_array`` raises
+        unless its rows tile [0, num_docs) exactly). Kernel tasks read this
+        instead of shard_sizes: that table is one row group after compaction,
+        so a per-task read would load all N doclengths anyway."""
         if self._dl_bc is None:
-            self._dl_bc = False
-            n = int(self.meta["num_docs"])
-            if 0 < n <= DL_BROADCAST_MAX_DOCS:
-                import glob
-
-                import pyarrow.dataset as pads
-
-                from ciff_spark.build import _dl_array
-
-                counts = pads.dataset(
-                    glob.glob(self.store.path("shard_sizes") + "/*.parquet"),
-                    format="parquet",
-                ).to_table(columns=["count"])
-                if int(sum(counts["count"].to_pylist())) == n:
-                    self._dl_bc = self.spark.sparkContext.broadcast(
-                        _dl_array(self.store, n)
-                    )
-        return self._dl_bc or None
+            self._dl_bc = self.spark.sparkContext.broadcast(
+                _dl_array(self.store, int(self.meta["num_docs"]))
+            )
+        return self._dl_bc
 
     # -- helpers --------------------------------------------------------------
 
@@ -259,6 +242,11 @@ class IndexReader:
     ) -> DataFrame:
         """Top-k per query. Returns DataFrame(qid int, docid long, score double).
 
+        ``mode="wand"`` runs the interval Block-Max kernel
+        (``ciff_spark.wand.wand_topk``) per docid shard; ``mode="exact"``
+        decodes and scores every posting of the query terms
+        (``exhaustive_topk``). Both run in the same single per-shard stage.
+
         ``scoring="impact"`` sums stored tf values as quantized impacts
         (term weight 1.0, doclengths unused) — the reference's learned-sparse
         model where PISA's quantized scorer ranks on Σ impact
@@ -278,18 +266,25 @@ class IndexReader:
         ``doc_filter``: optional single-column DataFrame of docids — results
         restrict to these docs (metadata-filtered search: the caller derives
         it from the docs table / any side predicate), while idf/avgdl stay
-        COLLECTION-level (the standard filtered-search semantics). The
-        filter applies as a semi-join on the per-(doc, term) contributions
-        BEFORE aggregation — rows drop at the earliest relational point;
-        exact mode only (WAND's pruning thresholds are heap-driven and the
-        kernel does not see the filter).
+        COLLECTION-level (the standard filtered-search semantics). The ids
+        are collected on the driver, validated (any id outside
+        [0, num_docs) raises ``ValueError``) and broadcast as the kernel's
+        ``allowed`` mask; exact mode only.
         """
         if scoring not in ("bm25", "impact"):
-            # validate HERE, not only in the wand kernel — mode="exact" with
-            # a typo'd scoring would otherwise silently fall back to BM25
+            # validate HERE, not only in the kernels — an empty query batch
+            # would otherwise accept a typo'd scoring silently
             raise ValueError(f"unknown scoring {scoring!r}")
-        if doc_filter is not None and mode != "exact":
-            raise ValueError("doc_filter requires mode='exact'")
+        if mode not in ("exact", "wand"):
+            raise ValueError(f"unknown mode {mode!r}")
+        allowed = None
+        if doc_filter is not None:
+            if mode != "exact":
+                raise ValueError("doc_filter requires mode='exact'")
+            ids = doc_filter.select(F.col(doc_filter.columns[0]).cast("long")).toPandas()
+            allowed = self.spark.sparkContext.broadcast(
+                allowed_mask(ids.iloc[:, 0].to_numpy(), int(self.meta["num_docs"]))
+            )
         qpdf, terms = self._query_frame(queries)
         if not terms:
             return self.spark.createDataFrame([], "qid int, docid bigint, score double")
@@ -317,52 +312,30 @@ class IndexReader:
             .select("term", "shard", "blocks")
         )
         pq = post.join(F.broadcast(qdf), "term")
-        sizes = self.store.read(self.spark, "shard_sizes")
-        avgdl = float(self.meta["avgdl"])
-        # sound WAND pruning under avgdl drift (post-compaction) — see wand.py
-        _ba = float(self.meta.get("bounds_avgdl") or avgdl) or 1.0
-        self._bound_scale = max(1.0, avgdl / _ba)
 
-        if mode == "exact":
-            out = self._exact(pq, sizes, avgdl, k, rd, scoring=scoring, doc_filter=doc_filter)
-        elif mode == "wand":
-            if shared_theta:
-                # seeding is one extra small job + a driver round-trip; it
-                # only repays itself when there are enough OTHER shards for
-                # the seeded threshold to prune (r5 driver bench: on the
-                # 8-shard documents index it cost 2.02 s vs plain WAND's
-                # 1.70 s). Below the gate the plain single-job path computes
-                # the identical top-k.
-                n_shards_idx = -(-int(self.meta["num_docs"]) // int(self.meta["shard_size"]))
-                if n_shards_idx < SHARED_THETA_MIN_SHARDS:
-                    shared_theta = False
-            if shared_theta:
-                seed_pdf = self._wand(
-                    pq.where(F.col("shard") == 0),
-                    sizes.where(F.col("shard") == 0),
-                    avgdl, k, rd, scoring=scoring,
-                ).toPandas()
-                # a query's seed is sound only if shard 0 actually yielded a
-                # FULL k (k attained scores >= its k-th) — else no floor
-                theta0 = {
-                    int(q): float(s.min())
-                    for q, s in seed_pdf.groupby("qid")["score"]
-                    if len(s) >= k
-                }
-                rest = self._wand(
-                    pq.where(F.col("shard") != 0),
-                    sizes.where(F.col("shard") != 0),
-                    avgdl, k, rd, theta0, scoring=scoring,
-                )
-                seed_df = self.spark.createDataFrame(
-                    seed_pdf, "qid int, docid bigint, score double"
-                )
-                out = self._global_topk(seed_df.unionAll(rest), k)
-            else:
-                out = self._wand(pq, sizes, avgdl, k, rd, scoring=scoring)
-        else:
-            raise ValueError(f"unknown mode {mode!r}")
-        return out
+        # seeding is one extra small job + a driver round-trip; it only
+        # repays itself when there are enough OTHER shards for the seeded
+        # threshold to prune (r5 driver bench: on the 8-shard documents
+        # index it cost 2.02 s vs plain WAND's 1.70 s). Below the gate the
+        # plain single-job path computes the identical top-k.
+        n_shards_idx = -(-int(self.meta["num_docs"]) // int(self.meta["shard_size"]))
+        if mode == "wand" and shared_theta and n_shards_idx >= SHARED_THETA_MIN_SHARDS:
+            seed_pdf = self._score(pq.where(F.col("shard") == 0), k, rd, mode, scoring).toPandas()
+            # a query's seed is sound only if shard 0 actually yielded a
+            # FULL k (k attained scores >= its k-th) — else no floor
+            theta0 = {
+                int(q): float(s.min())
+                for q, s in seed_pdf.groupby("qid")["score"]
+                if len(s) >= k
+            }
+            rest = self._score(
+                pq.where(F.col("shard") != 0), k, rd, mode, scoring, theta0=theta0
+            )
+            seed_df = self.spark.createDataFrame(
+                seed_pdf, "qid int, docid bigint, score double"
+            )
+            return self._global_topk(seed_df.unionAll(rest), k)
+        return self._global_topk(self._score(pq, k, rd, mode, scoring, allowed=allowed), k)
 
     def _shard_partitioned(self, pq: DataFrame) -> DataFrame:
         """Explicit hash repartition on ``shard`` ahead of the kernel stage.
@@ -388,191 +361,68 @@ class IndexReader:
             .drop("rn")
         )
 
-    # -- exact: decode everything, relational aggregation ---------------------
-
-    def _exact(
-        self, pq: DataFrame, sizes: DataFrame, avgdl: float, k: int,
-        round_decimals: int | None = None, scoring: str = "bm25",
-        doc_filter: DataFrame | None = None,
+    def _score(
+        self, pq: DataFrame, k: int, round_decimals: int | None, mode: str,
+        scoring: str, theta0: dict[int, float] | None = None, allowed=None,
     ) -> DataFrame:
-        impact = scoring == "impact"
-
-        def score_rows(postings_pdf: pd.DataFrame, dl: np.ndarray, start: int):
-            qids, docids, contribs = [], [], []
-            # per-row decode cache: after the query join the same postings
-            # row appears once PER QID — a batch's shared (hot) terms must
-            # decode once per task, not once per query. Keyed by (term,
-            # first-block max_docid), NOT term alone: a compacted index
-            # holds base + appended rows for the SAME (term, shard), with
-            # disjoint docid ranges (so the first block's max_docid is the
-            # discriminator) — a term-keyed cache would silently serve the
-            # base row's postings for the appended row.
-            decoded: dict[tuple, tuple[np.ndarray, np.ndarray]] = {}
-            for row in postings_pdf.itertuples(index=False):
-                key = (
-                    row.term,
-                    int(row.blocks[0]["max_docid"]) if len(row.blocks) else -1,
-                )
-                got = decoded.get(key)
-                if got is None:
-                    d_parts, t_parts, prev = [], [], -1
-                    for blk in row.blocks:
-                        d_, t_ = decode_block_dict(blk, prev)
-                        d_parts.append(d_)
-                        t_parts.append(t_)
-                        prev = int(blk["max_docid"])
-                    got = decoded[key] = (
-                        np.concatenate(d_parts), np.concatenate(t_parts)
-                    )
-                d, tf = got
-                if impact:  # tf IS the quantized impact; dl unused
-                    c = row.idf * tf.astype(np.float64)
-                else:
-                    c = row.idf * tfnorm_np(tf, dl[d - start], avgdl)
-                qids.append(np.full(len(d), row.qid, np.int64))
-                docids.append(d)
-                contribs.append(c)
-            return pd.DataFrame(
-                {
-                    "qid": np.concatenate(qids),
-                    "docid": np.concatenate(docids),
-                    "contrib": np.concatenate(contribs),
-                }
-            )
-
+        """Per-shard top-k of every query: ONE ``groupBy("shard")`` Arrow
+        stage whose kernel is ``wand_topk`` (``mode="wand"``) or
+        ``exhaustive_topk`` (``mode="exact"``). Every doc lives in exactly
+        one shard, so the per-qid merge of these rows is the exact global
+        top-k. ``theta0``: per-qid seed thresholds (wand); ``allowed``:
+        broadcast doc mask (exact)."""
         dlb = self._dl_broadcast()
-        if dlb is not None:
-            # doclengths ride a broadcast (built once per reader): the
-            # shard_sizes scan + its cogroup exchange drop out of the job
-            def score_shard_b(key, postings_pdf: pd.DataFrame):
-                if postings_pdf.empty:
-                    return pd.DataFrame({"qid": [], "docid": [], "contrib": []})
-                return score_rows(postings_pdf, dlb.value, 0)
-
-            contrib = self._shard_partitioned(pq).groupBy("shard").applyInPandas(
-                score_shard_b, schema="qid int, docid bigint, contrib double"
-            )
-        else:
-            def score_shard(key, postings_pdf: pd.DataFrame, sizes_pdf: pd.DataFrame):
-                if postings_pdf.empty:
-                    return pd.DataFrame({"qid": [], "docid": [], "contrib": []})
-                if sizes_pdf.empty:
-                    # postings exist but the shard has no doclength row: the
-                    # index is corrupt — fail loud, never silently truncate
-                    raise ValueError(
-                        f"shard {key}: postings present but shard_sizes row missing"
-                    )
-                dl = np.frombuffer(sizes_pdf["dl_bin"].iloc[0], dtype="<u4")
-                start = int(sizes_pdf["start_docid"].iloc[0])
-                return score_rows(postings_pdf, dl, start)
-
-            contrib = (
-                pq.groupBy("shard")
-                .cogroup(sizes.groupBy("shard"))
-                .applyInPandas(score_shard, schema="qid int, docid bigint, contrib double")
-            )
-        if doc_filter is not None:
-            # metadata-filtered search: semi-join the (doc, term)
-            # contributions against the allowed docid set BEFORE the
-            # aggregation — per-doc scores stay complete (whole docs drop)
-            allowed = doc_filter.select(
-                F.col(doc_filter.columns[0]).cast("long").alias("docid")
-            ).distinct()
-            contrib = contrib.join(allowed, "docid", "leftsemi")
-        scores = contrib.groupBy("qid", "docid").agg(F.sum("contrib").alias("score"))
-        if round_decimals is not None:
-            # round the COMPLETE per-doc score before ranking — the sound
-            # driver/oracle ordering contract (no raw-score over-fetch)
-            scores = scores.select(
-                "qid", "docid", F.round("score", round_decimals).alias("score")
-            )
-        return self._global_topk(scores, k)
-
-    # -- wand: block-max pruned kernel per shard -------------------------------
-
-    def _wand(
-        self, pq: DataFrame, sizes: DataFrame, avgdl: float, k: int,
-        round_decimals: int | None = None,
-        theta0: dict[int, float] | None = None,
-        scoring: str = "bm25",
-    ) -> DataFrame:
-        kk = int(k)
-        avg = float(avgdl)
-        rd = round_decimals
-        sc = scoring
+        avgdl = float(self.meta["avgdl"])
+        wand = mode == "wand"
         # impact bounds (max_tf) are avgdl-independent — no drift inflation
-        bscale = 1.0 if sc == "impact" else float(getattr(self, "_bound_scale", 1.0))
+        bscale = 1.0 if scoring == "impact" else self.bound_scale
 
-        def wand_rows(postings_pdf: pd.DataFrame, dl: np.ndarray, start: int):
-            frames = []
+        def score_shard(key, pdf):
+            dl = dlb.value
+            mask = None if allowed is None else allowed.value
             # per-row caches shared ACROSS the qid loop: a batch's shared
-            # (hot) terms otherwise re-walk block geometry and re-decode
-            # their blocks once per query — the kernel exposes geom/decode
-            # cache hooks exactly for this (the serving path has used them
-            # since r4; the distributed reader paid 20× per task without).
-            # Keyed by (term, first-block max_docid), NOT term alone: a
-            # compacted index holds base + appended rows for the SAME
-            # (term, shard) with disjoint docid ranges — a term-keyed cache
-            # would serve one row's blocks for the other.
-            blocks_by_row: dict[tuple, list] = {}
-            gc_by_row: dict[tuple, dict] = {}
-            dc_by_row: dict[tuple, dict] = {}
-            for qid, qg in postings_pdf.groupby("qid"):
+            # (hot) terms walk block geometry and decode once per task, not
+            # once per query. Keyed by (term, first-block max_docid), NOT
+            # term alone: a compacted index holds base + appended rows for
+            # the SAME (term, shard) with disjoint docid ranges — a
+            # term-keyed cache would serve one row's blocks for the other.
+            # Lists go to the kernels in key order, so a doc's score sums
+            # its terms in the same order whatever order the rows arrive in.
+            caches: dict[tuple, tuple[dict, dict]] = {}
+            frames = []
+            for qid, qg in pdf.groupby("qid"):
                 lists, gcs, dcs = [], [], []
-                for r in qg.itertuples(index=False):
-                    key = (
-                        r.term,
-                        int(r.blocks[0]["max_docid"]) if len(r.blocks) else -1,
+                rows = [
+                    ((r.term, int(r.blocks[0]["max_docid"])), r)
+                    for r in qg.itertuples(index=False)
+                ]
+                for key_, r in sorted(rows, key=lambda x: x[0]):
+                    gc, dc = caches.setdefault(key_, ({}, {}))
+                    lists.append((float(r.idf), r.blocks))
+                    gcs.append(gc)
+                    dcs.append(dc)
+                if wand:
+                    seed = theta0.get(int(qid)) if theta0 else None
+                    d, s = wand_topk(
+                        lists, dl, 0, avgdl, k, round_decimals, seed,
+                        decode_caches=dcs, bound_scale=bscale, scoring=scoring,
+                        geom_caches=gcs,
                     )
-                    b = blocks_by_row.get(key)
-                    if b is None:
-                        b = blocks_by_row[key] = list(r.blocks)
-                        gc_by_row[key] = {}
-                        dc_by_row[key] = {}
-                    lists.append((float(r.idf), b))
-                    gcs.append(gc_by_row[key])
-                    dcs.append(dc_by_row[key])
-                seed = theta0.get(int(qid)) if theta0 else None
-                d, s = wand_topk(
-                    lists, dl, start, avg, kk, rd, seed,
-                    decode_caches=dcs, bound_scale=bscale, scoring=sc,
-                    geom_caches=gcs,
-                )
+                else:
+                    d, s = exhaustive_topk(
+                        lists, dl, 0, avgdl, k, round_decimals,
+                        decode_caches=dcs, scoring=scoring, allowed=mask,
+                    )
                 frames.append(pd.DataFrame({"qid": int(qid), "docid": d, "score": s}))
             return pd.concat(frames, ignore_index=True)
 
-        dlb = self._dl_broadcast()
-        if dlb is not None:
-            # doclengths ride a broadcast (built once per reader): the
-            # shard_sizes scan + its cogroup exchange drop out of the job
-            def wand_shard_b(key, postings_pdf: pd.DataFrame):
-                if postings_pdf.empty:
-                    return pd.DataFrame({"qid": [], "docid": [], "score": []})
-                return wand_rows(postings_pdf, dlb.value, 0)
-
-            local = self._shard_partitioned(pq).groupBy("shard").applyInPandas(
-                wand_shard_b, schema="qid int, docid bigint, score double"
-            )
-        else:
-            def wand_shard(key, postings_pdf: pd.DataFrame, sizes_pdf: pd.DataFrame):
-                if postings_pdf.empty:
-                    return pd.DataFrame({"qid": [], "docid": [], "score": []})
-                if sizes_pdf.empty:
-                    raise ValueError(
-                        f"shard {key}: postings present but shard_sizes row missing"
-                    )
-                dl = np.frombuffer(sizes_pdf["dl_bin"].iloc[0], dtype="<u4")
-                start = int(sizes_pdf["start_docid"].iloc[0])
-                return wand_rows(postings_pdf, dl, start)
-
-            local = (
-                pq.groupBy("shard")
-                .cogroup(sizes.groupBy("shard"))
-                .applyInPandas(wand_shard, schema="qid int, docid bigint, score double")
-            )
-        if rd is not None:
+        local = self._shard_partitioned(pq).groupBy("shard").applyInPandas(
+            score_shard, schema="qid int, docid bigint, score double"
+        )
+        if round_decimals is not None:
             # canonicalize kernel-rounded doubles through the same F.round the
             # oracle contract uses (idempotent on already-rounded values)
-            local = local.select("qid", "docid", F.round("score", rd).alias("score"))
-        # global top-k: per-qid merge of per-shard top-k (tiny: ≤ k per shard)
-        return self._global_topk(local, kk)
+            local = local.select(
+                "qid", "docid", F.round("score", round_decimals).alias("score")
+            )
+        return local

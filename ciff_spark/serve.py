@@ -26,7 +26,7 @@ import pyarrow.parquet as pq
 
 from ciff_spark.functions.scoring import idf_np
 from ciff_spark.functions.tokenizer import tokenize_py
-from ciff_spark.wand import wand_topk
+from ciff_spark.wand import allowed_mask, wand_topk
 
 
 class LocalSearcher:
@@ -256,7 +256,7 @@ class LocalSearcher:
             lists.append((w, blocks, np.asarray(prevs, np.int64)))
             caches.append(cache)
             geoms.append(geom)
-        mask = self._allowed_mask(allowed_docids, self.num_docs)
+        mask = allowed_mask(allowed_docids, self.num_docs)
         d, s = wand_topk(
             lists, self.dl, 0, self.avgdl, k,
             decode_caches=caches,
@@ -265,27 +265,6 @@ class LocalSearcher:
             geom_caches=geoms,
         )
         return list(zip(d.tolist(), s.tolist()))
-
-    @staticmethod
-    def _allowed_mask(allowed_docids, n_docs: int) -> np.ndarray | None:
-        """Validated boolean mask over docids [0, n_docs) from an iterable of
-        allowed docids. Negative ids would WRAP under fancy indexing (silently
-        allowing the wrong document) and ids ≥ n_docs would raise a bare
-        IndexError — both fail loud here instead."""
-        if allowed_docids is None:
-            return None
-        ids = np.asarray(
-            allowed_docids if hasattr(allowed_docids, "__array__") else list(allowed_docids),
-            np.int64,
-        )
-        if ids.size and (ids.min() < 0 or ids.max() >= n_docs):
-            raise ValueError(
-                f"allowed_docids outside [0, {n_docs}): "
-                f"min={ids.min() if ids.size else None}, max={ids.max() if ids.size else None}"
-            )
-        mask = np.zeros(n_docs, bool)
-        mask[ids] = True
-        return mask
 
     def search_batch(
         self, queries: list[str], k: int = 10, stats: dict | None = None,
@@ -439,7 +418,7 @@ class FreshSearcher(LocalSearcher):
             # segment blocks are always fully decoded (exhaustive by design)
             stats["total_blocks"] = stats.get("total_blocks", 0) + n_seg_blocks
             stats["decoded_blocks"] = stats.get("decoded_blocks", 0) + n_seg_blocks
-        mask = self._allowed_mask(allowed_docids, self.fresh_num_docs)
+        mask = allowed_mask(allowed_docids, self.fresh_num_docs)
         if not prune:
             return self._search_exhaustive(
                 terms, base_lists, seg_decoded, fresh_df, k, stats, impact,

@@ -26,7 +26,7 @@ writes or before the checkpoint commit re-runs the batch):
 Readers that want fresh results use ``ciff_spark.serve.FreshSearcher``, which
 recomputes collection statistics over base ∪ segments and scores both
 exhaustively (segment rows carry ``shard = 0`` relative to their own docid
-range, so they are NOT unionable into the shard-cogrouped distributed reader
+range, so they are NOT unionable into the shard-grouped distributed reader
 — the serving path handles them natively). Rank-identity with a cold batch
 build / the oracle over the same rows is asserted in tests (the metamorphic
 "incremental ≡ batch" and "fresh ≡ rebuild" properties).

@@ -291,3 +291,73 @@ def wand_topk(
     docids = np.array([d for _, d in out], np.int64)
     scores = np.array([s for s, _ in out], np.float64)
     return docids, scores
+
+
+def exhaustive_topk(
+    lists: list[tuple[float, list[dict]]],
+    dl: np.ndarray,
+    start_docid: int,
+    avgdl: float,
+    k: int,
+    round_decimals: int | None = None,
+    decode_caches: list[dict] | None = None,
+    scoring: str = "bm25",
+    allowed: np.ndarray | None = None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Unpruned top-k over one docid shard: decode every block, sum each
+    doc's contributions in one ``unique``/``add.at`` pass, take the top-k
+    with one ``lexsort``. Same inputs (single-shard ``(idf, blocks)`` lists),
+    ``scoring``/``round_decimals``/``allowed`` semantics and result order as
+    ``wand_topk``; no block bound is read. A doc's contributions add in list
+    order, as in ``wand_topk``, so the two kernels return identical scores.
+    ``decode_caches``: as in ``wand_topk``, keyed by block index."""
+    if not lists or k <= 0:
+        return np.empty(0, np.int64), np.empty(0, np.float64)
+    impact = scoring == "impact"
+    if not impact and scoring != "bm25":
+        raise ValueError(f"unknown scoring {scoring!r}")
+    caches = decode_caches if decode_caches is not None else [{} for _ in lists]
+    docids, contribs = [], []
+    for (idf, blocks), cache in zip(lists, caches):
+        prev = -1
+        for j, blk in enumerate(blocks):
+            got = cache.get(j)
+            if got is None:
+                got = cache[j] = _decode_block_arrays(blk, prev)
+            prev = int(blk["max_docid"])
+            d, tf = got
+            docids.append(d)
+            if impact:
+                contribs.append(idf * tf.astype(np.float64))
+            else:
+                contribs.append(idf * tfnorm_np(tf, dl[d - start_docid], avgdl))
+    uniq, inv = np.unique(np.concatenate(docids), return_inverse=True)
+    scores = np.zeros(len(uniq), np.float64)
+    np.add.at(scores, inv, np.concatenate(contribs))
+    if round_decimals is not None:
+        scores = np.round(scores, round_decimals)
+    if allowed is not None:
+        keep = allowed[uniq - start_docid]
+        uniq, scores = uniq[keep], scores[keep]
+    top = np.lexsort((uniq, -scores))[:k]
+    return uniq[top], scores[top]
+
+
+def allowed_mask(allowed_docids, n_docs: int) -> np.ndarray | None:
+    """Validated boolean ``allowed`` mask over docids [0, n_docs) from an
+    iterable of allowed docids. Negative ids would WRAP under fancy indexing
+    (silently allowing the wrong document) and ids ≥ n_docs would raise a
+    bare IndexError — both fail loud here instead."""
+    if allowed_docids is None:
+        return None
+    ids = np.asarray(
+        allowed_docids if hasattr(allowed_docids, "__array__") else list(allowed_docids),
+        np.int64,
+    )
+    if ids.size and (ids.min() < 0 or ids.max() >= n_docs):
+        raise ValueError(
+            f"allowed_docids outside [0, {n_docs}): min={ids.min()}, max={ids.max()}"
+        )
+    mask = np.zeros(n_docs, bool)
+    mask[ids] = True
+    return mask

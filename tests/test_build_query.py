@@ -159,11 +159,24 @@ def test_topk_matches_oracle(spark, built, mode):
 
 
 @pytest.mark.parametrize("round_scores", [False, True])
-def test_shared_theta_equals_plain_wand(spark, built, round_scores):
+def test_shared_theta_equals_plain_wand(spark, built, round_scores, monkeypatch):
     """Seeding every shard's WAND threshold with shard 0's k-th score must be
-    a pure optimization: identical results to unseeded WAND and to exact."""
+    a pure optimization: identical results to unseeded WAND and to exact.
+    The 4-shard fixture sits below the seeding gate, so the gate is lowered
+    and the test checks that the seeded pass really ran with a floor."""
+    import ciff_spark.query as query_mod
+
     store, oracle, root = built
     reader = IndexReader(spark, root)
+    monkeypatch.setattr(query_mod, "SHARED_THETA_MIN_SHARDS", 0)
+    seeds = []
+    score = IndexReader._score
+
+    def spy(self, *args, theta0=None, **kwargs):
+        seeds.append(theta0)
+        return score(self, *args, theta0=theta0, **kwargs)
+
+    monkeypatch.setattr(IndexReader, "_score", spy)
 
     def norm(df):
         return (
@@ -178,9 +191,57 @@ def test_shared_theta_equals_plain_wand(spark, built, round_scores):
                     shared_theta=True)
     )
     exact = norm(reader.topk(QUERIES, k=10, mode="exact", round_scores=round_scores))
+    assert any(seeds), "the seeded pass never ran with a shard-0 floor"
     pd.testing.assert_frame_equal(seeded, plain, atol=1e-12, rtol=0)
     assert list(seeded.docid) == list(exact.docid)
     assert np.allclose(seeded.score, exact.score, atol=1e-9)
+
+
+def test_shard_sizes_gap_raises(spark, built, tmp_path):
+    """A shard_sizes table whose rows leave a docid gap is a corrupt index:
+    the reader must raise, not score the gap's docs with doclength 0."""
+    import glob
+    import os
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as papq
+
+    _, _, root = built
+    bad = str(tmp_path / "gap")
+    shutil.copytree(root, bad)
+    ss = f"{bad}/shard_sizes"
+    t = papq.read_table(ss)
+    for f in glob.glob(f"{ss}/*.parquet"):
+        os.remove(f)
+    papq.write_table(t.filter(pc.field("shard") != 1), f"{ss}/part-0.parquet")
+    for mode in ("exact", "wand"):
+        with pytest.raises(ValueError, match="do not tile"):
+            IndexReader(spark, bad).topk(QUERIES, k=10, mode=mode).collect()
+
+
+def test_failed_docs_write_fails_build(spark, tmp_path, monkeypatch):
+    """The docs table writes on a driver thread beside the postings stage;
+    its failure must fail the build, and meta (the completion marker) must
+    not be written."""
+    from ciff_spark.store import IndexStore
+
+    write = IndexStore.write
+
+    def failing_write(self, table, df, partition_by=None):
+        if table == "docs":
+            raise OSError("injected docs write failure")
+        return write(self, table, df, partition_by)
+
+    monkeypatch.setattr(IndexStore, "write", failing_write)
+    root = str(tmp_path / "docs_fail")
+    with pytest.raises(OSError, match="injected docs write failure"):
+        build_index(
+            transcripts_df(spark, 10, seed=42, partitions=2), root,
+            config=BuildConfig(n_shards=2, n_pgroups=2, block_size=16),
+            resume=False,
+        )
+    assert not IndexStore(root).exists("meta")
 
 
 def test_rounded_rank_is_sound_on_adversarial_ties(spark, tmp_path):

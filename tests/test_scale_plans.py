@@ -186,6 +186,34 @@ def test_doc_filter_requires_exact_mode(spark):
     for r in got:
         assert int(r["docid"]) in allowed
         assert full[(r["docid"],)] == r["score"]  # scores stay collection-level
+    # an id outside [0, num_docs) is bad input, not an id to ignore
+    n = int(reader.meta["num_docs"])
+    for bad_id in (n, -1):
+        bad = filt.unionAll(spark.createDataFrame([(bad_id,)], "docid bigint"))
+        with _pytest.raises(ValueError, match="outside"):
+            reader.topk([(0, "dup batch")], k=5, mode="exact", doc_filter=bad)
+
+
+@pytest.mark.parametrize("mode", ["exact", "wand"])
+def test_index_topk_is_one_scoring_stage(spark, mode):
+    """``IndexReader.topk`` plans ONE per-shard Arrow stage in both modes:
+    doclengths ride the reader's broadcast (no shard_sizes scan, no
+    cogroup), the postings scan is pgroup-partition-pruned, and the per-shard
+    top-k merges through a per-qid window — no exchange keyed on
+    (qid, docid), i.e. no contribution aggregation."""
+    import re
+
+    from ciff_spark.operators.index_queries import documents_index, index_root_for
+    from ciff_spark.query import IndexReader
+
+    documents_index(spark, SF_DIR)
+    reader = IndexReader(spark, index_root_for(SF_DIR))
+    plan = _plan(reader.topk([(0, "dup batch"), (1, "data")], k=5, mode=mode))
+    assert plan.count("FlatMapGroupsInPandas") == 1, plan
+    assert "FlatMapCoGroupsInPandas" not in plan, plan
+    assert "shard_sizes" not in plan, plan
+    assert re.search(r"PartitionFilters: \[[^\]]*pgroup", plan), plan
+    assert not re.search(r"hashpartitioning\(qid#\d+L?, docid#", plan), plan
 
 
 def test_kmeans_memo_and_ivf_layout_keyed_by_fingerprint(spark, tmp_path):

@@ -260,6 +260,19 @@ def test_concat_compaction_equals_rebuild(spark, tmp_path):
     t1 = sorted(map(tuple, r1.topk(batch, k=10, mode="wand").collect()))
     t2 = sorted(map(tuple, r2.topk(batch, k=10, mode="wand").collect()))
     assert t1 == t2
+    # exact mode on the compacted index: a (term, shard) holding a base row
+    # and appended rows must be scored as separate lists
+    split = store.read(spark, "postings").groupBy("term", "shard").count()
+    assert split.where(F.col("count") > 1).count() > 0
+    e1 = r1.topk(batch, k=10, mode="exact").toPandas()
+    e2 = r2.topk(batch, k=10, mode="exact").toPandas()
+    e1, e2 = (
+        e.sort_values(["qid", "score", "docid"], ascending=[True, False, True])
+        .reset_index(drop=True)
+        for e in (e1, e2)
+    )
+    assert list(zip(e1.qid, e1.docid)) == list(zip(e2.qid, e2.docid))
+    np.testing.assert_allclose(e1.score, e2.score, rtol=0, atol=1e-9)
 
 
 def test_streaming_windowed_events(spark, tmp_path):

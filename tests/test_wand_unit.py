@@ -1,13 +1,14 @@
-"""Direct unit tests of the interval Block-Max WAND kernel against a brute
-force scorer — including the negative-idf regime classical WAND can't handle
-and adversarial tie cases at the k boundary."""
+"""Direct unit tests of the interval Block-Max WAND kernel and the unpruned
+``exhaustive_topk`` against a brute force scorer — including the
+negative-idf regime classical WAND can't handle and adversarial tie cases at
+the k boundary."""
 
 import numpy as np
 import pytest
 
 from ciff_spark.functions.codec import encode_postings
 from ciff_spark.functions.scoring import idf_np, tfnorm_np
-from ciff_spark.wand import wand_topk
+from ciff_spark.wand import exhaustive_topk, wand_topk
 
 
 def _brute(lists, dl, start, avgdl, k):
@@ -50,6 +51,10 @@ def test_wand_equals_brute_force(seed):
     ed, es = _brute(lists, dl, 0, avgdl, k)
     assert gd.tolist() == ed
     np.testing.assert_allclose(gs, es, atol=1e-12)
+    # both kernels add a doc's contributions in list order: identical scores
+    xd, xs = exhaustive_topk(lists, dl, 0, avgdl, k)
+    assert xd.tolist() == ed
+    np.testing.assert_array_equal(xs, gs)
 
 
 def test_wand_negative_idf_only():
@@ -67,6 +72,7 @@ def test_wand_negative_idf_only():
     ed, es = _brute(lists, dl, 0, avgdl, 10)
     assert (np.array(es) < 0).all()
     assert gd.tolist() == ed
+    assert exhaustive_topk(lists, dl, 0, avgdl, 10)[0].tolist() == ed
     np.testing.assert_allclose(gs, es, atol=1e-12)
 
 
@@ -76,16 +82,16 @@ def test_wand_k_larger_than_candidates():
     lists = [_mk_list(rng, 50, 5, 3, dl, 20.0, 50, 4)]
     gd, gs = wand_topk(lists, dl, 0, 20.0, 100)
     assert len(gd) == 5  # all candidates, no padding
+    assert len(exhaustive_topk(lists, dl, 0, 20.0, 100)[0]) == 5
 
 
 def test_wand_empty_and_k0():
     dl = np.ones(10, np.uint32)
-    d, s = wand_topk([], dl, 0, 1.0, 10)
-    assert len(d) == 0
     rng = np.random.default_rng(0)
     lists = [_mk_list(rng, 10, 3, 2, dl, 1.0, 10, 2)]
-    d, s = wand_topk(lists, dl, 0, 1.0, 0)
-    assert len(d) == 0
+    for kernel in (wand_topk, exhaustive_topk):
+        assert len(kernel([], dl, 0, 1.0, 10)[0]) == 0
+        assert len(kernel(lists, dl, 0, 1.0, 0)[0]) == 0
 
 
 def test_wand_exact_tie_break_by_docid():
@@ -96,9 +102,10 @@ def test_wand_exact_tie_break_by_docid():
     dl = np.full(12, 10, np.uint32)
     blocks = encode_postings(docids, tfs, doclens=dl[docids], avgdl=10.0, block_size=2)
     idf = float(idf_np(3, 12))
-    gd, gs = wand_topk([(idf, blocks)], dl, 0, 10.0, 2)
-    assert gd.tolist() == [3, 7]  # 3 and 7 tie; both beat 9; order by docid
-    assert gs[0] == gs[1]
+    for kernel in (wand_topk, exhaustive_topk):
+        gd, gs = kernel([(idf, blocks)], dl, 0, 10.0, 2)
+        assert gd.tolist() == [3, 7]  # 3 and 7 tie; both beat 9; order by docid
+        assert gs[0] == gs[1]
 
 
 def test_wand_kth_place_tie_across_intervals_prefers_smaller_docid():
@@ -116,9 +123,10 @@ def test_wand_kth_place_tie_across_intervals_prefers_smaller_docid():
     blocks = encode_postings(docids, tfs, block_size=10, block_span=None)
     assert len(blocks) == 2
     dl = np.ones(200, np.uint32)
-    d, s = wand_topk([(1.0, blocks)], dl, 0, 1.0, 5, scoring="impact")
-    assert d.tolist() == [105, 0, 1, 2, 3]  # tf2 doc, then smallest docids
-    assert s.tolist() == [2.0, 1.0, 1.0, 1.0, 1.0]
+    for kernel in (wand_topk, exhaustive_topk):
+        d, s = kernel([(1.0, blocks)], dl, 0, 1.0, 5, scoring="impact")
+        assert d.tolist() == [105, 0, 1, 2, 3]  # tf2 doc, then smallest docids
+        assert s.tolist() == [2.0, 1.0, 1.0, 1.0, 1.0]
 
 
 def test_wand_implicit_singles_with_filter_and_theta():
@@ -148,6 +156,9 @@ def test_wand_implicit_singles_with_filter_and_theta():
     d, s = wand_topk([(idf, blocks)], dl, 0, avgdl, 5, allowed=allowed)
     assert d.tolist() == [p[1] for p in pairs]
     np.testing.assert_allclose(s, [p[0] for p in pairs], rtol=1e-12)
+    xd, xs = exhaustive_topk([(idf, blocks)], dl, 0, avgdl, 5, allowed=allowed)
+    assert xd.tolist() == d.tolist()
+    np.testing.assert_array_equal(xs, s)
     # θ seeded at the true 5th-best allowed score: identical results
     d2, s2 = wand_topk(
         [(idf, blocks)], dl, 0, avgdl, 5, allowed=allowed,
