@@ -146,7 +146,7 @@ def _bm25_indexed(query: str, mode: str):
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         documents_index(spark, sf_dir)
         reader = IndexReader(spark, index_root_for(sf_dir))
-        # round_scores=True ranks on ROUNDED scores inside the reader (heap,
+        # round_scores=True ranks on ROUNDED scores inside the reader (top-k,
         # WAND threshold with the ½-ulp guard, final window) — the sound
         # version of the driver/oracle ordering contract; no over-fetch
         out = reader.topk([(0, query)], k=K, mode=mode, round_scores=True)

@@ -12,6 +12,8 @@ batch plumbing: batching, nullable-metadata handling, row completeness."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -26,10 +28,15 @@ from ciff_spark.multimodal import (
 N_MEDIA = 120
 SEED = 42
 FRAME_EVERY_MS = 10_000
-# one fixed path: the table is a pure function of (N_MEDIA, SEED), never of
-# sf_dir, and oracle_sql() must be a static string
-STAGED_MEDIA = "/root/repo/.staged/media_n120_s42.parquet"
-STAGED_FEATURES = "/root/repo/.staged/media_features_n120_s42.parquet"
+# one fixed path per checkout: the table is a pure function of (N_MEDIA,
+# SEED), never of sf_dir, and oracle_sql() must be a static string — so the
+# directory is `.staged/` at the checkout root, found from this file
+_STAGED_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    ".staged",
+)
+STAGED_MEDIA = os.path.join(_STAGED_DIR, f"media_n{N_MEDIA}_s{SEED}.parquet")
+STAGED_FEATURES = os.path.join(_STAGED_DIR, f"media_features_n{N_MEDIA}_s{SEED}.parquet")
 
 
 def _media(spark: SparkSession) -> DataFrame:

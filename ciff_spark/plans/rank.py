@@ -78,9 +78,8 @@ def _rank_driver_path(
         out = df.withColumn(docid_col, F.lit(0).cast("long"))
         return (out, 0) if with_count else out
     if probe[order_cols].isnull().any().any():
-        # null keys: the broadcast join below is an INNER join and would
-        # silently drop these rows (the distributed path ranks them) — fall
-        # back rather than lose data
+        # null keys never match the join below (the distributed path ranks
+        # them) — fall back rather than fail
         return None
     kdf = probe.sort_values(order_cols, kind="stable").reset_index(drop=True)
     if kdf.duplicated(order_cols).any():
@@ -88,9 +87,22 @@ def _rank_driver_path(
     kdf[docid_col] = np.arange(len(kdf), dtype=np.int64)
     schema = ", ".join(f"{c} {types[c]}" for c in order_cols) + f", {docid_col} long"
     odf = spark.createDataFrame(kdf, schema)
-    # keep the distributed path's column order (df columns, then docid) —
-    # a USING join would move the keys to the front
-    out = df.join(F.broadcast(odf), order_cols).select(*df.columns, docid_col)
+    # the probe and this join evaluate df separately: a key that drifted in
+    # between (non-deterministic input) finds no docid. A LEFT join keeps
+    # its row and the null docid fails the job, where an inner join would
+    # silently drop the row. The select keeps the distributed path's column
+    # order (df columns, then docid) — a USING join moves the keys first
+    docid = F.col(docid_col)
+    out = df.join(F.broadcast(odf), order_cols, "left").select(
+        *df.columns,
+        F.when(
+            docid.isNull(),
+            F.raise_error(F.lit(
+                f"dense rank: a row's {order_cols} key was not in the probed "
+                "keys; the input is not deterministic"
+            )),
+        ).otherwise(docid).alias(docid_col),
+    )
     return (out, len(kdf)) if with_count else out
 
 

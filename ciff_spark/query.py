@@ -254,7 +254,7 @@ class IndexReader:
         modes support it; WAND bounds come from per-block ``max_tf``.
 
         ``round_scores=True`` ranks on scores rounded to ``SCORE_DECIMALS``
-        INSIDE the kernels (heap, pruning threshold, final window) — the
+        INSIDE the kernels (top-k, pruning threshold, final window) — the
         sound version of the driver/oracle ordering contract; no over-fetch.
 
         ``shared_theta=True`` (wand only) runs shard 0 first, collects each

@@ -12,10 +12,13 @@ the pruning idea the north-rule mandates). Instead of pointer-chasing document
    variant stays exact without that assumption).
 2. Block boundaries partition the shard's docid space into intervals; the
    upper bound U(interval) = Σ_t bound of t's covering block.
-3. Intervals are processed in descending U; each processed interval is scored
-   EXACTLY (decode the ≤ |q| covering blocks — cached — and accumulate full
-   BM25). A top-k heap maintains the running threshold θ; once U < θ (and the
-   heap is full) every remaining doc provably cannot enter the top-k.
+3. Intervals are processed in descending U, in batches whose size doubles
+   each round; each batch is scored EXACTLY in one vectorized pass (decode
+   the covering blocks of its intervals — cached — keep the postings that
+   fall in those intervals, and accumulate full BM25). The running top-k
+   gives the threshold θ (its k-th score), checked before every batch: once
+   the next interval's U < θ every remaining doc provably cannot enter the
+   top-k.
 
 Exactness: every docid lies in exactly one interval, and all its postings
 across the query lists lie in the blocks covering that interval, so processed
@@ -24,14 +27,20 @@ docs get their complete score; skipped docs have score ≤ U < θ.
 
 from __future__ import annotations
 
-import heapq
-
 import numpy as np
 
 from ciff_spark.functions.codec import decode_block_dict
 from ciff_spark.functions.scoring import tfnorm_np
 
 _decode_block_arrays = decode_block_dict  # handles implicit single-posting blocks
+
+#: intervals in the first batch; each later batch doubles. A selective query
+#: stops after a batch or two, a query that scores hundreds of intervals pays
+#: the per-batch Python work a handful of times. The first batch runs before
+#: θ exists, so it must stay small: on the benchmark's 64-query pool (4 vCPU)
+#: 8 decoded as many blocks cold as 4 (6,713 vs 6,708 of 13,164) with a ~15%
+#: lower warm median, while 16 already decodes every block of small indexes
+_FIRST_BATCH = 8
 
 
 def list_geometry(
@@ -114,7 +123,7 @@ def wand_topk(
     dl: uint32 doclengths for the dense docid range starting at
     ``start_docid``. Returns (docids, scores) sorted by (-score, docid).
 
-    ``round_decimals``: rank (heap + threshold) on scores ROUNDED to this
+    ``round_decimals``: rank (top-k + threshold) on scores ROUNDED to this
     many decimals — the driver/oracle ordering contract — making the top-k
     sound under rounding: pruning then uses θ − ε with ε = ½·10^-d, since a
     raw score as low as θ − ε still rounds to θ and could win a docid
@@ -123,7 +132,7 @@ def wand_topk(
     ``initial_theta``: a known lower bound on the FINAL k-th score (e.g. the
     k-th score of an already-processed shard — "shared θ across shards").
     Blocks whose bound can't reach it are skipped even before this shard's
-    own heap fills. Exactness is preserved: callers only pass attained
+    own top-k fills. Exactness is preserved: callers only pass attained
     scores, so ≥ k docs globally score ≥ θ₀, and ties at θ₀ survive the ε
     guard.
 
@@ -155,7 +164,7 @@ def wand_topk(
 
     ``allowed``: optional boolean mask aligned with ``dl`` (index =
     docid − start_docid) — metadata-filtered top-k: only allowed docs enter
-    the heap. Pruning stays sound: θ is the k-th best ALLOWED score, and an
+    the top-k. Pruning stays sound: θ is the k-th best ALLOWED score, and an
     interval skipped at U < θ − ε bounds its allowed docs' scores too (the
     bound holds for every doc). Blocks still decode whole (they interleave
     allowed/disallowed docs); the filter applies to candidates, which is
@@ -197,18 +206,27 @@ def wand_topk(
 
     # intervals: refinement of all block boundaries
     pts = np.unique(np.concatenate([np.concatenate((lo, hi + 1)) for lo, hi in zip(los, his)]))
-    starts, ends = pts[:-1], pts[1:] - 1
+    starts = pts[:-1]
+    # covers[i][t]: the block of list i covering interval t, −1 in a gap.
+    # U sums the covering bounds in list order from 0.0, the order a doc's
+    # score sums its contributions, so U ≥ score holds exactly (rounded
+    # addition is monotone); a running sum of ±bound steps can land an ulp
+    # below a score and prune a doc tied at the k-th place
     U = np.zeros(len(starts), np.float64)
+    covers = []
     for lo, hi, bd in zip(los, his, bounds):
-        a = np.searchsorted(pts, lo)
-        b = np.searchsorted(pts, hi + 1)
-        np.add.at(U, a, bd)
-        mask = b < len(U)
-        np.subtract.at(U, b[mask], bd[mask])
-    U = np.cumsum(U)
+        j = np.minimum(np.searchsorted(hi, starts), len(hi) - 1)
+        j[(lo[j] > starts) | (hi[j] < starts)] = -1
+        U += np.where(j >= 0, bd[j], 0.0)
+        covers.append(j)
 
+    # intervals in descending U, taken in batches that double each round;
+    # rank[t] = position of interval t in that order, so a posting belongs
+    # to the current batch iff its interval's rank lies in [pos, end)
     order = np.argsort(-U, kind="stable")
-    heap: list[tuple[float, int]] = []  # (score, -docid) min-heap of the best k
+    neg_u = -U[order]  # ascending, for the θ cut
+    rank = np.empty(len(order), np.int64)
+    rank[order] = np.arange(len(order))
     caches: list[dict] = (
         decode_caches if decode_caches is not None else [{} for _ in lists]
     )
@@ -217,80 +235,57 @@ def wand_topk(
             len(b) for _, b, _ in lists
         )
 
-    for t in order:
-        theta = heap[0][0] if len(heap) >= k else theta_floor
-        theta = max(theta, theta_floor)
-        if theta > -np.inf and U[t] < theta - eps:
-            break  # all remaining intervals bounded below current k-th best
-        s, e = int(starts[t]), int(ends[t])
+    top_d = np.empty(0, np.int64)  # best k so far, sorted by (-score, docid)
+    top_s = np.empty(0, np.float64)
+    pos, size = 0, _FIRST_BATCH
+    while pos < len(order):
+        theta = max(top_s[k - 1] if len(top_s) >= k else -np.inf, theta_floor)
+        # intervals past `stop` have U < θ − ε: none of their docs can
+        # reach the top-k
+        stop = int(np.searchsorted(neg_u, -(theta - eps), side="right"))
+        if stop <= pos:
+            break
+        end = min(pos + size, stop)
+        batch = order[pos:end]
         acc_docids: list[np.ndarray] = []
         acc_contrib: list[np.ndarray] = []
         for i, (idf, blocks, _dp) in enumerate(lists):
-            j = int(np.searchsorted(his[i], s))
-            if j >= len(his[i]) or los[i][j] > s:
-                continue  # no block of list i covers this interval
-            got = caches[i].get(j)
-            if got is None:
-                got = caches[i][j] = _decode_block_arrays(blocks[j], int(prevs[i][j]))
-                if stats is not None:
-                    stats["decoded_blocks"] = stats.get("decoded_blocks", 0) + 1
-            d, tf = got
-            a, b = np.searchsorted(d, s), np.searchsorted(d, e + 1)
-            if a == b:
+            cover = np.unique(covers[i][batch])
+            parts = []
+            for b in cover[cover >= 0].tolist():
+                got = caches[i].get(b)
+                if got is None:
+                    got = caches[i][b] = _decode_block_arrays(blocks[b], int(prevs[i][b]))
+                    if stats is not None:
+                        stats["decoded_blocks"] = stats.get("decoded_blocks", 0) + 1
+                parts.append(got)
+            if not parts:
                 continue
-            dd = d[a:b]
+            d = np.concatenate([p[0] for p in parts])
+            tf = np.concatenate([p[1] for p in parts])
+            # keep the postings whose interval is in this batch: a covering
+            # block also holds docs of intervals scored in other batches
+            r = rank[np.searchsorted(pts, d, side="right") - 1]
+            keep = (r >= pos) & (r < end)
+            if not keep.any():
+                continue
+            dd, tf = d[keep], tf[keep]
             if impact:
-                contrib = idf * tf[a:b].astype(np.float64)
+                contrib = idf * tf.astype(np.float64)
             else:
-                contrib = idf * tfnorm_np(tf[a:b], dl[dd - start_docid], avgdl)
+                contrib = idf * tfnorm_np(tf, dl[dd - start_docid], avgdl)
             acc_docids.append(dd)
             acc_contrib.append(contrib)
+        pos, size = end, 2 * size
         if not acc_docids:
             continue
-        alld = np.concatenate(acc_docids)
-        allc = np.concatenate(acc_contrib)
-        uniq, inv = np.unique(alld, return_inverse=True)
-        scores = np.zeros(len(uniq), np.float64)
-        np.add.at(scores, inv, allc)
-        if round_decimals is not None:
-            scores = np.round(scores, round_decimals)
-        if allowed is not None:
-            keep = allowed[uniq - start_docid]
-            uniq, scores = uniq[keep], scores[keep]
-            if not len(uniq):
-                continue
-        # vectorized heap admission: dense intervals (nothing pruned) used to
-        # walk EVERY candidate through a Python heap op — instead, seed a
-        # non-full heap with the interval's best (k - len) via one lexsort,
-        # then mask the rest against the current θ (a superset of survivors:
-        # θ only rises while inserting), leaving Python work ∝ admissions
-        di, si = uniq, scores
-        if len(heap) < k:
-            need = k - len(heap)
-            if len(di) > need:
-                sel = np.lexsort((di, -si))
-                for idx in sel[:need]:
-                    heapq.heappush(heap, (float(si[idx]), -int(di[idx])))
-                rest = sel[need:]
-                di, si = di[rest], si[rest]
-            else:
-                for d_, s_ in zip(di.tolist(), si.tolist()):
-                    heapq.heappush(heap, (s_, -d_))
-                di = si = ()
-        if len(heap) >= k and len(di):
-            t0, nd0 = heap[0]
-            # a candidate survives iff (s, -d) > (t0, nd0): strictly better
-            # score, or equal score with SMALLER docid (-d > nd0)
-            m = (si > t0) | ((si == t0) & (-di > nd0))
-            di, si = di[m], si[m]
-        for d_, s_ in zip(np.asarray(di).tolist(), np.asarray(si).tolist()):
-            if (s_, -d_) > heap[0]:
-                heapq.heapreplace(heap, (s_, -d_))
-
-    out = sorted(((s_, -d_) for s_, d_ in heap), key=lambda x: (-x[0], x[1]))
-    docids = np.array([d for _, d in out], np.int64)
-    scores = np.array([s for s, _ in out], np.float64)
-    return docids, scores
+        uniq, scores = _doc_scores(acc_docids, acc_contrib, round_decimals, allowed,
+                                   start_docid)
+        cand_d = np.concatenate((top_d, uniq))
+        cand_s = np.concatenate((top_s, scores))
+        best = np.lexsort((cand_d, -cand_s))[:k]
+        top_d, top_s = cand_d[best], cand_s[best]
+    return top_d, top_s
 
 
 def exhaustive_topk(
@@ -331,6 +326,22 @@ def exhaustive_topk(
                 contribs.append(idf * tf.astype(np.float64))
             else:
                 contribs.append(idf * tfnorm_np(tf, dl[d - start_docid], avgdl))
+    uniq, scores = _doc_scores(docids, contribs, round_decimals, allowed, start_docid)
+    top = np.lexsort((uniq, -scores))[:k]
+    return uniq[top], scores[top]
+
+
+def _doc_scores(
+    docids: list[np.ndarray],
+    contribs: list[np.ndarray],
+    round_decimals: int | None,
+    allowed: np.ndarray | None,
+    start_docid: int,
+) -> tuple[np.ndarray, np.ndarray]:
+    """(docids, scores) summed from aligned docid/contribution parts: one
+    ``unique``/``add.at`` pass adds each doc's contributions in part order
+    (callers pass parts in list order), then rounding and the ``allowed``
+    mask. Both kernels score through it, so their scores are identical."""
     uniq, inv = np.unique(np.concatenate(docids), return_inverse=True)
     scores = np.zeros(len(uniq), np.float64)
     np.add.at(scores, inv, np.concatenate(contribs))
@@ -339,8 +350,7 @@ def exhaustive_topk(
     if allowed is not None:
         keep = allowed[uniq - start_docid]
         uniq, scores = uniq[keep], scores[keep]
-    top = np.lexsort((uniq, -scores))[:k]
-    return uniq[top], scores[top]
+    return uniq, scores
 
 
 def allowed_mask(allowed_docids, n_docs: int) -> np.ndarray | None:

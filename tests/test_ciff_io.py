@@ -7,6 +7,8 @@ codec and check the documented header/posting semantics. Round-trip: our
 index → CIFF → decode ≡ original postings.
 """
 
+import os
+
 import numpy as np
 import pytest
 
@@ -21,8 +23,14 @@ from ciff_spark.ciff_io import (
 )
 
 TOY = "/root/reference/tests/test_data/toy-complete-20200309.ciff"
+# the reference's golden file is not vendored here (see FIXTURES.md): its
+# golden tests skip without it, the self-generated round trips still run
+needs_toy = pytest.mark.skipif(
+    not os.path.exists(TOY), reason="reference toy CIFF file is not present"
+)
 
 
+@needs_toy
 def test_read_reference_toy_golden():
     header, pls, docs = read_ciff(TOY)
     # values documented in SURVEY §1.1 (decoded from the golden file)
@@ -143,6 +151,7 @@ def test_partial_export_preserves_global_stats(spark, tmp_path):
     assert docs2 == full_docs
 
 
+@needs_toy
 def test_iter_ciff_streams_toy():
     """The streaming reader yields the same messages as the materializer."""
     from ciff_spark.ciff_io import iter_ciff

@@ -2,6 +2,8 @@
 toy CIFF → PISA files → CIFF must be a fixed point (tests/toy.rs:89-143) —
 plus lexicon/binary-collection unit round-trips and export-from-index."""
 
+import os
+
 import numpy as np
 import pytest
 
@@ -19,6 +21,11 @@ from ciff_spark.pisa_io import (
 )
 
 TOY = "/root/reference/tests/test_data/toy-complete-20200309.ciff"
+# the reference's golden file is not vendored here (see FIXTURES.md): its
+# golden tests skip without it, the self-generated round trips still run
+needs_toy = pytest.mark.skipif(
+    not os.path.exists(TOY), reason="reference toy CIFF file is not present"
+)
 
 
 def test_binary_collection_roundtrip():
@@ -59,6 +66,7 @@ def test_lexicon_view_random_access(tmp_path):
     assert mv.index_of(strings[499]) == 499
 
 
+@needs_toy
 def test_toy_ciff_pisa_ciff_fixed_point(tmp_path):
     """The reference's round-trip golden test, run through OUR converters."""
     base = str(tmp_path / "toy")

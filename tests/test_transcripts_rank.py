@@ -2,6 +2,7 @@
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from ciff_spark.plans.rank import add_dense_docid
@@ -94,3 +95,18 @@ def test_rank_driver_path_matches_distributed(spark):
     pa = fast.orderBy("docid").toPandas()
     pb = slow.orderBy("docid").toPandas()
     pd.testing.assert_frame_equal(pa, pb)
+
+
+def test_rank_driver_path_fails_loud_on_drifting_keys(spark):
+    """The driver path probes the keys, then joins docids back onto a second
+    evaluation of the input. Keys from a non-deterministic UDF differ between
+    the two: the rank must raise, not return fewer rows."""
+    import uuid
+
+    from pyspark.sql.types import StringType
+
+    drift = F.udf(lambda _: uuid.uuid4().hex, StringType()).asNondeterministic()
+    df = spark.range(20).withColumn("key", drift("id"))
+    ranked = add_dense_docid(df, ["key"])
+    with pytest.raises(Exception, match="not deterministic"):
+        ranked.collect()

@@ -6,20 +6,22 @@ the k boundary."""
 import numpy as np
 import pytest
 
-from ciff_spark.functions.codec import encode_postings
+from ciff_spark.functions.codec import decode_postings, encode_postings
 from ciff_spark.functions.scoring import idf_np, tfnorm_np
 from ciff_spark.wand import exhaustive_topk, wand_topk
 
 
-def _brute(lists, dl, start, avgdl, k):
+def _brute(lists, dl, start, avgdl, k, round_decimals=None, allowed=None):
     scores: dict[int, float] = {}
     for idf, blocks in lists:
-        from ciff_spark.functions.codec import decode_postings
-
         d, tf = decode_postings(blocks)
         contrib = idf * tfnorm_np(tf, dl[d - start], avgdl)
         for dd, c in zip(d.tolist(), contrib.tolist()):
             scores[dd] = scores.get(dd, 0.0) + c
+    if round_decimals is not None:
+        scores = {d: float(np.round(s, round_decimals)) for d, s in scores.items()}
+    if allowed is not None:
+        scores = {d: s for d, s in scores.items() if allowed[d - start]}
     ranked = sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
     return [d for d, _ in ranked], [s for _, s in ranked]
 
@@ -165,3 +167,92 @@ def test_wand_implicit_singles_with_filter_and_theta():
         initial_theta=pairs[-1][0],
     )
     assert d2.tolist() == d.tolist()
+
+
+def test_wand_bound_sums_in_score_order_keeps_kth_tie():
+    """A doc tied at the k-th place with a larger-docid doc must win even
+    when its interval's bound is a sum that rounds: with a=0.7, b=0.1 a
+    running sum (a + b) − a lands one ulp below b, which would prune the
+    interval holding doc 5 (score b) once θ = b. The interval bound is
+    summed in the same order as a score, so it can't fall below one."""
+    a, b, c = 0.7, 0.1, 0.05
+    assert (a + b) - a < b
+
+    def blocks(docids):
+        return encode_postings(np.array(docids), np.ones(len(docids), np.int64),
+                               block_size=2, block_span=None)
+
+    lists = [(a, blocks([0, 3])), (b, blocks([2, 5, 10, 13])), (c, blocks([9, 12]))]
+    dl = np.ones(20, np.uint32)
+    for theta in (None, b):
+        d, s = wand_topk(lists, dl, 0, 1.0, 4, scoring="impact", initial_theta=theta)
+        assert d.tolist() == [0, 3, 2, 5]
+        assert s.tolist() == [a, a, b, b]
+    assert exhaustive_topk(lists, dl, 0, 1.0, 4, scoring="impact")[0].tolist() == [0, 3, 2, 5]
+
+
+def _sharded_list(rng, n_docs, df, dl, avgdl, cuts):
+    """One posting list twice: encoded whole (``exhaustive_topk``'s single-
+    shard form) and as the concatenation of per-shard encodings split at
+    ``cuts``, each shard gap-encoded from −1, with its ``decode_prevs``."""
+    docids = np.sort(rng.choice(n_docs, size=df, replace=False)).astype(np.int64)
+    tfs = rng.integers(1, 6, df)
+    idf = float(idf_np(df, n_docs))
+    whole = encode_postings(docids, tfs, doclens=dl[docids], avgdl=avgdl, block_size=4)
+    blocks, prevs = [], []
+    for lo, hi in zip([0, *cuts], [*cuts, n_docs]):
+        m = (docids >= lo) & (docids < hi)
+        shard = encode_postings(docids[m], tfs[m], doclens=dl[docids[m]], avgdl=avgdl,
+                                block_size=4)
+        prevs += [-1] + [int(blk["max_docid"]) for blk in shard[:-1]]
+        blocks += shard
+    return (idf, whole), (idf, blocks, np.array(prevs, np.int64))
+
+
+@pytest.mark.parametrize("k", [10, 100])
+def test_wand_many_intervals_sharded_filtered_rounded(k):
+    """Thousands of small blocks, so the kernel runs through several batch
+    doublings; lists concatenate 2-3 shards with decode_prevs, scores round
+    to 6 decimals, an allowed mask filters, and θ₀ is the attained k-th
+    score. Docids and scores equal the exhaustive kernel and brute force."""
+    rng = np.random.default_rng(k)
+    n_docs, avgdl = 20_000, 30.0
+    dl = rng.integers(5, 60, n_docs).astype(np.uint32)
+    allowed = rng.random(n_docs) < 0.6
+    whole, sharded = [], []
+    for df, cuts in ((8_000, [7_000]), (1_500, [5_000, 14_000]), (300, [9_000, 12_000])):
+        w, sh = _sharded_list(rng, n_docs, df, dl, avgdl, cuts)
+        whole.append(w)
+        sharded.append(sh)
+    ed, es = _brute(whole, dl, 0, avgdl, k, round_decimals=6, allowed=allowed)
+    xd, xs = exhaustive_topk(whole, dl, 0, avgdl, k, round_decimals=6, allowed=allowed)
+    assert xd.tolist() == ed
+    np.testing.assert_array_equal(xs, es)
+    for theta in (None, es[-1]):
+        gd, gs = wand_topk(sharded, dl, 0, avgdl, k, round_decimals=6,
+                           initial_theta=theta, allowed=allowed)
+        assert gd.tolist() == ed
+        np.testing.assert_array_equal(gs, es)
+
+
+def test_wand_selective_query_decodes_a_fraction():
+    """A rare high-tf term with a hot low-tf term: the hot list's blocks
+    outside the rare term's reach must stay undecoded, so batching never
+    degrades into decoding every block."""
+    rng = np.random.default_rng(5)
+    n_docs, avgdl = 20_000, 30.0
+    dl = rng.integers(5, 60, n_docs).astype(np.uint32)
+    rare = np.sort(rng.choice(n_docs, 40, replace=False)).astype(np.int64)
+    hot = np.sort(rng.choice(n_docs, 10_000, replace=False)).astype(np.int64)
+    lists = [
+        (float(idf_np(40, n_docs)),
+         encode_postings(rare, np.full(40, 5), doclens=dl[rare], avgdl=avgdl)),
+        (float(idf_np(10_000, n_docs)),
+         encode_postings(hot, np.ones(10_000, np.int64), doclens=dl[hot], avgdl=avgdl)),
+    ]
+    stats: dict = {}
+    gd, gs = wand_topk(lists, dl, 0, avgdl, 10, stats=stats)
+    assert 0 < stats["decoded_blocks"] < stats["total_blocks"]
+    xd, xs = exhaustive_topk(lists, dl, 0, avgdl, 10)
+    assert gd.tolist() == xd.tolist()
+    np.testing.assert_array_equal(gs, xs)
