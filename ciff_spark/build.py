@@ -1,4 +1,4 @@
-"""The distributed index build pipeline.
+"""The distributed index build pipeline, and the ONE postings encode stage.
 
 Replaces the reference's fully memory-resident jsonl2ciff build (two process-
 wide HashMaps hold the whole index, /root/reference/src/lib.rs:996,1001 — its
@@ -8,28 +8,29 @@ scalability wall) with a declarative Spark pipeline:
     the skinny conv-size table shuffles; the text rows take a broadcast join)
     with add_dense_docid as the generic fallback
     ├─ dlen: NARROW projection docid → (ids, doclength = size(tokens)) —
-    │    cached (tiny); docs table and shard_sizes (u32 doclength runs per
-    │    docid shard) derive from it with no aggregation over the
-    │    occurrence stream; total_terms = Σ doclength sums driver-side
-    │    from the committed shard_sizes bins
-    └─ postings: ONE pass over text and ONE occurrence shuffle, STREAMED
-         (persisted only for multi-batch resume builds): tokenize → explode
-         → repartition raw (docid, term) occurrences on
-         (pgroup = hash(term) % n_pgroups, shard = docid // shard_size) →
-         fused per-partition kernel — dictionary-encode terms, lex-rank the
-         (small) partition vocabulary, integer-lexsort (rank, docid),
-         run-length-combine equal (term, docid) runs (= the tf
-         aggregation), block-encode (codec.encode_arrow_batch) — then one
-         hash exchange of the ENCODED rows on pgroup (write clustering:
-         one file per pgroup) → write, partitionBy(pgroup). The composite
-         occurrence partition key is the structural skew handling: every
-         (term, shard) encode group stays whole in one partition, but a
-         Zipf-hot term's stream spreads across its docid shards — never one
-         reducer — and the per-term merge stays concatenation in shard
-         order.
-  postings(df, cf columns only — blocks pruned at scan) → term_stats
-  (driver-side pyarrow under a row gate, distributed above it)
+    │    cached (tiny); the docs table and shard_sizes (u32 doclength runs
+    │    per docid shard, _write_shard_sizes) derive from it with no
+    │    aggregation over the occurrence stream; total_terms = Σ doclength
+    │    sums driver-side from the committed shard_sizes bins
+    └─ postings: ONE pass over text: tokenize → explode raw (docid, term)
+         occurrences, STREAMED (persisted only for multi-batch resume
+         builds) into _encode_postings → write, partitionBy(pgroup)
+  postings(df, cf columns only) → term_stats (_write_term_stats:
+  driver-side pyarrow under a row gate, distributed above it)
   → meta (≙ CIFF Header; written driver-side, like lineage/resume manifests)
+
+``_encode_postings`` is the single postings encoder every writer shares —
+this text build, the impact build (``sources/jsonl_vectors``), segment
+appends and concat compaction (``streaming/incremental``): one occurrence
+shuffle on (pgroup = hash(term) % n_pgroups, shard = docid // shard_size),
+one fused Arrow kernel per partition (dictionary-encode, lex-rank, integer
+lexsort, run-length tf combine, ``codec.encode_arrow_batch``), one
+clustering exchange of the ENCODED rows on pgroup (one file per pgroup)
+and a (pgroup, term, shard) sort, so every file is term-ordered. The
+composite occurrence partition key is the structural skew handling: every
+(term, shard) encode group stays whole in one partition, but a Zipf-hot
+term's stream spreads across its docid shards — never one reducer — and
+the per-term merge stays concatenation in shard order.
 
 Checkpoint/resume: postings are written in pgroup *batches*; each completed
 batch appends a manifest row to ``_lineage``. A resumed build deletes the
@@ -79,26 +80,16 @@ class BuildConfig:
     pgroup_batches: int = 1     # checkpoint batches (1 = single job, fastest)
     tokenizer: str = "builtin"  # "builtin" (JVM regex) | "pandas" (Arrow UDF)
     rank_partitions: int | None = None
-    encode_partitions: int | None = None  # encode-stage parallelism (default 2×cores)
     input_sorted: bool = False  # input partitions already ordered by id_cols
     two_level_rank: bool = True  # grouped docid = conv offset + turn_idx when
                                  # turn_idx is dense per conv: the wide rows
                                  # never range-shuffle (falls back if not)
-    dl_broadcast_max_docs: int = 5_000_000  # exact block bounds via dl broadcast up to here
-    row_tf_combine: bool = False  # map-side combine: collapse a doc's
-        # duplicate tokens to (term, tf) BEFORE the shuffle. Measured A/B at
-        # pinned local[4], 655k turns: OFF 48.7 s vs ON 96.4 s — the O(u·n)
-        # per-row JVM counting costs ~2× more than the ~33% exchange-row
-        # saving buys, i.e. this exchange is NOT the build's bottleneck.
-        # Kept (default off) for corpora with much higher in-doc duplication
-        # (long docs, small vocab) where the trade reverses.
     fail_after_batches: int | None = None  # test hook: simulate a crash mid-build
 
 
 POSTINGS_SCHEMA = (
     f"term string, shard int, df bigint, cf bigint, blocks array<{BLOCK_SCHEMA}>"
 )
-SHARD_SIZES_SCHEMA = "shard int, start_docid bigint, count int, dl_bin binary"
 
 
 def _tokens_col(cfg: BuildConfig):
@@ -191,70 +182,21 @@ def build_index(
         shard_size = cfg.shard_size or max(cfg.min_shard_size, -(-num_docs // cfg.n_shards), 1)
         have_stats = False
 
-    # ---- ONE pass over the text, ONE shuffle for the postings path ----------
-    # Raw token occurrences ship
-    # straight to their pgroup (hash(term) % n_pgroups), UNSORTED. Everything
-    # a groupBy-first plan does with extra JVM passes happens vectorized
-    # inside the encode kernel instead: dictionary-encode → lex-rank the
-    # (small) per-partition vocabulary → integer lexsort of (rank, docid) →
-    # run-length tf combine. Two shuffles of the postings stream (agg
-    # exchange + pgroup repartition) plus a JVM string sort collapse into
-    # one skinny shuffle and a cache-friendly NumPy sort — on a memory-
-    # bandwidth-bound host those were exactly the worst-scaling components.
-    # The cache is this skinny relation (docid, term, pgroup): text and
-    # token arrays never sit in memory.
-    pgroup_expr = F.pmod(F.hash("term"), F.lit(cfg.n_pgroups))
-    shard_expr = F.floor(F.col("docid") / F.lit(shard_size))
-    n_encode_parts = cfg.encode_partitions or max(
-        cfg.n_pgroups, 2 * spark.sparkContext.defaultParallelism
+    # ---- ONE pass over the text: raw (docid, term) occurrences ---------------
+    # no tf column: one implicit occurrence per row keeps the shuffled
+    # relation lean — the encode stage (_encode_postings) counts run lengths.
+    # Streamed into the encode; cached only when >1 checkpoint batch will
+    # re-filter it (the single-batch build never materializes the full
+    # occurrence relation, the build's largest memory footprint at scale)
+    occ = (
+        ranked.select("docid", _tokens_col(cfg).alias("tokens"))
+        .select("docid", F.explode("tokens").alias("term"))
     )
-    if cfg.row_tf_combine:
-        # map-side combine: a doc's duplicate tokens collapse to (term, tf)
-        # BEFORE the exchange — ~33% fewer shuffled rows on transcripts; the
-        # 1000-executor shuffle wants exactly this partial aggregation.
-        # tokens stays a referenced alias so the tokenizer regex evaluates
-        # once (CollapseProject keeps multi-referenced non-cheap aliases in
-        # their own projection — plan-guard-tested).
-        from ciff_spark.functions.tokenizer import tokens_tf_expr
-
-        occ = (
-            ranked.select("docid", _tokens_col(cfg).alias("tokens"))
-            .select("docid", F.explode(tokens_tf_expr(F.col("tokens"))).alias("e"))
-            .select(
-                "docid",
-                F.col("e.term").alias("term"),
-                F.col("e.tf").cast("long").alias("tf"),
-            )
-        )
-    else:
-        # default: raw occurrences, NO tf column — one implicit occurrence
-        # per row keeps the shuffled/cached relation 8 bytes/row leaner (the
-        # kernel counts run lengths instead)
-        occ = (
-            ranked.select("docid", _tokens_col(cfg).alias("tokens"))
-            .select("docid", F.explode("tokens").alias("term"))
-        )
-    tf = (
-        # partition on (pgroup, docid-shard) EXPRESSIONS: the shuffled/cached
-        # rows carry only (docid, term[, tf]); every (term, shard) encode
-        # group stays whole inside one partition, but a Zipf-hot term's
-        # stream spreads over its docid shards instead of landing on ONE
-        # reducer — this is the salted-hot-term split, applied at the
-        # partition level (without it the hottest term's pgroup is the stage
-        # straggler and the N→4N scaling dies on it)
-        occ.repartition(n_encode_parts, pgroup_expr, shard_expr)
-    )
-    # the encode batches are the occurrence stream's ONLY consumers since
-    # doclengths derive narrowly from size(tokens) (below) — cache it only
-    # when >1 checkpoint batch will re-filter it; the (default) single-batch
-    # build streams it through the encode without ever materializing the
-    # full occurrence relation (the build's largest memory footprint at
-    # corpus scale)
     n_batches = max(1, min(cfg.pgroup_batches, len(todo))) if todo else 0
-    tf_persisted = False
+    occ_persisted = False
     if n_batches > 1:
-        tf = tf.persist()
-        tf_persisted = True
+        occ = occ.persist()
+        occ_persisted = True
 
     # ONE try/finally from the first cache on: a failure anywhere below
     # must release every cached frame (the rank-internal cache included)
@@ -265,17 +207,14 @@ def build_index(
     try:
         # ---- docs + shard_sizes: skinny, occurrence-stream-free ----------------
         # dlen (docid → doclength + ids) is a narrow projection cached once;
-        # shard_sizes writes first (the encode needs it for the doclength
-        # broadcast), then the docs write runs on a driver thread so it overlaps
-        # the encode job on the shared executor pool
+        # shard_sizes writes first (the encode's doclength array comes from
+        # it), then the docs write runs on a driver thread so it overlaps the
+        # encode job on the shared executor pool
         from concurrent.futures import ThreadPoolExecutor
 
         pool = ThreadPoolExecutor(max_workers=1)
-        docs_future = None
-        dlen = None
         need_docs = not store.exists("docs")
-        need_ss = not store.exists("shard_sizes")
-        if need_docs or need_ss:
+        if need_docs or not store.exists("shard_sizes"):
             # doclength ≡ token count ≡ size(tokens): a NARROW projection of
             # the ranked rows — no aggregation over (and no join back to) the
             # full occurrence stream. Token-less docs (empty/punct-only text)
@@ -286,38 +225,18 @@ def build_index(
                 F.coalesce(F.size(_tokens_col(cfg)), F.lit(0)).alias("doclength"),
             ).persist()
 
-        if need_ss:
+        if not store.exists("shard_sizes"):
             t0 = time.time()
-            ssz = shard_size
-
-            def pack_shard(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-                (shard,) = key
-                order = np.argsort(pdf["docid"].to_numpy(), kind="stable")
-                dids = pdf["docid"].to_numpy()[order]
-                dls = pdf["doclength"].to_numpy()[order].astype("<u4")
-                start = int(shard) * ssz
-                if not (dids == np.arange(start, start + len(dids))).all():
-                    raise ValueError(f"shard {shard}: docids not dense from {start}")
-                return pd.DataFrame(
-                    [{"shard": int(shard), "start_docid": start,
-                      "count": len(dids), "dl_bin": dls.tobytes()}]
-                )
-
-            packed = (
-                dlen.withColumn("shard", F.floor(F.col("docid") / F.lit(shard_size)).cast("int"))
-                .select("shard", "docid", "doclength")
-                .groupBy("shard")
-                .applyInPandas(pack_shard, schema=SHARD_SIZES_SCHEMA)
-            )
-            store.write("shard_sizes", packed)
+            _write_shard_sizes(store, dlen, shard_size)
             pending_lineage.append(("shard_sizes", -1, None, None, None, int((time.time() - t0) * 1000), "done"))
 
+        # the dense doclength array, reassembled driver-side from the
+        # committed shard_sizes bins (no Spark job): Σ doclength ≡
+        # total_terms, and the encode's exact per-block bounds read it
+        dl = _dl_array(store, num_docs) if num_docs else None
         if not have_stats:
-            # Σ doclength ≡ total_terms, and every doclength now sits in the
-            # committed shard_sizes bins — sum driver-side, ZERO extra jobs
-            # (the former standalone dlen.agg() was a whole extra pass).
             t0 = time.time()
-            total_terms = int(_dl_array(store, num_docs).sum()) if num_docs else 0
+            total_terms = int(dl.sum()) if num_docs else 0
             avgdl = total_terms / num_docs if num_docs else 0.0
             pending_lineage.append(
                 ("tokenize_shuffle", -1, total_terms, None, None,
@@ -333,132 +252,28 @@ def build_index(
             docs_future = pool.submit(_write_docs)
 
         # ---- stage: postings (pgroup-batched, resumable) ------------------------
-        # the occurrence stream flows straight into the encode: one Arrow
-        # pass per (pgroup, shard)-hashed partition block-encodes every
-        # (term, shard) group (cached only for multi-batch resume builds).
         if todo:
             _clean_partial_pgroups(store, todo)
-            block_size = cfg.block_size
-            block_span = cfg.block_span
-            span_adaptive = cfg.span_adaptive
-            avgdl_c = avgdl
-            n_pgroups = cfg.n_pgroups
-            shard_size_c = shard_size
-
-            # exact per-block BM25 bounds need dl[docid]; broadcast the dense
-            # doclength array when it fits (4 B/doc), else fall back to the
-            # dl-free bound (true but looser) — the 10^12-doc path. The array
-            # comes from the shard_sizes table (already-packed u32 runs) via
-            # a driver-side pyarrow read — no extra Spark job
-            if num_docs and num_docs <= cfg.dl_broadcast_max_docs:
-                dl_bc = spark.sparkContext.broadcast(_dl_array(store, num_docs))
-            else:
-                dl_bc = None
-
-            def encode_partition(iterator):
-                # Arrow-native: groups never straddle partitions (hash-partitioned
-                # on pgroup, pgroup = f(term)), but they can straddle record
-                # batches — concatenate the partition, then run the fused
-                # sort+aggregate+encode kernel:
-                #   1. dictionary-encode the terms (one hash pass);
-                #   2. lex-rank the per-partition VOCABULARY (small) so the
-                #      integer sort still yields lexicographic term order
-                #      (row-group pruning on the written files stays sharp);
-                #   3. np.lexsort (rank, docid) — integer keys, cache-friendly,
-                #      replacing the JVM string sort;
-                #   4. run-length combine equal (term, docid) runs = the tf
-                #      aggregation, fused so the postings stream shuffled once;
-                #   5. vectorized block encode (codec.encode_arrow_batch).
-                import pyarrow as pa
-                import pyarrow.compute as pc
-
-                batches = [b for b in iterator if b.num_rows]
-                if not batches:
-                    return
-                tbl = pa.Table.from_batches(batches).combine_chunks()
-                dict_arr = pc.dictionary_encode(tbl.column("term").combine_chunks())
-                if isinstance(dict_arr, pa.ChunkedArray):
-                    dict_arr = dict_arr.combine_chunks()
-                codes = dict_arr.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-                vocab = dict_arr.dictionary
-                lex = pc.array_sort_indices(vocab).to_numpy(zero_copy_only=False).astype(np.int64)
-                rank = np.empty(len(lex), np.int64)
-                rank[lex] = np.arange(len(lex), dtype=np.int64)
-                keys = rank[codes]
-                docids = tbl.column("docid").to_numpy()
-                has_tf = "tf" in tbl.column_names
-                tfs_in = (
-                    tbl.column("tf").to_numpy().astype(np.int64) if has_tf else None
-                )
-                order = np.lexsort((docids, keys))
-                keys = keys[order]
-                docids = docids[order]
-                codes = codes[order]
-                n = len(docids)
-                new = np.empty(n, bool)
-                new[0] = True
-                new[1:] = (keys[1:] != keys[:-1]) | (docids[1:] != docids[:-1])
-                starts = np.flatnonzero(new)
-                # run-length tf combine: run length when rows are raw
-                # occurrences, Σ per-row tf when pre-combined (row_tf_combine)
-                if has_tf:
-                    tfs = np.add.reduceat(tfs_in[order], starts)
-                else:
-                    tfs = np.diff(np.append(starts, n))
-                docids_u = docids[starts]
-                doclens = dl_bc.value[docids_u] if dl_bc is not None else None
-                yield encode_arrow_batch(
-                    None,
-                    docids_u,
-                    tfs,
-                    doclens,
-                    avgdl_c,
-                    shard_size_c,
-                    block_size,
-                    term_codes=codes[starts],
-                    term_dict=vocab,
-                    block_span=block_span,
-                    span_adaptive=span_adaptive,
-                )
-
-            batches = np.array_split(np.array(todo), n_batches)
-            for bi, batch in enumerate(batches):
+            for bi, batch in enumerate(np.array_split(np.array(todo), n_batches)):
                 if cfg.fail_after_batches is not None and bi >= cfg.fail_after_batches:
                     raise RuntimeError("injected failure (BuildConfig.fail_after_batches)")
                 batch = [int(g) for g in batch]
                 t0 = time.time()
-                # the cache is hash-partitioned on (pgroup, shard), so the
-                # encode is a NARROW pass; a pgroup's rows span up to
-                # min(n_shards, n_encode_parts) tasks, so its dir holds that
-                # many files after partitionBy — bounded by the shard count,
-                # and serving prunes to ≤|q| pgroup dirs via term_stats.pgroup
-                # ONE materialization: encode → write directly (no persist +
-                # metrics-agg job over the encoded blocks — that cached and
-                # re-read the whole encoded output); manifest metrics come
-                # from the files just written, driver-side (footer num_rows,
-                # file sizes, and the skinny df column — vocab-sized reads;
-                # on Iceberg these come free from snapshot stats)
-                # skip the isin filter when the batch covers every pgroup —
-                # a per-row 64-way membership test on the full occurrence
-                # stream is pure waste in the (default) single-batch build
-                src = tf if len(batch) == cfg.n_pgroups else tf.where(pgroup_expr.isin(batch))
-                (
-                    src.mapInArrow(encode_partition, schema=POSTINGS_SCHEMA)
-                    .withColumn("pgroup", F.pmod(F.hash("term"), F.lit(n_pgroups)))
-                    # write clustering (≙ Iceberg write.distribution-mode=hash):
-                    # the encode partitioning is (pgroup, shard) for skew, so a
-                    # bare partitionBy write opens one file per (task, pgroup)
-                    # — measured 1601 ~21 KB files for a 34 MB table, +3 s of
-                    # write wall and 1601 footer opens for every later scan.
-                    # One hash exchange of the ALREADY-ENCODED blocks (the
-                    # smallest representation the data ever has) lands each
-                    # pgroup in exactly one task → one file per pgroup
-                    # (task count capped at the scheduler's parallelism; a
-                    # task holding two pgroups still writes one file each).
-                    .repartition(
-                        min(len(batch), spark.sparkContext.defaultParallelism),
-                        "pgroup",
-                    )
+                # ONE materialization: encode → write directly; manifest
+                # metrics come from the files just written, driver-side
+                # (footer num_rows, file sizes, and the skinny df column —
+                # vocab-sized reads; on Iceberg these come free from snapshot
+                # stats). The isin filter is skipped when the batch covers
+                # every pgroup — a per-row membership test on the full
+                # occurrence stream is pure waste in the single-batch build
+                src = (
+                    occ if len(batch) == cfg.n_pgroups
+                    else occ.where(_pgroup_expr(cfg.n_pgroups).isin(batch))
+                )
+                _encode_postings(
+                    src, n_pgroups=cfg.n_pgroups, shard_size=shard_size, dl=dl,
+                    avgdl=avgdl, block_size=cfg.block_size,
+                    block_span=cfg.block_span, span_adaptive=cfg.span_adaptive,
                 ).write.mode("append").partitionBy("pgroup").parquet(store.path("postings"))
                 wall = int((time.time() - t0) * 1000)
                 # manifest AFTER the data commit → a crash between the two re-runs
@@ -486,38 +301,13 @@ def build_index(
             pool.shutdown()
         if dlen is not None:
             dlen.unpersist()
-        if tf_persisted:
-            tf.unpersist()
+        if occ_persisted:
+            occ.unpersist()
         release_rank_cache(ranked)
     # ---- stage: term_stats (global df/cf; blocks pruned at scan) ------------
     if not store.exists("term_stats"):
         t0 = time.time()
-        # pgroup rides along (functionally determined by term): serving uses it
-        # to open only the queried terms' postings/pgroup=* dirs instead of
-        # globbing every file (the r2 LocalSearcher latency regression)
-        # sortWithinPartitions: tight per-row-group term min/max stats, so
-        # driver-side idf lookups (IndexReader._idf_map, LocalSearcher) can
-        # row-group-prune their term-IN reads — on a billion-term vocabulary
-        # an unsorted column defeats the pushdown entirely
-        if _table_num_rows(store, "postings") <= TERM_STATS_DRIVER_MAX_ROWS:
-            # small-vocabulary fast path: one multithreaded pyarrow scan of
-            # the three skinny columns + a vectorized group_by, written
-            # globally term-sorted — saves the scan+exchange+write Spark job
-            # whose fixed cost dominates at this table size. The row gate
-            # keeps the billion-term path on the distributed aggregation.
-            _write_term_stats_local(store)
-        else:
-            ts = (
-                store.read_or_empty(spark, "postings", POSTINGS_SCHEMA + ", pgroup int")
-                .groupBy("term")
-                .agg(
-                    F.sum("df").alias("df"),
-                    F.sum("cf").alias("cf"),
-                    F.min("pgroup").alias("pgroup"),
-                )
-                .sortWithinPartitions("term")
-            )
-            store.write("term_stats", ts)
+        _write_term_stats(spark, store)
         pending_lineage.append(("term_stats", -1, None, None, None, int((time.time() - t0) * 1000), "done"))
 
     # ---- stage: meta (≙ CIFF Header) ----------------------------------------
@@ -539,6 +329,167 @@ def build_index(
     return store
 
 
+def _pgroup_expr(n_pgroups: int):
+    """A term's postings group: the output partition (one dir per pgroup)."""
+    return F.pmod(F.hash("term"), F.lit(n_pgroups))
+
+
+def _encode_postings(
+    rows: DataFrame,
+    *,
+    n_pgroups: int,
+    shard_size: int,
+    dl: np.ndarray | None,
+    avgdl: float,
+    block_size: int,
+    block_span: int | None,
+    span_adaptive: bool,
+) -> DataFrame:
+    """THE postings encode stage: ``(docid, term[, tf])`` rows → encoded
+    ``(term, shard, df, cf, blocks, pgroup)`` rows, clustered one pgroup per
+    task and sorted by (pgroup, term, shard). Every writer — text build,
+    impact build, segment appends and compaction — goes through it.
+
+    Rows without ``tf`` are raw occurrences (tf = run length); with ``tf``
+    the per-row values are summed. ``dl`` (dense doclengths indexed by
+    docid) gives exact per-block BM25 bounds under ``avgdl``; ``None`` the
+    dl-free bound (impact scores, segments).
+
+    1. repartition on (pgroup, docid shard) EXPRESSIONS: every (term,
+       shard) encode group stays whole inside one partition, but a Zipf-hot
+       term's stream spreads over its docid shards instead of landing on
+       ONE reducer (the salted-hot-term split, at the partition level);
+    2. one ``mapInArrow`` kernel per partition: dictionary-encode the terms,
+       lex-rank the (small) partition vocabulary, integer-lexsort (rank,
+       docid), run-length-combine equal (term, docid) runs (= the tf
+       aggregation), block-encode (``codec.encode_arrow_batch``);
+    3. write clustering (≙ Iceberg write.distribution-mode=hash): one hash
+       exchange of the ALREADY-ENCODED rows (the smallest representation the
+       data ever has) lands each pgroup in one task → one file per pgroup
+       (a bare partitionBy write opened one file per (task, pgroup):
+       measured 1601 ~21 KB files for a 34 MB table);
+    4. sortWithinPartitions(pgroup, term, shard): each file holds its rows
+       in term order, so parquet row-group term stats can prune."""
+    sc = rows.sparkSession.sparkContext
+    dl_bc = sc.broadcast(dl) if dl is not None else None
+    pgroup = _pgroup_expr(n_pgroups)
+
+    def encode_partition(iterator):
+        # groups never straddle partitions but can straddle record batches:
+        # concatenate the partition, then run the fused kernel
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        batches = [b for b in iterator if b.num_rows]
+        if not batches:
+            return
+        tbl = pa.Table.from_batches(batches).combine_chunks()
+        dict_arr = pc.dictionary_encode(tbl.column("term").combine_chunks())
+        if isinstance(dict_arr, pa.ChunkedArray):
+            dict_arr = dict_arr.combine_chunks()
+        codes = dict_arr.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+        vocab = dict_arr.dictionary
+        # lex rank of the vocabulary: the integer sort still yields
+        # lexicographic term order
+        lex = pc.array_sort_indices(vocab).to_numpy(zero_copy_only=False).astype(np.int64)
+        rank = np.empty(len(lex), np.int64)
+        rank[lex] = np.arange(len(lex), dtype=np.int64)
+        keys = rank[codes]
+        docids = tbl.column("docid").to_numpy()
+        order = np.lexsort((docids, keys))
+        keys = keys[order]
+        docids = docids[order]
+        n = len(docids)
+        new = np.empty(n, bool)
+        new[0] = True
+        new[1:] = (keys[1:] != keys[:-1]) | (docids[1:] != docids[:-1])
+        starts = np.flatnonzero(new)
+        if "tf" in tbl.column_names:
+            tfs = np.add.reduceat(tbl.column("tf").to_numpy().astype(np.int64)[order], starts)
+        else:
+            tfs = np.diff(np.append(starts, n))
+        docids_u = docids[starts]
+        yield encode_arrow_batch(
+            codes[order][starts],
+            vocab,
+            docids_u,
+            tfs,
+            dl_bc.value[docids_u] if dl_bc is not None else None,
+            avgdl,
+            shard_size,
+            block_size,
+            block_span=block_span,
+            span_adaptive=span_adaptive,
+        )
+
+    return (
+        rows.repartition(
+            max(n_pgroups, 2 * sc.defaultParallelism),
+            pgroup, F.floor(F.col("docid") / F.lit(shard_size)),
+        )
+        .mapInArrow(encode_partition, schema=POSTINGS_SCHEMA)
+        .withColumn("pgroup", pgroup)
+        .repartition(min(n_pgroups, sc.defaultParallelism), "pgroup")
+        .sortWithinPartitions("pgroup", "term", "shard")
+    )
+
+
+def _write_shard_sizes(store: IndexStore, docs: DataFrame, shard_size: int) -> None:
+    """shard_sizes from a ``(docid, doclength)`` frame: one u32 doclength run
+    per docid shard, packed on the executors, collected (≤ one row per
+    shard) and written driver-side. Raises ``ValueError`` unless the docids
+    are exactly 0..N-1 — a gap would shift every later doc's length."""
+
+    def pack_shard(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        (shard,) = key
+        order = np.argsort(pdf["docid"].to_numpy(), kind="stable")
+        dids = pdf["docid"].to_numpy()[order]
+        start = int(shard) * shard_size
+        return pd.DataFrame([{
+            "shard": int(shard),
+            "dense": bool((dids == np.arange(start, start + len(dids))).all()),
+            "dl_bin": pdf["doclength"].to_numpy()[order].astype("<u4").tobytes(),
+        }])
+
+    runs = sorted(
+        docs.select(
+            F.floor(F.col("docid") / F.lit(shard_size)).cast("int").alias("shard"),
+            "docid", "doclength",
+        )
+        .groupBy("shard")
+        .applyInPandas(pack_shard, schema="shard int, dense boolean, dl_bin binary")
+        .collect(),
+        key=lambda r: r["shard"],
+    )
+    for i, r in enumerate(runs):
+        # dense within every shard, no shard missing, all but the last full
+        if not r["dense"] or r["shard"] != i or (
+            i < len(runs) - 1 and len(r["dl_bin"]) != 4 * shard_size
+        ):
+            raise ValueError(
+                f"shard {r['shard']}: docids not dense from {r['shard'] * shard_size}"
+            )
+    dl = np.frombuffer(b"".join(r["dl_bin"] for r in runs), "<u4")
+    _write_table_local(store, "shard_sizes", _shard_sizes_table(dl, shard_size))
+
+
+def _shard_sizes_table(dl: np.ndarray, shard_size: int):
+    """The shard_sizes rows of a dense doclength array: shard s covers
+    docids [s·shard_size, min((s+1)·shard_size, N))."""
+    import pyarrow as pa
+
+    starts = np.arange(0, len(dl), shard_size, dtype=np.int64)
+    return pa.table({
+        "shard": pa.array(starts // shard_size, pa.int32()),
+        "start_docid": pa.array(starts, pa.int64()),
+        "count": pa.array(np.minimum(shard_size, len(dl) - starts), pa.int32()),
+        "dl_bin": pa.array(
+            [dl[s : s + shard_size].astype("<u4").tobytes() for s in starts.tolist()],
+            pa.binary(),
+        ),
+    })
+
+
 #: postings (term, shard) row count at or below which term_stats aggregates
 #: driver-side (one pyarrow scan of 3 skinny columns; ~40 B/row of transient
 #: memory) instead of scheduling a Spark scan+shuffle+write — the same
@@ -546,55 +497,68 @@ def build_index(
 TERM_STATS_DRIVER_MAX_ROWS = 4_000_000
 
 
-def _write_term_stats_local(store: IndexStore) -> None:
-    """term_stats via driver-side pyarrow: scan (term, df, cf) + the hive
-    ``pgroup`` key from the postings dirs, group_by term (sum, sum, min),
-    write globally term-sorted parquet (8k-row row groups so term-IN reads
-    row-group-prune at least as well as the Spark path's per-partition
-    sort). Output schema/types identical to the distributed aggregation."""
+def _write_term_stats(spark, store: IndexStore) -> None:
+    """term_stats = per-term (Σdf, Σcf, pgroup) over the postings table.
+
+    pgroup rides along (functionally determined by term): serving opens
+    only the queried terms' postings/pgroup=* dirs. Rows are term-sorted so
+    driver-side idf lookups (IndexReader._idf_map, LocalSearcher) can
+    row-group-prune their term-IN reads. Up to TERM_STATS_DRIVER_MAX_ROWS
+    postings rows this is one multithreaded pyarrow scan + group_by, written
+    globally term-sorted in 8k-row groups (saves the Spark job whose fixed
+    cost dominates at this size); above it, the distributed aggregation."""
+    if _table_num_rows(store, "postings") > TERM_STATS_DRIVER_MAX_ROWS:
+        store.write(
+            "term_stats",
+            store.read_or_empty(spark, "postings", POSTINGS_SCHEMA + ", pgroup int")
+            .groupBy("term")
+            .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"),
+                 F.min("pgroup").alias("pgroup"))
+            .sortWithinPartitions("term"),
+        )
+        return
     import glob
     import os
-    import uuid
 
     import pyarrow as pa
     import pyarrow.dataset as pads
-    import pyarrow.parquet as papq
 
-    schema = pa.schema(
-        [("term", pa.string()), ("df", pa.int64()), ("cf", pa.int64()),
-         ("pgroup", pa.int32())]
-    )
     parts = []
     for d in sorted(glob.glob(store.path("postings") + "/pgroup=*")):
-        g = int(os.path.basename(d).split("=", 1)[1])
         fs = glob.glob(f"{d}/*.parquet")
-        if not fs:
-            continue
-        t = pads.dataset(fs, format="parquet").to_table(columns=["term", "df", "cf"])
-        parts.append(t.append_column("pgroup", pa.array([g] * t.num_rows, pa.int32())))
+        if fs:
+            t = pads.dataset(fs, format="parquet").to_table(columns=["term", "df", "cf"])
+            g = int(os.path.basename(d).split("=", 1)[1])
+            parts.append(t.append_column("pgroup", pa.array([g] * t.num_rows, pa.int32())))
+    schema = pa.schema([("term", pa.string()), ("df", pa.int64()),
+                        ("cf", pa.int64()), ("pgroup", pa.int32())])
+    out = schema.empty_table()
     if parts:
-        allt = pa.concat_tables(parts)
-        agg = allt.group_by("term").aggregate(
+        agg = pa.concat_tables(parts).group_by("term").aggregate(
             [("df", "sum"), ("cf", "sum"), ("pgroup", "min")]
         )
         out = pa.table(
-            {
-                "term": agg["term"],
-                "df": agg["df_sum"].cast(pa.int64()),
-                "cf": agg["cf_sum"].cast(pa.int64()),
-                "pgroup": agg["pgroup_min"].cast(pa.int32()),
-            }
+            [agg["term"], agg["df_sum"], agg["cf_sum"], agg["pgroup_min"]], schema=schema
         ).sort_by("term")
-    else:
-        out = pa.table({f.name: pa.array([], f.type) for f in schema})
-    final = store.path("term_stats")
+    _write_table_local(store, "term_stats", out, row_group_size=8192)
+
+
+def _write_table_local(store: IndexStore, table: str, tbl, **write_kw) -> None:
+    """Atomic driver-side table write (pyarrow, temp dir + rename) for the
+    metadata-sized tables (shard_sizes, term_stats under the row gate), in
+    the session's parquet codec (zstd)."""
+    import os
+    import shutil
+    import uuid
+
+    import pyarrow.parquet as papq
+
+    final = store.path(table)
     tmp = f"{final}.__tmp_{uuid.uuid4().hex[:8]}"
     os.makedirs(tmp)
-    papq.write_table(out, f"{tmp}/part-00000.parquet", row_group_size=8192)
+    papq.write_table(tbl, f"{tmp}/part-00000.parquet", compression="zstd", **write_kw)
     open(f"{tmp}/_SUCCESS", "w").close()
     if os.path.isdir(final):
-        import shutil
-
         shutil.rmtree(final)
     os.rename(tmp, final)
 

@@ -278,143 +278,32 @@ def encode_postings(
     return blocks
 
 
-def encode_many(
-    terms,
-    shards: np.ndarray,
-    docids: np.ndarray,
-    tfs: np.ndarray,
-    doclens: np.ndarray | None,
-    avgdl: float,
-    block_size: int = BLOCK_SIZE,
-    block_span: int | None = BLOCK_SPAN,
-    span_adaptive: bool = True,
-):
-    """Encode MANY posting lists at once — the whole-partition fast path.
-
-    Input rows must be pre-sorted by (term, shard, docid); encodes every
-    (term, shard) group in one vectorized pass: gap computation, LEB128, and
-    per-block maxima (``np.maximum.reduceat``) run over the full partition
-    with no per-group Python/pandas. Per-group work is reduced to slicing the
-    shared byte buffer — ~100× faster than a per-group Arrow UDF when groups
-    are small (Zipf tail).
-
-    Yields tuples (term, shard, df, cf, blocks) where blocks is the same
-    list-of-dicts ``encode_postings`` produces (bit-identical output).
-    """
-    n = len(docids)
-    if n == 0:
-        return []
-    docids = np.ascontiguousarray(docids, np.int64)
-    tfs = np.ascontiguousarray(tfs, np.int64)
-    terms = np.asarray(terms, dtype=object)
-    shards = np.ascontiguousarray(shards, np.int64)
-
-    new_grp = np.empty(n, bool)
-    new_grp[0] = True
-    new_grp[1:] = (terms[1:] != terms[:-1]) | (shards[1:] != shards[:-1])
-    grp_start = np.flatnonzero(new_grp)
-    grp_id = np.cumsum(new_grp) - 1
-    g = len(grp_start)
-
-    gaps = np.empty(n, np.int64)
-    gaps[0] = 0
-    gaps[1:] = docids[1:] - docids[:-1]
-    gaps[grp_start] = docids[grp_start] + 1
-    if n > 1 and (gaps[~new_grp] <= 0).any():
-        raise ValueError("docids must be strictly ascending within each group")
-    if (tfs <= 0).any():
-        raise ValueError("tfs must be positive")
-
-    blk_start = _window_block_starts(
-        docids, new_grp, block_size, block_span, span_adaptive
-    )
-    blk_end = np.empty(len(blk_start), np.int64)
-    blk_end[:-1] = blk_start[1:]
-    blk_end[-1] = n
-    blk_grp = grp_id[blk_start]
-
-    counts = blk_end - blk_start
-    min_docid = docids[blk_start]
-    max_docid = docids[blk_end - 1]
-    max_tf = np.maximum.reduceat(tfs, blk_start)
-    if doclens is not None:
-        tfnorm = tfnorm_np(tfs, doclens, float(avgdl))
-        max_tfn = np.maximum.reduceat(tfnorm, blk_start)
-    else:
-        # dl-free true upper bound (sup over dl→0) — used when the doclength
-        # array is too large to broadcast; looser pruning, same exactness
-        max_tfn = tfnorm_upper_bound(max_tf.astype(np.float64))  # broadcasts
-    max_tfn = _ceil_bound(max_tfn)
-
-    dbuf, dlens = varint_encode(gaps.astype(np.uint64))
-    tbuf, tlens = varint_encode(tfs.astype(np.uint64))
-    doff = np.concatenate(([0], np.cumsum(dlens)))
-    toff = np.concatenate(([0], np.cumsum(tlens)))
-    dbytes = dbuf.tobytes()
-    tbytes = tbuf.tobytes()
-
-    grp_end = np.append(grp_start[1:], n)
-    df_g = grp_end - grp_start
-    cf_g = np.add.reduceat(tfs, grp_start)
-    b0 = np.searchsorted(blk_grp, np.arange(g))
-    b1 = np.append(b0[1:], len(blk_start))
-
-    out = []
-    for gi in range(g):
-        blocks = [
-            {
-                # implicit single-posting block (see encode_postings)
-                "count": 1,
-                "min_docid": None,
-                "max_docid": int(max_docid[b]),
-                "max_tf": int(max_tf[b]),
-                "max_tfnorm": None,
-                "docs_bin": b"",
-                "tfs_bin": b"",
-            }
-            if counts[b] == 1
-            else {
-                "count": int(counts[b]),
-                "min_docid": int(min_docid[b]),
-                "max_docid": int(max_docid[b]),
-                "max_tf": int(max_tf[b]),
-                "max_tfnorm": float(max_tfn[b]),
-                "docs_bin": dbytes[doff[blk_start[b]] : doff[blk_end[b]]],
-                "tfs_bin": tbytes[toff[blk_start[b]] : toff[blk_end[b]]],
-            }
-            for b in range(b0[gi], b1[gi])
-        ]
-        out.append(
-            (terms[grp_start[gi]], int(shards[grp_start[gi]]),
-             int(df_g[gi]), int(cf_g[gi]), blocks)
-        )
-    return out
-
-
 def encode_arrow_batch(
-    term_arr,
+    term_codes: np.ndarray,
+    term_dict,
     docids: np.ndarray,
     tfs: np.ndarray,
     doclens: np.ndarray | None,
     avgdl: float,
     shard_size: int,
     block_size: int = BLOCK_SIZE,
-    term_codes: np.ndarray | None = None,
-    term_dict=None,
     block_span: int | None = BLOCK_SPAN,
     span_adaptive: bool = True,
 ):
-    """Arrow-native multi-group encoder: same output as ``encode_many`` but
-    with ZERO per-group Python objects. Terms stay an Arrow string array
-    (group boundaries come from dictionary codes), and the blocks column is
-    assembled as a ListArray<Struct> whose binary children are built directly
-    on the shared varint buffer (the concatenation of all blocks' bytes IS
-    the buffer — offsets index into it, no per-block slicing/copies).
+    """Encode MANY posting lists at once — the one multi-list encoder; its
+    output equals ``encode_postings`` run per (term, shard) group.
 
-    Callers that already dictionary-encoded the terms pass ``term_codes``
-    (int64 per row) + ``term_dict`` (the pa.StringArray dictionary) instead
-    of ``term_arr`` — the per-group term strings then materialize only at
-    group granularity (dict.take), never per posting row.
+    Rows must be grouped by term with docids strictly ascending within
+    each: ``term_codes`` (int64 per row) index the ``term_dict``
+    pa.StringArray, and each run of equal (code, ``docid // shard_size``)
+    is one list. Gaps, LEB128 and per-block
+    maxima (``np.maximum.reduceat``) run over the whole batch, with ZERO
+    per-group Python objects: term strings materialize once per group
+    (``term_dict.take``), and the blocks column is a ListArray<Struct> whose
+    binary children are built directly on the shared varint buffer (the
+    concatenation of all blocks' bytes IS the buffer — offsets index into
+    it, no per-block slicing/copies). ``doclens``/``avgdl`` give exact
+    block bounds; ``doclens=None`` the dl-free bound (``avgdl`` unused).
 
     Returns a pyarrow.RecordBatch(term, shard, df, cf, blocks).
     """
@@ -422,10 +311,7 @@ def encode_arrow_batch(
 
     n = len(docids)
     assert n > 0
-    if term_codes is not None:
-        codes = np.ascontiguousarray(term_codes, np.int64)
-    else:
-        codes = term_arr.dictionary_encode().indices.to_numpy(zero_copy_only=False).astype(np.int64)
+    codes = np.ascontiguousarray(term_codes, np.int64)
     docids = np.ascontiguousarray(docids, np.int64)
     tfs = np.ascontiguousarray(tfs, np.int64)
     shards = docids // shard_size
@@ -533,13 +419,9 @@ def encode_arrow_batch(
     grp_end = np.append(grp_start[1:], n)
     df_g = (grp_end - grp_start).astype(np.int64)
     cf_g = np.add.reduceat(tfs, grp_start).astype(np.int64)
-    if term_codes is not None:
-        terms_out = term_dict.take(pa.array(codes[grp_start], pa.int64()))
-    else:
-        terms_out = term_arr.take(pa.array(grp_start, pa.int64()))
     return pa.RecordBatch.from_arrays(
         [
-            terms_out,
+            term_dict.take(pa.array(codes[grp_start], pa.int64())),
             pa.array(shards[grp_start].astype(np.int32), pa.int32()),
             pa.array(df_g, pa.int64()),
             pa.array(cf_g, pa.int64()),

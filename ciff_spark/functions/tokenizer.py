@@ -72,34 +72,6 @@ def tokenize_pandas_udf(texts: pd.Series) -> pd.Series:
     return texts.str.lower().str.findall(TOKEN_PATTERN)
 
 
-def tokens_tf_expr(tokens: Column) -> Column:
-    """Per-row (term, tf) pairs: ``array<struct<term string, tf int>>``.
-
-    The map-side combine for the build's single shuffle: a turn's duplicate
-    tokens collapse BEFORE the exchange (~33% fewer shuffled rows on the
-    transcript corpus — decisive on a bandwidth-bound host and exactly the
-    partial-aggregation shape a 1000-executor shuffle wants). All JVM
-    higher-order functions, no UDF; the count uses ``aggregate`` (no
-    per-term array allocation). O(u·n) per row — n ≈ tokens per turn.
-
-    ``tokens`` must be a REFERENCED column (not an inline tokenize
-    expression): it is used once per distinct term, and Catalyst's
-    CollapseProject keeps multi-referenced non-cheap aliases in their own
-    projection, which is what stops the tokenizer regex from being
-    re-evaluated per reference (plan-guard-tested)."""
-    return F.transform(
-        F.array_distinct(tokens),
-        lambda t: F.struct(
-            t.alias("term"),
-            F.aggregate(
-                tokens,
-                F.lit(0),
-                lambda acc, x: acc + F.when(x == t, 1).otherwise(0),
-            ).cast("int").alias("tf"),
-        ),
-    )
-
-
 def tokenize_sql(text_expr: str) -> str:
     """DuckDB/ANSI SQL fragment producing the pinned token array."""
     return f"regexp_extract_all(lower({text_expr}), '{TOKEN_PATTERN}')"

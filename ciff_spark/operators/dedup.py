@@ -475,6 +475,16 @@ def _driver_components(docs: DataFrame, edge_pdf) -> DataFrame:
     )
 
 
+def _release_checkpoint(df: DataFrame | None) -> None:
+    """Unpersist the blocks behind a ``localCheckpoint`` frame. An iterative
+    loop calls it on each round's superseded checkpoint: nothing reads those
+    blocks once the next round is materialized, yet nothing frees them
+    either (a GC does not reach them), so every round would stay pinned for
+    the session."""
+    if df is not None:
+        df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 def connected_components(
     docs: DataFrame, pairs: DataFrame, max_iters: int = _CC_MAX_ITERS,
     driver_max_edges: int = _CC_DRIVER_MAX_EDGES,
@@ -494,6 +504,7 @@ def connected_components(
         .cache()
     )
     labels = docs.select("docid", F.col("docid").alias("cluster"))
+    prev = None  # the previous round's checkpoint
     try:
         for _ in range(max_iters):
             nbr = (
@@ -524,6 +535,8 @@ def connected_components(
                 .localCheckpoint(eager=True)
             )
             changed = int(stepped.agg(F.max("_chg")).first()[0] or 0)
+            _release_checkpoint(prev)
+            prev = stepped
             labels = stepped.drop("_chg")
             if changed == 0:
                 return labels
@@ -531,6 +544,7 @@ def connected_components(
         # component (rounds = eccentricity for min-label). Escalate to the
         # diameter-independent star algorithm rather than failing — same
         # fixpoint, O(log n) rounds.
+        _release_checkpoint(prev)
         return connected_components_star(docs, pairs)
     finally:
         edges.unpersist()
@@ -604,6 +618,7 @@ def connected_components_star(
             F.expr("bit_xor(xxhash64(u, v))").alias("h"),
         ).first()
         sig = (int(row["n"]), int(row["h"] or 0))
+        _release_checkpoint(edges)
         edges = small
         if sig == sig_prev:
             break

@@ -19,17 +19,26 @@ Reference semantics honored:
   selects ``"unique_terms"`` (reference parity) or ``"sum_tf"`` (the BM25
   pin used by the text pipeline); default is reference parity since this
   path exists for exchange fidelity.
+
+Only the front end is specific to this source: the (term, docid, tf) rows
+encode through the text build's postings stage (``build._encode_postings``,
+dl-free block bounds — impact scores have no length normalization), and
+``shard_sizes``/``term_stats`` through the build's shared writers.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ciff_spark.functions.codec import BLOCK_SPAN, encode_many
+from ciff_spark.build import (
+    _encode_postings,
+    _table_num_rows,
+    _write_shard_sizes,
+    _write_term_stats,
+)
+from ciff_spark.functions.codec import BLOCK_SPAN
 from ciff_spark.store import IndexStore
 
 JSONL_SCHEMA = T.StructType(
@@ -239,62 +248,23 @@ def _write_tables(
 ):
     from concurrent.futures import ThreadPoolExecutor
 
-    # the tiny stats agg materializes the docs cache; the docs table write
-    # then runs on a driver thread so it back-fills executors while the
-    # encode job below runs (the same overlap the text build uses)
+    # the tiny stats agg materializes the docs cache; the docs and
+    # shard_sizes writes then run on driver threads so they back-fill
+    # executors while the encode job below runs (the same overlap the text
+    # build uses)
     stats = docs.agg(F.count("*").alias("n"), F.sum("doclength").alias("t")).first()
     num_docs, total_terms = int(stats["n"]), int(stats["t"] or 0)
     avgdl = total_terms / num_docs if num_docs else 0.0
     shard_size = max(1, -(-num_docs // n_shards))
     pool = ThreadPoolExecutor(max_workers=2)
     docs_future = pool.submit(store.write, "docs", docs)
-
-    def encode_partition(iterator):
-        pdfs = [p for p in iterator if len(p)]
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-        rows_ = encode_many(
-            pdf["term"].to_numpy(),
-            pdf["docid"].to_numpy() // shard_size,
-            pdf["docid"].to_numpy(),
-            pdf["tf"].to_numpy(),
-            None,  # impact-style scores: dl-free bounds
-            avgdl or 1.0,
-            block_size,
-        )
-        yield pd.DataFrame(rows_, columns=["term", "shard", "df", "cf", "blocks"])
-
-    from ciff_spark.build import POSTINGS_SCHEMA
-
-    def pack_shard(key, pdf):
-        (shard,) = key
-        order = np.argsort(pdf["docid"].to_numpy(), kind="stable")
-        dls = pdf["doclength"].to_numpy()[order].astype("<u4")
-        start = int(shard) * shard_size
-        return pd.DataFrame(
-            [{"shard": int(shard), "start_docid": start, "count": len(dls),
-              "dl_bin": dls.tobytes()}]
-        )
-
-    # shard_sizes reads the docs cache only — run it on the pool too, so it
-    # back-fills executors alongside the encode job below
-    ss_future = pool.submit(
-        store.write,
-        "shard_sizes",
-        docs.withColumn("shard", F.floor(F.col("docid") / F.lit(shard_size)).cast("int"))
-        .groupBy("shard")
-        .applyInPandas(pack_shard, schema="shard int, start_docid bigint, count int, dl_bin binary"),
-    )
+    ss_future = pool.submit(_write_shard_sizes, store, docs, shard_size)
     try:
-        enc = (
-            tf.withColumn("pgroup", F.pmod(F.hash("term"), F.lit(n_pgroups)))
-            .repartition(n_pgroups, "pgroup")
-            .sortWithinPartitions("pgroup", "term", "docid")
-            .mapInPandas(encode_partition, schema=POSTINGS_SCHEMA)
-            .withColumn("pgroup", F.pmod(F.hash("term"), F.lit(n_pgroups)))
-        )
-        enc.write.mode("overwrite").partitionBy("pgroup").parquet(store.path("postings"))
+        # impact-style scores: dl-free block bounds
+        _encode_postings(
+            tf, n_pgroups=n_pgroups, shard_size=shard_size, dl=None, avgdl=avgdl,
+            block_size=block_size, block_span=BLOCK_SPAN, span_adaptive=True,
+        ).write.mode("append").partitionBy("pgroup").parquet(store.path("postings"))
     finally:
         # surface a failed concurrent write; never race one — and never let
         # the first future's failure skip draining the second or shutting
@@ -306,30 +276,10 @@ def _write_tables(
                 ss_future.result()
             finally:
                 pool.shutdown()
-    from ciff_spark.build import TERM_STATS_DRIVER_MAX_ROWS, _table_num_rows, _write_term_stats_local
-
-    if _table_num_rows(store, "postings") <= TERM_STATS_DRIVER_MAX_ROWS:
-        # small-vocabulary fast path: one driver-side pyarrow scan+group_by
-        # replaces the scan+exchange+write Spark job (see build.py)
-        _write_term_stats_local(store)
-    else:
-        ts = store.read_or_empty(spark, "postings", POSTINGS_SCHEMA + ", pgroup int").groupBy("term").agg(
-            F.sum("df").alias("df"), F.sum("cf").alias("cf"),
-            F.min("pgroup").alias("pgroup"),
-        ).sortWithinPartitions("term")
-        store.write("term_stats", ts)
-    # one row per term: the written files' footers already know the count —
-    # no Spark job to re-scan a table this build just wrote
-    import glob as _glob
-
-    import pyarrow.parquet as _papq
-
-    num_terms = sum(
-        _papq.ParquetFile(f).metadata.num_rows
-        for f in _glob.glob(store.path("term_stats") + "/*.parquet")
-    )
+    _write_term_stats(spark, store)
     store.write_meta_local(
-        num_docs, num_terms, total_terms, avgdl, shard_size, block_size,
+        num_docs, _table_num_rows(store, "term_stats"), total_terms, avgdl,
+        shard_size, block_size,
         f"{source_desc} (quantize={quantize}, doclength={doclength_mode})",
         bounds_avgdl=avgdl, n_pgroups=n_pgroups,
         q_lo=qrange[0], q_hi=qrange[1],

@@ -4,12 +4,14 @@ New transcript turns arrive as files in a directory (stand-in for a Kafka /
 Iceberg CDC feed). ``foreachBatch`` assigns each micro-batch a contiguous
 docid range continuing from the current index size (preserving the dense
 0..N-1 DocRecord contract across batches — /root/reference/src/lib.rs:545-547),
-block-encodes the batch's postings DISTRIBUTED (skinny tf rows repartition by
-term hash and encode in one vectorized pass per partition — the same shape as
-the batch build; the micro-batch never collects to the driver), and commits
-them as a SEGMENT. Because batch docid ranges are disjoint and increasing, a
+block-encodes the batch's postings DISTRIBUTED through the batch build's own
+encode stage (``build._encode_postings``: raw occurrences shuffle once and
+encode in one Arrow pass per partition; the micro-batch never collects to
+the driver), and commits them as a SEGMENT: one shard (``shard = 0``),
+written flat. Because batch docid ranges are disjoint and increasing, a
 per-term merge across segments is — like the shard merge — pure concatenation
-in segment order; ``compact_segments`` folds segments into the base tables.
+in segment order; ``compact_segments`` folds segments into the base tables,
+decoding the segment postings and re-encoding them through the same stage.
 
 Idempotent commit protocol (foreachBatch is AT-LEAST-once — a crash between
 writes or before the checkpoint commit re-runs the batch):
@@ -39,12 +41,21 @@ import os
 import shutil
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ciff_spark.build import POSTINGS_SCHEMA, BuildConfig, build_index
-from ciff_spark.functions.codec import BLOCK_SPAN, encode_many
+from ciff_spark.build import (
+    POSTINGS_SCHEMA,
+    BuildConfig,
+    _dl_array,
+    _encode_postings,
+    _pgroup_expr,
+    _shard_sizes_table,
+    _table_num_rows,
+    _write_table_local,
+    build_index,
+)
+from ciff_spark.functions.codec import BLOCK_SPAN, decode_postings
 from ciff_spark.functions.tokenizer import tokenize_expr
 from ciff_spark.plans.rank import add_dense_docid, release_rank_cache
 from ciff_spark.store import IndexStore
@@ -120,6 +131,11 @@ def _next_docid(store: IndexStore) -> int:
 
 
 
+#: a segment's shard_size: past every docid, so a segment is ONE shard
+#: (``shard = 0``) whatever its docid range
+_SEGMENT_SHARD_SIZE = 1 << 62
+
+
 def _span_policy(meta: dict) -> tuple[int | None, bool]:
     """(block_span, span_adaptive) the base index was built with — appends
     and compaction re-encodes keep the CONFIGURED geometry instead of
@@ -131,6 +147,32 @@ def _span_policy(meta: dict) -> tuple[int | None, bool]:
     return span, True if sa is None else bool(sa)
 
 
+def _commit_segment(
+    store: IndexStore, rows: DataFrame, docs: DataFrame, batch_id: int, block_size: int,
+) -> None:
+    """Encode ``(docid, term[, tf])`` rows into segment postings and commit
+    postings-then-docs (the docs ``_SUCCESS`` is the commit marker).
+
+    Segments always carry dl-FREE bounds: the collection avgdl keeps moving
+    as batches arrive, and a bound computed against a stale (lower) avgdl
+    could undershoot the true tfnorm — dl-free stays a true upper bound
+    under any future avgdl; compaction re-encodes with exact bounds. The
+    encode parallelism follows the base's n_pgroups; the rows land flat in
+    ``seg_postings/seg_<id>`` (no pgroup dirs)."""
+    meta = store.meta_local() if store.exists("meta") else {}
+    bspan, badapt = _span_policy(meta)
+    _encode_postings(
+        rows, n_pgroups=int(meta.get("n_pgroups") or BuildConfig.n_pgroups),
+        shard_size=_SEGMENT_SHARD_SIZE, dl=None, avgdl=0.0,
+        block_size=int(block_size), block_span=bspan, span_adaptive=badapt,
+    ).drop("pgroup").withColumn("segment", F.lit(int(batch_id))).write.mode(
+        "overwrite"
+    ).parquet(f"{store.path(SEG_POSTINGS)}/seg_{int(batch_id)}")
+    docs.withColumn("segment", F.lit(int(batch_id))).write.mode("overwrite").parquet(
+        f"{store.path(SEG_DOCS)}/seg_{int(batch_id)}"
+    )  # commit marker — LAST
+
+
 def append_batch(
     spark: SparkSession,
     store: IndexStore,
@@ -139,21 +181,12 @@ def append_batch(
     id_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
     text_col: str = "text",
     block_size: int = 128,
-    n_encode_partitions: int = 4,
 ) -> None:
     """Index one micro-batch as a segment (called from foreachBatch).
     Idempotent under at-least-once retries — see the module docstring."""
-    docs_dir = f"{store.path(SEG_DOCS)}/seg_{int(batch_id)}"
-    post_dir = f"{store.path(SEG_POSTINGS)}/seg_{int(batch_id)}"
-    if os.path.exists(f"{docs_dir}/_SUCCESS"):
-        return  # this batch already committed fully — retried delivery
-    shutil.rmtree(post_dir, ignore_errors=True)
-    shutil.rmtree(docs_dir, ignore_errors=True)
-    if batch_df.isEmpty():
+    if not _begin_segment(store, batch_df, batch_id):
         return
     base = _next_docid(store)
-    span_policy = _span_policy(store.meta_local()) if store.exists("meta") else (BLOCK_SPAN, True)
-
     ranked = add_dense_docid(batch_df.select(*id_cols, text_col), list(id_cols))
     toks = ranked.select(
         (F.col("docid") + F.lit(base)).alias("docid"),
@@ -161,9 +194,16 @@ def append_batch(
         tokenize_expr(text_col).alias("tokens"),
     ).persist()
     try:
-        _encode_and_commit_segment(
-            toks, docs_dir, post_dir, batch_id, block_size, n_encode_partitions,
-            id_cols, span_policy=span_policy,
+        # raw occurrences: the encode stage's run-length combine is the tf
+        # aggregation
+        _commit_segment(
+            store,
+            toks.select("docid", F.explode("tokens").alias("term")),
+            toks.select(
+                "docid", *id_cols,
+                F.coalesce(F.size("tokens"), F.lit(0)).alias("doclength"),
+            ),
+            batch_id, block_size,
         )
     finally:
         # a long-lived streaming query calls this once per micro-batch: the
@@ -172,13 +212,23 @@ def append_batch(
         release_rank_cache(ranked)
 
 
+def _begin_segment(store: IndexStore, batch_df: DataFrame, batch_id: int) -> bool:
+    """False when the batch needs no write: it already committed (a retried
+    delivery) or is empty. Otherwise clears a torn earlier attempt."""
+    docs_dir = f"{store.path(SEG_DOCS)}/seg_{int(batch_id)}"
+    if os.path.exists(f"{docs_dir}/_SUCCESS"):
+        return False  # this batch already committed fully — retried delivery
+    shutil.rmtree(f"{store.path(SEG_POSTINGS)}/seg_{int(batch_id)}", ignore_errors=True)
+    shutil.rmtree(docs_dir, ignore_errors=True)
+    return not batch_df.isEmpty()
+
+
 def append_vector_batch(
     spark: SparkSession,
     store: IndexStore,
     batch_df: DataFrame,
     batch_id: int,
     block_size: int = 128,
-    n_encode_partitions: int = 4,
 ) -> None:
     """Index one micro-batch of ``(ext_id, pos, term, score)`` doc-vector
     rows as a segment — the impact-index twin of :func:`append_batch`.
@@ -195,13 +245,7 @@ def append_vector_batch(
     commit protocol as :func:`append_batch` (module docstring)."""
     from ciff_spark.sources.jsonl_vectors import quantize_scores
 
-    docs_dir = f"{store.path(SEG_DOCS)}/seg_{int(batch_id)}"
-    post_dir = f"{store.path(SEG_POSTINGS)}/seg_{int(batch_id)}"
-    if os.path.exists(f"{docs_dir}/_SUCCESS"):
-        return  # this batch already committed fully — retried delivery
-    shutil.rmtree(post_dir, ignore_errors=True)
-    shutil.rmtree(docs_dir, ignore_errors=True)
-    if batch_df.isEmpty():
+    if not _begin_segment(store, batch_df, batch_id):
         return
     base = _next_docid(store)
     meta = store.meta_local()
@@ -228,6 +272,8 @@ def append_vector_batch(
         rows = quantize_scores(
             batch_df, quantize, range_=(float(q_lo), float(q_hi)) if quantize else None
         )
+        # repeated ids accumulate BEFORE the tf > 0 drop and the unique-term
+        # doclength, so this aggregation stays ahead of the encode
         tf = (
             rows.join(idmap, "ext_id")
             .groupBy("term", "docid")
@@ -241,89 +287,11 @@ def append_vector_batch(
                 "ext_id",
                 F.coalesce("doclength", F.lit(0)).cast("int").alias("doclength"),
             )
-            _commit_segment_tables(
-                tf, docs, docs_dir, post_dir, batch_id, block_size,
-                n_encode_partitions, span_policy=_span_policy(meta),
-            )
+            _commit_segment(store, tf, docs, batch_id, block_size)
         finally:
             tf.unpersist()
     finally:
         release_rank_cache(ranked)
-
-
-def _encode_and_commit_segment(
-    toks: DataFrame,
-    docs_dir: str,
-    post_dir: str,
-    batch_id: int,
-    block_size: int,
-    n_encode_partitions: int,
-    id_cols: tuple[str, ...] = (),
-    span_policy: tuple[int | None, bool] = (BLOCK_SPAN, True),
-) -> None:
-    tf = (
-        toks.select("docid", F.explode("tokens").alias("term"))
-        .groupBy("term", "docid")
-        .agg(F.count("*").alias("tf"))
-    )
-    docs = toks.select(
-        "docid", *id_cols, F.coalesce(F.size("tokens"), F.lit(0)).alias("doclength")
-    )
-    _commit_segment_tables(
-        tf, docs, docs_dir, post_dir, batch_id, block_size, n_encode_partitions,
-        span_policy=span_policy,
-    )
-
-
-def _commit_segment_tables(
-    tf: DataFrame,
-    docs: DataFrame,
-    docs_dir: str,
-    post_dir: str,
-    batch_id: int,
-    block_size: int,
-    n_encode_partitions: int,
-    span_policy: tuple[int | None, bool] = (BLOCK_SPAN, True),
-) -> None:
-    """Encode skinny (term, docid, tf) rows into segment postings and commit
-    postings-then-docs (the docs ``_SUCCESS`` is the commit marker)."""
-    bs = int(block_size)
-    bspan, badapt = span_policy
-
-    # segments always carry dl-FREE bounds: the collection avgdl keeps moving
-    # as batches arrive, and a bound computed against a stale (lower) avgdl
-    # could undershoot the true tfnorm — dl-free stays a true upper bound
-    # under any future avgdl; compaction re-encodes with exact bounds
-    def encode_part(iterator):
-        pdfs = [p for p in iterator if len(p)]
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-        rows = encode_many(
-            pdf["term"].to_numpy(),
-            np.zeros(len(pdf), np.int64),
-            pdf["docid"].to_numpy(),
-            pdf["tf"].to_numpy(),
-            None,
-            1.0,
-            bs,
-            block_span=bspan,
-            span_adaptive=badapt,
-        )
-        yield pd.DataFrame(rows, columns=["term", "shard", "df", "cf", "blocks"])
-
-    nparts = max(1, int(n_encode_partitions))
-    seg = (
-        tf.withColumn("pgroup", F.pmod(F.hash("term"), F.lit(nparts)))
-        .repartition(nparts, "pgroup")
-        .sortWithinPartitions("pgroup", "term", "docid")
-        .mapInPandas(encode_part, schema=POSTINGS_SCHEMA)
-        .withColumn("segment", F.lit(int(batch_id)))
-    )
-    seg.write.mode("overwrite").parquet(post_dir)
-    docs.withColumn("segment", F.lit(int(batch_id))).write.mode(
-        "overwrite"
-    ).parquet(docs_dir)  # commit marker — LAST
 
 
 def start_incremental_index(
@@ -385,21 +353,21 @@ def start_incremental_vector_index(
 def compact_segments(
     spark: SparkSession, index_root: str, rebuild_from: DataFrame | None = None,
     config: BuildConfig | None = None,
-    dl_broadcast_max_docs: int = 5_000_000,
 ) -> IndexStore:
     """Fold segments into the base index, then drop them.
 
-    Default (``rebuild_from=None``): CONCAT compaction — cost ∝ segment size,
-    never corpus size. Segment docid ranges are disjoint and increasing by
-    construction, so the merge is: decode+re-shard+re-encode only the SEGMENT
-    postings (exact block bounds under the new avgdl when the segment
-    doclengths fit the broadcast cap, dl-free true bounds beyond), append
-    them as additional (term, shard) rows — readers concatenate same-shard
-    rows in ascending first-docid order — extend ``shard_sizes`` with the new
-    doclength runs, merge ``term_stats``, and rewrite ``meta`` with
-    ``bounds_avgdl = min(old, new)`` so WAND pruning stays sound under the
-    avgdl drift (see wand.py ``bound_scale``). Base postings files are never
-    read or rewritten.
+    Default (``rebuild_from=None``): CONCAT compaction — postings work ∝
+    segment size, never corpus size. Segment docid ranges are disjoint and
+    increasing by construction, so the merge is: decode only the SEGMENT
+    postings to (docid, term, tf) rows and re-encode them through the
+    build's encode stage (re-sharded, exact block bounds from the full
+    doclength array under the new avgdl), append them as additional
+    (term, shard) rows — readers concatenate same-shard rows in ascending
+    first-docid order — extend ``shard_sizes`` with the new doclength runs,
+    merge ``term_stats``, and rewrite ``meta`` with ``bounds_avgdl =
+    min(old, new)`` so WAND pruning stays sound under the avgdl drift (see
+    wand.py ``bound_scale``). Base postings files are never read or
+    rewritten.
 
     ``rebuild_from=df``: full rebuild from the given corpus (the heavyweight
     path; also re-tightens block bounds and re-balances block sizes).
@@ -407,25 +375,40 @@ def compact_segments(
     Requires a quiesced stream. On plain Parquet the multi-table commit is
     NOT crash-atomic (production target is one Iceberg snapshot commit); a
     crash mid-compaction requires a rebuild."""
-    import shutil
-
     store = IndexStore(index_root)
     if rebuild_from is not None:
         store.drop()
         build_index(rebuild_from, index_root, config=config, resume=False)
     else:
-        _fold_segments(spark, store, dl_broadcast_max_docs)
+        _fold_segments(spark, store)
     for t in (SEG_POSTINGS, SEG_DOCS):
         shutil.rmtree(store.path(t), ignore_errors=True)
     return store
 
 
-def _fold_segments(
-    spark: SparkSession, store: IndexStore, dl_broadcast_max_docs: int
-) -> None:
+def _decode_segment_rows(iterator):
+    """Segment postings ``(term, blocks)`` → one ``(term, docid, tf)`` row
+    per posting — a narrow decode, no exchange."""
+    import pyarrow as pa
+
+    for batch in iterator:
+        lists = [decode_postings(b) for b in batch.column("blocks").to_pylist()]
+        lens = np.array([len(d) for d, _ in lists], np.int64)
+        if not lens.sum():
+            continue
+        yield pa.RecordBatch.from_arrays(
+            [
+                batch.column("term").take(pa.array(np.repeat(np.arange(len(lists)), lens))),
+                pa.array(np.concatenate([d for d, _ in lists]), pa.int64()),
+                pa.array(np.concatenate([t for _, t in lists]), pa.int64()),
+            ],
+            ["term", "docid", "tf"],
+        )
+
+
+def _fold_segments(spark: SparkSession, store: IndexStore) -> None:
     import glob
 
-    import pyarrow as pa
     import pyarrow.parquet as papq
 
     if not _committed_segment_ids(store):
@@ -473,58 +456,17 @@ def _fold_segments(
                 f"base num_docs={old_num}, segments [{agg['lo']},{agg['hi']}] "
                 f"({agg['nd']} distinct of {n_seg})"
             )
-        seg_total = int(agg["t"] or 0)
         num2 = old_num + n_seg
+        seg_total = int(agg["t"] or 0)
         total2 = old_total + seg_total
         avgdl2 = total2 / num2 if num2 else 0.0
 
-        # exact new-row bounds need the segment doclengths; beyond the
-        # broadcast cap fall back to dl-free TRUE bounds (looser pruning,
-        # same exactness) — mirroring the batch build's policy
-        if n_seg <= dl_broadcast_max_docs:
-            pdf = seg_docs.select("docid", "doclength").toPandas()
-            dlarr = np.zeros(n_seg, np.uint32)
-            dlarr[pdf["docid"].to_numpy(np.int64) - old_num] = pdf[
-                "doclength"
-            ].to_numpy(np.int64)
-            dl_bc = spark.sparkContext.broadcast(dlarr)
-        else:
-            dl_bc = None
+        # the full doclength array (base runs + segment docs) gives the
+        # re-encoded rows exact block bounds and the new shard_sizes runs
+        pdf = seg_docs.select("docid", "doclength").toPandas()
+        dl = np.concatenate([_dl_array(store, old_num), np.zeros(n_seg, np.uint32)])
+        dl[pdf["docid"].to_numpy(np.int64)] = pdf["doclength"].to_numpy(np.int64)
 
-        # ---- postings: decode + re-shard + re-encode SEGMENT rows only ------
-        from ciff_spark.functions.codec import decode_postings, encode_many
-
-        ssz, bsz, base0, avg2 = shard_size, block_size, old_num, avgdl2
-        bspan_c, badapt_c = _span_policy(meta)
-
-        def reencode(iterator):
-            codes_parts, d_parts, t_parts, vocab, seen = [], [], [], [], {}
-            for pdf_in in iterator:
-                for term, blocks in zip(pdf_in["term"], pdf_in["blocks"]):
-                    d, tf = decode_postings(list(blocks))
-                    code = seen.get(term)
-                    if code is None:
-                        code = seen[term] = len(vocab)
-                        vocab.append(term)
-                    codes_parts.append(np.full(len(d), code, np.int64))
-                    d_parts.append(d)
-                    t_parts.append(tf)
-            if not d_parts:
-                return
-            codes = np.concatenate(codes_parts)
-            docids = np.concatenate(d_parts)
-            tfs = np.concatenate(t_parts)
-            order = np.lexsort((docids, codes))
-            codes, docids, tfs = codes[order], docids[order], tfs[order]
-            terms_arr = np.asarray(vocab, object)[codes]
-            doclens = dl_bc.value[docids - base0] if dl_bc is not None else None
-            rows = encode_many(
-                terms_arr, docids // ssz, docids, tfs, doclens, avg2, bsz,
-                block_span=bspan_c, span_adaptive=badapt_c,
-            )
-            yield pd.DataFrame(rows, columns=["term", "shard", "df", "cf", "blocks"])
-
-        pg_expr = F.pmod(F.hash("term"), F.lit(n_pgroups))
         # pre-variable-width guard: appending min_docid-bearing block structs
         # beside old struct<6> files would leave a pgroup dir with MIXED
         # nested schemas, which the serving readers' pyarrow dataset scans
@@ -540,75 +482,23 @@ def _fold_segments(
                     "compact_segments(rebuild_from=...) once to refresh "
                     "the index"
                 )
-        segp = read_segments(spark, store, SEG_POSTINGS).select("term", "blocks")
-        enc = (
-            segp.repartition(n_pgroups, pg_expr)
-            .mapInPandas(reencode, schema=POSTINGS_SCHEMA)
-            .withColumn("pgroup", pg_expr)
+
+        # ---- postings: decode + re-shard + re-encode SEGMENT rows only ------
+        bspan, badapt = _span_policy(meta)
+        rows = read_segments(spark, store, SEG_POSTINGS).select("term", "blocks").mapInArrow(
+            _decode_segment_rows, schema="term string, docid bigint, tf bigint"
         )
-        enc.write.mode("append").partitionBy("pgroup").parquet(store.path("postings"))
+        _encode_postings(
+            rows, n_pgroups=n_pgroups, shard_size=shard_size, dl=dl, avgdl=avgdl2,
+            block_size=block_size, block_span=bspan, span_adaptive=badapt,
+        ).write.mode("append").partitionBy("pgroup").parquet(store.path("postings"))
 
         # ---- docs: append the segment rows in the base column order ---------
         base_cols = [f.name for f in store.read(spark, "docs").schema.fields]
         store.append("docs", seg_docs.select(*base_cols))
 
-        # ---- shard_sizes: extend the straddle shard, add new shards ---------
-        def pack_new(key, pdf_in):
-            (shard,) = key
-            order = np.argsort(pdf_in["docid"].to_numpy(), kind="stable")
-            dids = pdf_in["docid"].to_numpy()[order]
-            dls = pdf_in["doclength"].to_numpy()[order].astype("<u4")
-            start = int(dids[0])
-            if not (dids == np.arange(start, start + len(dids))).all():
-                raise ValueError(f"shard {shard}: segment docids not dense")
-            return pd.DataFrame(
-                [{"shard": int(shard), "new_start": start,
-                  "count": len(dids), "dl_bin": dls.tobytes()}]
-            )
-
-        new_runs = (
-            seg_docs.withColumn(
-                "shard", F.floor(F.col("docid") / F.lit(shard_size)).cast("int")
-            )
-            .select("shard", "docid", "doclength")
-            .groupBy("shard")
-            .applyInPandas(
-                pack_new, schema="shard int, new_start bigint, count int, dl_bin binary"
-            )
-            .collect()  # ≤ one row per affected shard — tiny
-        )
-        existing = {
-            r["shard"]: r
-            for r in papq.read_table(store.path("shard_sizes")).to_pylist()
-        }
-        for r in new_runs:
-            s = int(r["shard"])
-            if s in existing:  # straddle shard: bytes concatenate
-                e = existing[s]
-                if int(r["new_start"]) != int(e["start_docid"]) + int(e["count"]):
-                    raise ValueError(f"shard {s}: segment run does not extend the base run")
-                existing[s] = {
-                    "shard": s, "start_docid": int(e["start_docid"]),
-                    "count": int(e["count"]) + int(r["count"]),
-                    "dl_bin": bytes(e["dl_bin"]) + bytes(r["dl_bin"]),
-                }
-            else:
-                if int(r["new_start"]) != s * shard_size:
-                    raise ValueError(f"shard {s}: new shard does not start at its boundary")
-                existing[s] = {
-                    "shard": s, "start_docid": s * shard_size,
-                    "count": int(r["count"]), "dl_bin": bytes(r["dl_bin"]),
-                }
-        rows = [existing[s] for s in sorted(existing)]
-        _write_table_local(
-            store, "shard_sizes",
-            pa.table({
-                "shard": pa.array([r["shard"] for r in rows], pa.int32()),
-                "start_docid": pa.array([r["start_docid"] for r in rows], pa.int64()),
-                "count": pa.array([r["count"] for r in rows], pa.int32()),
-                "dl_bin": pa.array([r["dl_bin"] for r in rows], pa.binary()),
-            }),
-        )
+        # ---- shard_sizes: the straddle shard extends, new shards follow -----
+        _write_table_local(store, "shard_sizes", _shard_sizes_table(dl, shard_size))
 
         # ---- term_stats: merge-aggregate (∝ vocabulary, not corpus) ---------
         seg_ts = (
@@ -622,14 +512,12 @@ def _fold_segments(
             .unionAll(seg_ts)
             .groupBy("term")
             .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-            .withColumn("pgroup", pg_expr)
+            .withColumn("pgroup", _pgroup_expr(n_pgroups))
             .sortWithinPartitions("term")  # keep row-group pruning sharp
         )
         store.write("term_stats", merged)
 
         # ---- meta ------------------------------------------------------------
-        from ciff_spark.build import _table_num_rows
-
         store.write_meta_local(
             num2, _table_num_rows(store, "term_stats"), total2, avgdl2,
             shard_size, block_size, str(meta.get("description", "")),
@@ -644,24 +532,6 @@ def _fold_segments(
         )
     finally:
         seg_docs.unpersist()
-
-
-def _write_table_local(store: IndexStore, table: str, tbl) -> None:
-    """Atomic driver-side table rewrite (pyarrow, temp dir + rename) for
-    tables that are metadata-sized (shard_sizes: one row per shard)."""
-    import os
-    import uuid
-
-    import pyarrow.parquet as papq
-
-    final = store.path(table)
-    tmp = f"{final}.__tmp_{uuid.uuid4().hex[:8]}"
-    os.makedirs(tmp)
-    papq.write_table(tbl, f"{tmp}/part-00000.parquet")
-    open(f"{tmp}/_SUCCESS", "w").close()
-    if os.path.isdir(final):
-        shutil.rmtree(final)
-    os.rename(tmp, final)
 
 
 def streaming_windowed_events(

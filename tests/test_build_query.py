@@ -310,37 +310,6 @@ def test_partition_invariance(spark, built, tmp_path):
     }
 
 
-def test_row_tf_combine_parity(spark, built, tmp_path):
-    """The map-side (term, tf) pre-combine path (BuildConfig.row_tf_combine,
-    default off — A/B-measured slower on transcripts) must produce the
-    identical index; the tokenizer regex must evaluate ONCE in its plan."""
-    from pyspark.sql import functions as F
-
-    from ciff_spark.functions.tokenizer import tokenize_expr, tokens_tf_expr
-
-    store, _, _ = built
-    df = transcripts_df(spark, N_CONVS, seed=42, partitions=4)
-    store2 = build_index(
-        df, str(tmp_path / "idx_tfc"),
-        config=BuildConfig(n_shards=4, n_pgroups=8, block_size=16, row_tf_combine=True),
-        resume=False,
-    )
-    a = _engine_postings(spark, store)
-    b = _engine_postings(spark, store2)
-    assert set(a) == set(b)
-    for term in a:
-        np.testing.assert_array_equal(a[term][0], b[term][0], err_msg=term)
-        np.testing.assert_array_equal(a[term][1], b[term][1], err_msg=term)
-    assert store.meta(spark)["total_terms"] == store2.meta(spark)["total_terms"]
-    # plan guard: the multi-referenced tokens alias must NOT inline (that
-    # would re-run the tokenizer regex once per distinct term)
-    occ = df.select(tokenize_expr("text").alias("t")).select(
-        F.explode(tokens_tf_expr(F.col("t")))
-    )
-    plan = occ._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("regexp_extract_all") == 1, plan
-
-
 # ---------------------------------------------------------------------------
 # resume: crash mid-postings, resume → identical index + lineage recorded
 # ---------------------------------------------------------------------------

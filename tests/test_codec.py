@@ -163,46 +163,49 @@ def test_idf_matches_reference_formula():
     assert idf_np(3, 3) < 0
 
 
-def test_encode_arrow_batch_equals_encode_many():
-    """The Arrow-native partition encoder must produce bit-identical blocks
-    to the readable reference implementation."""
+@pytest.mark.parametrize("with_dl", [True, False], ids=["dl", "dl_free"])
+def test_encode_arrow_batch_equals_encode_postings(with_dl):
+    """The multi-list Arrow encoder (the build's one encode kernel) must
+    produce, for every (term, shard) group, exactly the blocks the
+    single-list reference ``encode_postings`` produces — with exact
+    (doclength) bounds and with dl-free bounds, on random lists and on a
+    sparse, span-capped list whose blocks break at docid windows and
+    include implicit single-posting blocks."""
     import pyarrow as pa
 
-    from ciff_spark.functions.codec import encode_arrow_batch, encode_many
+    from ciff_spark.functions.codec import encode_arrow_batch
 
     rng = np.random.default_rng(11)
-    rows = []
+    lists = {}
     for t in [f"t{i:03d}" for i in range(40)]:
         df_ = int(rng.integers(1, 300))
-        docids = np.sort(rng.choice(5000, df_, replace=False))
-        for d in docids:
-            rows.append((t, int(d), int(rng.integers(1, 9))))
-    rows.sort()
-    terms = np.array([r[0] for r in rows], object)
-    docids = np.array([r[1] for r in rows], np.int64)
-    tfs = np.array([r[2] for r in rows], np.int64)
+        lists[t] = np.sort(rng.choice(5000, df_, replace=False))
+    # avg gap ~75 > SPAN_ADAPT_FACTOR·span/block_size = 32: width-capped
+    lists["zz_sparse"] = np.cumsum(rng.integers(33, 120, 60))
+    vocab = sorted(lists)
+    codes = np.concatenate([np.full(len(lists[t]), i) for i, t in enumerate(vocab)])
+    docids = np.concatenate([lists[t] for t in vocab]).astype(np.int64)
+    tfs = rng.integers(1, 9, len(docids)).astype(np.int64)
     dls = rng.integers(5, 100, 5000).astype(np.uint32)
+    shard_size, block_size, avgdl = 700, 16, 42.0
 
-    shard_size = 700
-    exp = encode_many(terms, docids // shard_size, docids, tfs, dls[docids], 42.0, 16)
-    batch = encode_arrow_batch(
-        pa.array(terms.tolist(), pa.string()), docids, tfs, dls[docids], 42.0,
-        shard_size, 16,
-    )
-    got = batch.to_pylist()
-    assert len(got) == len(exp)
-    for g, (term, shard, df_, cf, blocks) in zip(got, exp):
-        assert g["term"] == term and g["shard"] == shard
-        assert g["df"] == df_ and g["cf"] == cf
-        assert len(g["blocks"]) == len(blocks)
-        for gb, eb in zip(g["blocks"], blocks):
-            assert gb["count"] == eb["count"]
-            assert gb["max_docid"] == eb["max_docid"]
-            assert gb["max_tf"] == eb["max_tf"]
-            assert gb["min_docid"] == eb["min_docid"]
-            if eb["max_tfnorm"] is None:  # implicit single-posting block
-                assert gb["max_tfnorm"] is None
-            else:
-                assert gb["max_tfnorm"] == pytest.approx(eb["max_tfnorm"])
-            assert gb["docs_bin"] == eb["docs_bin"]
-            assert gb["tfs_bin"] == eb["tfs_bin"]
+    got = encode_arrow_batch(
+        codes, pa.array(vocab, pa.string()), docids, tfs,
+        dls[docids] if with_dl else None, avgdl, shard_size, block_size,
+    ).to_pylist()
+    exp = []
+    for i, t in enumerate(vocab):
+        for shard in np.unique(lists[t] // shard_size):
+            m = (codes == i) & (docids // shard_size == shard)
+            exp.append({
+                "term": t, "shard": int(shard), "df": int(m.sum()),
+                "cf": int(tfs[m].sum()),
+                "blocks": encode_postings(
+                    docids[m], tfs[m], doclens=dls[docids[m]] if with_dl else None,
+                    avgdl=avgdl, block_size=block_size,
+                ),
+            })
+    assert got == exp
+    sparse = [b for r in got if r["term"] == "zz_sparse" for b in r["blocks"]]
+    assert any(b["count"] == 1 and b["min_docid"] is None for b in sparse)
+    assert any(1 < b["count"] < block_size for b in sparse)  # window breaks

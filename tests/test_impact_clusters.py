@@ -3,6 +3,7 @@ the connected-components dedup clustering."""
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from ciff_spark.operators.dedup import connected_components
@@ -487,3 +488,25 @@ def test_streaming_vector_index_fresh_equals_batch(spark, tmp_path):
         fresh = FreshSearcher(root).search(query, k=10, scoring="impact")
         cold = LocalSearcher(root2).search(query, k=10, scoring="impact")
         assert fresh == cold, query
+
+
+@pytest.mark.parametrize("algo", ["label", "star"])
+def test_cc_keeps_only_the_result_checkpoint(spark, algo):
+    """Each propagation round local-checkpoints its frame; a superseded
+    round's blocks must be released, leaving only the checkpoint behind the
+    returned frame (a GC does not free them, so they would stay pinned for
+    the session)."""
+    from ciff_spark.operators.dedup import connected_components_star
+
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(rdds().keySet())
+    docs = spark.range(12).selectExpr("id AS docid")
+    pairs = spark.range(11).selectExpr("id AS d1", "id + 1 AS d2")  # a chain
+    stats: dict = {}
+    if algo == "label":
+        out = connected_components(docs, pairs, driver_max_edges=0)
+    else:
+        out = connected_components_star(docs, pairs, stats=stats)
+        assert stats["rounds"] > 1
+    assert set(out.toPandas()["cluster"].astype(int)) == {0}
+    assert len(set(rdds().keySet()) - before) == 1

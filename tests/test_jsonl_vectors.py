@@ -80,6 +80,7 @@ def test_jsonl_idmap_partition_invariant(spark, tmp_path):
     p = tmp_path / "many.jsonl"
     p.write_text("\n".join(json.dumps(d) for d in docs) + "\n")
     maps = []
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
     for shuffle_parts in (2, 16):
         spark.conf.set("spark.sql.shuffle.partitions", shuffle_parts)
         try:
@@ -91,7 +92,9 @@ def test_jsonl_idmap_partition_invariant(spark, tmp_path):
                 {r["ext_id"]: r["docid"] for r in store.read(spark, "docs").collect()}
             )
         finally:
-            spark.conf.unset("spark.sql.shuffle.partitions")
+            # restore, not unset: unset falls back to Spark's default of 200,
+            # not the session's configured value
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
     assert maps[0] == maps[1]
     # one file, ordered lines: first-seen == line order
     assert maps[0] == {f"d{i:04d}": i for i in range(300)}

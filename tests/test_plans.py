@@ -84,7 +84,7 @@ def test_grouped_rank_matches_generic_rank(spark):
     """Two-level grouped docid (offset(conv) + turn_idx) must equal the
     generic two-phase dense rank over (conv_id, turn_idx) — on both the
     driver-offsets path and the distributed prefix-sum path."""
-    from ciff_spark.plans.rank import add_dense_docid, add_grouped_docid
+    from ciff_spark.plans.rank import add_dense_docid, add_grouped_docid, release_rank_cache
 
     df = transcripts_df(spark, 30, seed=77, partitions=4)
     exp = {
@@ -92,12 +92,11 @@ def test_grouped_rank_matches_generic_rank(spark):
         for r in add_dense_docid(df, ["conv_id", "turn_idx"]).collect()
     }
     for max_driver in (5_000_000, 3):  # force both paths (30 convs > 3)
-        got = {
-            (r["conv_id"], r["turn_idx"]): r["docid"]
-            for r in add_grouped_docid(
-                df, "conv_id", "turn_idx", max_driver_groups=max_driver
-            ).collect()
-        }
+        ranked = add_grouped_docid(
+            df, "conv_id", "turn_idx", max_driver_groups=max_driver
+        )
+        got = {(r["conv_id"], r["turn_idx"]): r["docid"] for r in ranked.collect()}
+        release_rank_cache(ranked)
         assert got == exp, f"max_driver_groups={max_driver}"
 
 

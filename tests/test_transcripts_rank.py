@@ -5,7 +5,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from ciff_spark.plans.rank import add_dense_docid
+from ciff_spark.plans.rank import add_dense_docid, release_rank_cache
 from ciff_spark.sources.transcripts import transcripts_df, transcripts_pdf
 
 
@@ -80,6 +80,7 @@ def test_rank_no_single_partition_bottleneck(spark):
     plan_d = ranked_d._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan_d
     assert ranked_d.rdd.getNumPartitions() >= 4
+    release_rank_cache(ranked)
 
 
 def test_rank_driver_path_matches_distributed(spark):
@@ -89,11 +90,10 @@ def test_rank_driver_path_matches_distributed(spark):
     fast = add_dense_docid(df, ["conv_id", "turn_idx"]).select(
         "conv_id", "turn_idx", "docid"
     )
-    slow = add_dense_docid(df, ["conv_id", "turn_idx"], driver_max_rows=0).select(
-        "conv_id", "turn_idx", "docid"
-    )
+    slow = add_dense_docid(df, ["conv_id", "turn_idx"], driver_max_rows=0)
     pa = fast.orderBy("docid").toPandas()
-    pb = slow.orderBy("docid").toPandas()
+    pb = slow.select("conv_id", "turn_idx", "docid").orderBy("docid").toPandas()
+    release_rank_cache(slow)
     pd.testing.assert_frame_equal(pa, pb)
 
 
