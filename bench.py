@@ -234,19 +234,17 @@ def run_bench(sf_dir: str, cores: int, n_convs: int) -> dict:
         zipf_ratio = _ratio(zipf_qs)
         sel_ratio = _ratio(sel_qs)
         log(f"zipf prune decode ratio: {zipf_ratio:.3f} (mixed) {sel_ratio:.3f} (selective)")
-        # serving-path A/B on identical queries: LocalSearcher = Block-Max
-        # WAND kernel; FreshSearcher(prune=False) (no segments) = the
-        # exhaustive scorer over the same artifact. Fresh instance per query
-        # on both sides (cold decode, warm page cache) — the wall gap IS the
-        # pruning win; rank-identity of the two engines is pytest-asserted.
-        from ciff_spark.serve import FreshSearcher
-
+        # serving-path A/B on identical queries: the same LocalSearcher with
+        # the Block-Max WAND kernel (prune=True) vs the exhaustive kernel
+        # (prune=False) over the same lists. Fresh instance per query on both
+        # sides (cold decode, warm page cache) — the wall gap IS the pruning
+        # win; rank-identity of the two kernels is pytest-asserted.
         def _mk_wand():
             s = LocalSearcher(troot)
             return lambda q: s.search(q, k=10)
 
         def _mk_exhaustive():
-            s = FreshSearcher(troot)
+            s = LocalSearcher(troot)
             return lambda q: s.search(q, k=10, prune=False)
 
         def _serve_lats(mk_search) -> list[float]:
@@ -262,9 +260,10 @@ def run_bench(sf_dir: str, cores: int, n_convs: int) -> dict:
         queries["zipf_serve_exhaustive_p50_ms"] = round(el[len(el) // 2] * 1000, 2)
 
         # fresh serving: same index + a streamed segment (~2.5% of the
-        # corpus). Pruned fresh (segments exhaustive → θ seed → Block-Max
-        # WAND over the base) vs fully exhaustive fresh — the pruning win
-        # must survive the moment a segment exists (the r4 gap).
+        # corpus). Pruned fresh (one Block-Max WAND call over base ∪ segment
+        # lists) vs one exhaustive call over the same lists — the pruning
+        # win must survive the moment a segment exists.
+        from ciff_spark.serve import FreshSearcher
         from ciff_spark.sources.transcripts import transcripts_df
         from ciff_spark.store import IndexStore
         from ciff_spark.streaming.incremental import append_batch

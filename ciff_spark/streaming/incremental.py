@@ -26,12 +26,14 @@ writes or before the checkpoint commit re-runs the batch):
    shifts the range and the rewrite lands byte-identical.
 
 Readers that want fresh results use ``ciff_spark.serve.FreshSearcher``, which
-recomputes collection statistics over base ∪ segments and scores both
-exhaustively (segment rows carry ``shard = 0`` relative to their own docid
-range, so they are NOT unionable into the shard-grouped distributed reader
-— the serving path handles them natively). Rank-identity with a cold batch
-build / the oracle over the same rows is asserted in tests (the metamorphic
-"incremental ≡ batch" and "fresh ≡ rebuild" properties).
+recomputes collection statistics over base ∪ segments and serves a term's
+segment rows concatenated after its base rows, through the same single
+Block-Max WAND call as the base (segment rows carry ``shard = 0`` relative to
+their own docid range, so they are NOT unionable into the shard-grouped
+distributed reader — the serving path orders rows by docid instead).
+Rank-identity with a cold batch build / the oracle over the same rows is
+asserted in tests (the metamorphic "incremental ≡ batch" and "fresh ≡
+rebuild" properties).
 """
 
 from __future__ import annotations

@@ -301,10 +301,11 @@ def exhaustive_topk(
 ) -> tuple[np.ndarray, np.ndarray]:
     """Unpruned top-k over one docid shard: decode every block, sum each
     doc's contributions in one ``unique``/``add.at`` pass, take the top-k
-    with one ``lexsort``. Same inputs (single-shard ``(idf, blocks)`` lists),
-    ``scoring``/``round_decimals``/``allowed`` semantics and result order as
-    ``wand_topk``; no block bound is read. A doc's contributions add in list
-    order, as in ``wand_topk``, so the two kernels return identical scores.
+    with one ``lexsort``. Same inputs (``(idf, blocks)`` or
+    ``(idf, blocks, decode_prevs)`` lists), ``scoring``/``round_decimals``/
+    ``allowed`` semantics and result order as ``wand_topk``; no block bound
+    is read. A doc's contributions add in list order, as in ``wand_topk``,
+    so the two kernels return identical scores.
     ``decode_caches``: as in ``wand_topk``, keyed by block index."""
     if not lists or k <= 0:
         return np.empty(0, np.int64), np.empty(0, np.float64)
@@ -313,13 +314,13 @@ def exhaustive_topk(
         raise ValueError(f"unknown scoring {scoring!r}")
     caches = decode_caches if decode_caches is not None else [{} for _ in lists]
     docids, contribs = [], []
-    for (idf, blocks), cache in zip(lists, caches):
-        prev = -1
-        for j, blk in enumerate(blocks):
+    for entry, cache in zip(lists, caches):
+        idf, blocks = entry[:2]
+        prevs = entry[2] if len(entry) == 3 else [-1, *(b["max_docid"] for b in blocks[:-1])]
+        for j, (blk, prev) in enumerate(zip(blocks, prevs)):
             got = cache.get(j)
             if got is None:
-                got = cache[j] = _decode_block_arrays(blk, prev)
-            prev = int(blk["max_docid"])
+                got = cache[j] = _decode_block_arrays(blk, int(prev))
             d, tf = got
             docids.append(d)
             if impact:

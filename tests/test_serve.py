@@ -117,37 +117,68 @@ def test_search_batch_identical_to_per_query(served):
         assert rows == searcher.search(q, k=7), q
 
 
-def test_fresh_pruned_equals_exhaustive_with_segments(spark, tmp_path):
-    """FreshSearcher's pruned path (segments exhaustive → θ seed → Block-Max
-    WAND over the base under FRESH stats) must return tuple-identical
-    results to the exhaustive fresh scorer on a segmented index — across
-    base-only / segment-only / mixed-term queries, both with and without
-    the rounded-rank contract, and it must actually skip base blocks."""
-    from ciff_spark.serve import FreshSearcher
-    from ciff_spark.streaming.incremental import append_batch
+def test_search_sums_in_sorted_term_order_warm_or_cold(served, monkeypatch):
+    """A warm query must score exactly like the same query cold: after a
+    later term is pre-warmed into the hot cache, the kernel still gets the
+    lists in sorted-term order (a doc's contributions add in list order),
+    and the results equal a cold searcher's tuple for tuple."""
+    from ciff_spark import serve
+
+    searcher, _ = served
+    q = "w000002 w000003 w000004 w000005"
+    terms = q.split()
+    warm = LocalSearcher(searcher.root)
+    warm.search(terms[-1], k=10)  # the LAST term in sorted order goes hot first
+    seen = []
+    real = serve.wand_topk
+
+    def spy(lists, *a, **kw):
+        seen.append([id(blocks) for _, blocks, _ in lists])
+        return real(lists, *a, **kw)
+
+    monkeypatch.setattr(serve, "wand_topk", spy)
+    got = warm.search(q, k=10)
+    assert seen == [[id(warm._hot[t][0]) for t in terms]]
+    assert got == LocalSearcher(searcher.root).search(q, k=10)
+
+
+@pytest.fixture(scope="module")
+def segmented(spark, tmp_path_factory):
+    """A 3-shard base index plus one committed ``append_batch`` segment."""
     from ciff_spark.store import IndexStore
+    from ciff_spark.streaming.incremental import append_batch
 
     pdf = transcripts_pdf(40, seed=7).sort_values(["conv_id", "turn_idx"])
     convs = sorted(pdf["conv_id"].unique())
     base_pdf = pdf[pdf.conv_id.isin(convs[:30])]
     seg_pdf = pdf[pdf.conv_id.isin(convs[30:])]
-    root = str(tmp_path / "fresh_prune_idx")
+    root = str(tmp_path_factory.mktemp("fresh_prune") / "idx")
     build_index(
         spark.createDataFrame(base_pdf), root,
         config=BuildConfig(n_shards=3, n_pgroups=4, block_size=16),
         resume=False,
     )
-    store = IndexStore(root)
-    append_batch(spark, store, spark.createDataFrame(seg_pdf), 0)
+    append_batch(spark, IndexStore(root), spark.createDataFrame(seg_pdf), 0)
+    return root
 
+
+def test_fresh_pruned_equals_exhaustive_with_segments(segmented):
+    """FreshSearcher's pruned path (one Block-Max WAND call over base ∪
+    segment lists under FRESH stats) must return tuple-identical results to
+    the exhaustive kernel on a segmented index — across base-only /
+    segment-only / mixed-term queries, both with and without the
+    rounded-rank contract, and it must actually skip blocks."""
+    from ciff_spark.serve import FreshSearcher
+
+    root = segmented
     queries = QUERIES + ["w000000 w000001 w000002", "w000010 w000200"]
     for q in queries:
         for rd in (None, 6):
             a = FreshSearcher(root).search(q, k=7, round_decimals=rd)
             b = FreshSearcher(root).search(q, k=7, round_decimals=rd, prune=False)
             assert a == b, (q, rd)
-    # the pruned path must decode fewer base blocks than exist (fresh
-    # instance per query so caches don't masquerade as pruning)
+    # the pruned path must decode fewer blocks than exist (fresh instance
+    # per query so caches don't masquerade as pruning)
     st: dict = {}
     for q in queries:
         FreshSearcher(root).search(q, k=3, stats=st)
@@ -155,10 +186,36 @@ def test_fresh_pruned_equals_exhaustive_with_segments(spark, tmp_path):
     # filtered fresh serving: allowed set spanning base AND segment docids,
     # pruned ≡ exhaustive under the same mask
     fs = FreshSearcher(root)
-    allowed = np.arange(0, fs.fresh_num_docs, 2)
-    assert allowed.max() >= fs.num_docs  # really covers segment docids
+    allowed = np.arange(0, fs.num_docs, 2)
+    assert allowed.max() >= LocalSearcher(root).num_docs  # really covers segment docids
     for q in queries[:4]:
         a = FreshSearcher(root).search(q, k=7, allowed_docids=allowed)
         b = FreshSearcher(root).search(q, k=7, prune=False, allowed_docids=allowed)
         assert a == b, q
         assert all(d % 2 == 0 for d, _ in a), q
+
+
+def test_fresh_lazy_term_stats_identical(segmented, monkeypatch):
+    """Lazy base term stats with segments present: results equal the eager
+    searcher's for a segment-only term, a base-only term, a mixed query and
+    an absent term — and the segment-only term resolves no pgroup."""
+    import pyarrow.parquet as pq
+
+    from ciff_spark.serve import FreshSearcher
+
+    root = segmented
+    eager = FreshSearcher(root)
+    base_terms = set(pq.read_table(f"{root}/term_stats", columns=["term"])["term"].to_pylist())
+    seg_terms = set(eager._seg_df)
+    seg_only = min(seg_terms - base_terms)
+    base_only = min(base_terms - seg_terms)
+    both = min(base_terms & seg_terms)
+    monkeypatch.setattr(LocalSearcher, "EAGER_STATS_MAX_TERMS", 0)
+    lazy = FreshSearcher(root)
+    assert lazy._lazy_stats and lazy._df == {}
+    for q in (seg_only, base_only, f"{base_only} {both} {seg_only}", "zzzz absent"):
+        for prune in (True, False):
+            got = lazy.search(q, k=10, prune=prune)
+            assert got == eager.search(q, k=10, prune=prune), q
+    assert lazy.search(seg_only, k=10)
+    assert lazy._df[seg_only] == 0 and seg_only not in lazy._pg

@@ -138,8 +138,8 @@ def test_torn_segment_invisible_to_readers(spark, tmp_path):
     assert read_segments(spark, store, SEG_POSTINGS).count() == 0
     assert read_segments(spark, store, SEG_DOCS).count() == 0
     searcher = FreshSearcher(root)
-    assert searcher.fresh_num_docs == cut  # base only — no skewed stats
-    assert searcher._seg_rows == []
+    assert searcher.num_docs == len(searcher.dl) == cut  # base only — no skewed stats
+    assert searcher._seg_ds is None and searcher._seg_df == {}  # no segment opened
     # scoring sees base docs only and never KeyErrors on orphan docids
     q = " ".join(pdf.iloc[0]["text"].split()[:2])
     for docid, _ in searcher.search(q, k=5):
@@ -147,7 +147,7 @@ def test_torn_segment_invisible_to_readers(spark, tmp_path):
     # the retry heals: recommit, readers see the segment again
     append_batch(spark, store, spark.createDataFrame(pdf.iloc[cut:]), 0)
     assert read_segments(spark, store, SEG_DOCS).count() == len(pdf) - cut
-    assert FreshSearcher(root).fresh_num_docs == len(pdf)
+    assert FreshSearcher(root).num_docs == len(pdf)
 
 
 def test_span_policy_persists_and_governs_appends(spark, tmp_path):
@@ -347,8 +347,8 @@ def test_fresh_search_equals_rebuild(spark, tmp_path):
 
     oracle = OracleIndex.build(pdf)
     searcher = FreshSearcher(root)
-    assert searcher.fresh_num_docs == oracle.num_docs
-    assert abs(searcher.fresh_avgdl - oracle.avgdl) < 1e-9
+    assert searcher.num_docs == oracle.num_docs
+    assert abs(searcher.avgdl - oracle.avgdl) < 1e-9
     for query in ["w000001", "w000002 w000345", "w000003 w000001 w001234", "zz none"]:
         got = searcher.search(query, k=10)
         exp = oracle.topk(query, 10)
@@ -359,4 +359,4 @@ def test_fresh_search_equals_rebuild(spark, tmp_path):
     from ciff_spark.serve import LocalSearcher
 
     base_only = LocalSearcher(root)
-    assert base_only.num_docs < searcher.fresh_num_docs
+    assert base_only.num_docs < searcher.num_docs

@@ -11,11 +11,15 @@ from ciff_spark.functions.scoring import idf_np, tfnorm_np
 from ciff_spark.wand import exhaustive_topk, wand_topk
 
 
-def _brute(lists, dl, start, avgdl, k, round_decimals=None, allowed=None):
+def _brute(lists, dl, start, avgdl, k, round_decimals=None, allowed=None,
+           scoring="bm25"):
     scores: dict[int, float] = {}
     for idf, blocks in lists:
         d, tf = decode_postings(blocks)
-        contrib = idf * tfnorm_np(tf, dl[d - start], avgdl)
+        if scoring == "impact":
+            contrib = idf * tf.astype(np.float64)
+        else:
+            contrib = idf * tfnorm_np(tf, dl[d - start], avgdl)
         for dd, c in zip(d.tolist(), contrib.tolist()):
             scores[dd] = scores.get(dd, 0.0) + c
     if round_decimals is not None:
@@ -202,6 +206,8 @@ def _sharded_list(rng, n_docs, df, dl, avgdl, cuts):
     blocks, prevs = [], []
     for lo, hi in zip([0, *cuts], [*cuts, n_docs]):
         m = (docids >= lo) & (docids < hi)
+        if not m.any():
+            continue  # a shard without the term has no row for it
         shard = encode_postings(docids[m], tfs[m], doclens=dl[docids[m]], avgdl=avgdl,
                                 block_size=4)
         prevs += [-1] + [int(blk["max_docid"]) for blk in shard[:-1]]
@@ -233,6 +239,83 @@ def test_wand_many_intervals_sharded_filtered_rounded(k):
                            initial_theta=theta, allowed=allowed)
         assert gd.tolist() == ed
         np.testing.assert_array_equal(gs, es)
+
+
+def _fresh_list(rng, n_base, dl, enc_avgdl, seg_cuts):
+    """One term's list over a base index plus streaming segments, twice:
+    encoded whole (for ``_brute``) and as served fresh — ``_sharded_list``
+    base shards (exact bounds at ``enc_avgdl``) followed by one dl-free
+    tail per segment over the docid continuation, each row decoding from
+    −1. Returns (whole, served, df), or None when the term drew no postings."""
+    empty = np.empty(0, np.int64)
+    base_d, base_tf, blocks, prevs = empty, empty, [], []
+    df_base = int(rng.integers(0, max(2, n_base // int(rng.choice([2, 10, 50])))))
+    if df_base:
+        cuts = sorted(rng.choice(np.arange(1, n_base), int(rng.integers(0, 3)), replace=False))
+        (_, whole), (_, blocks, prevs) = _sharded_list(rng, n_base, df_base, dl, enc_avgdl,
+                                                       [int(c) for c in cuts])
+        base_d, base_tf = decode_postings(whole)
+        prevs = prevs.tolist()
+    seg_d, seg_tf = [base_d], [base_tf]
+    for lo, hi in zip(seg_cuts[:-1], seg_cuts[1:]):
+        n = int(rng.integers(0, hi - lo + 1))
+        if n == 0:
+            continue  # a segment without the term writes no row for it
+        d = np.sort(rng.choice(np.arange(lo, hi), n, replace=False)).astype(np.int64)
+        tf = rng.integers(1, 6, n)
+        tail = encode_postings(d, tf, block_size=int(rng.choice([2, 4, 16])))
+        prevs += [-1] + [int(b["max_docid"]) for b in tail[:-1]]
+        blocks += tail
+        seg_d.append(d)
+        seg_tf.append(tf)
+    d, tf = np.concatenate(seg_d), np.concatenate(seg_tf)
+    if len(d) == 0:
+        return None
+    return encode_postings(d, tf), (blocks, np.array(prevs, np.int64)), len(d)
+
+
+@pytest.mark.parametrize("chunk", range(4))
+def test_fresh_shape_fuzz(chunk):
+    """The list shape fresh serving scores: base shards with exact bounds
+    at the encode avgdl, concatenated with 0–3 dl-free segment tails over
+    the docid continuation, scored at a fresh avgdl above the encode one
+    with ``bound_scale = max(1, drift)``. ``wand_topk`` and
+    ``exhaustive_topk`` (with ``decode_prevs``) equal brute force across
+    allowed masks spanning base and segment docids, rounding, bm25 and
+    impact scoring and k from 1 to 100 — 50 seeded cases per chunk."""
+    for seed in range(50 * chunk, 50 * (chunk + 1)):
+        rng = np.random.default_rng(seed)
+        n_base = int(rng.integers(20, 1500))
+        n_segs = int(rng.integers(0, 4))
+        seg_cuts = np.cumsum([n_base] + [int(rng.integers(1, 200)) for _ in range(n_segs)])
+        n_total = int(seg_cuts[-1])
+        dl = rng.integers(5, 80, n_total).astype(np.uint32)
+        enc_avgdl = float(dl[:n_base].mean())
+        drift = float(rng.uniform(1.0, 1.6))
+        avgdl = enc_avgdl * drift
+        scoring = str(rng.choice(["bm25", "impact"]))
+        rd = [None, 6][int(rng.integers(2))]
+        allowed = rng.random(n_total) < rng.uniform(0.2, 1.0) if rng.random() < 0.5 else None
+        k = int(rng.integers(1, 101))
+        whole, served = [], []
+        for _ in range(int(rng.integers(1, 5))):
+            got = _fresh_list(rng, n_base, dl, enc_avgdl, seg_cuts.tolist())
+            if got is None:
+                continue
+            w_blocks, (blocks, prevs), df = got
+            w = 1.0 if scoring == "impact" else float(idf_np(df, n_total))
+            whole.append((w, w_blocks))
+            served.append((w, blocks, prevs))
+        case = (seed, scoring, rd, k, n_segs)
+        ed, es = _brute(whole, dl, 0, avgdl, k, round_decimals=rd, allowed=allowed,
+                        scoring=scoring)
+        gd, gs = wand_topk(served, dl, 0, avgdl, k, round_decimals=rd,
+                           bound_scale=max(1.0, drift) if scoring == "bm25" else 1.0,
+                           scoring=scoring, allowed=allowed)
+        xd, xs = exhaustive_topk(served, dl, 0, avgdl, k, round_decimals=rd,
+                                 scoring=scoring, allowed=allowed)
+        assert gd.tolist() == xd.tolist() == ed, case
+        assert gs.tolist() == xs.tolist() == es, case
 
 
 def test_wand_selective_query_decodes_a_fraction():
