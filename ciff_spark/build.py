@@ -26,11 +26,12 @@ shuffle on (pgroup = hash(term) % n_pgroups, shard = docid // shard_size),
 one fused Arrow kernel per partition (dictionary-encode, lex-rank, integer
 lexsort, run-length tf combine, ``codec.encode_arrow_batch``), one
 clustering exchange of the ENCODED rows on pgroup (one file per pgroup)
-and a (pgroup, term, shard) sort, so every file is term-ordered. The
-composite occurrence partition key is the structural skew handling: every
-(term, shard) encode group stays whole in one partition, but a Zipf-hot
-term's stream spreads across its docid shards — never one reducer — and
-the per-term merge stays concatenation in shard order.
+and a (pgroup, term, shard) sort, so every file is term-ordered; written
+with ``POSTINGS_WRITE_OPTIONS``, its 1024-row groups form a footer
+lexicon. The composite occurrence partition key is the structural skew
+handling: every (term, shard) encode group stays whole in one partition,
+but a Zipf-hot term's stream spreads across its docid shards — never one
+reducer — and the per-term merge stays concatenation in shard order.
 
 Checkpoint/resume: postings are written in pgroup *batches*; each completed
 batch appends a manifest row to ``_lineage``. A resumed build deletes the
@@ -90,6 +91,20 @@ class BuildConfig:
 POSTINGS_SCHEMA = (
     f"term string, shard int, df bigint, cf bigint, blocks array<{BLOCK_SCHEMA}>"
 )
+
+#: parquet-mr options every postings writer passes with the encode stage's
+#: frame (``.write.options(**POSTINGS_WRITE_OPTIONS)``). Bounded row groups
+#: make each file's footer a term lexicon: the rows are term-sorted, so a
+#: group's (min, max) ``term`` addresses its terms and a reader fetches only
+#: the groups that cover its query (``serve.LocalSearcher``). Dictionary
+#: pages are off on every column: that pays for the smaller groups (the
+#: blob columns alone fall back to plain pages anyway). Measured on the
+#: benchmark's build corpus: 1024-row groups shrink the index 4% against
+#: one group per file, 512-row groups grow it 6%.
+POSTINGS_WRITE_OPTIONS = {
+    "parquet.block.row.count.limit": "1024",
+    "parquet.enable.dictionary": "false",
+}
 
 
 def _tokens_col(cfg: BuildConfig):
@@ -274,7 +289,9 @@ def build_index(
                     src, n_pgroups=cfg.n_pgroups, shard_size=shard_size, dl=dl,
                     avgdl=avgdl, block_size=cfg.block_size,
                     block_span=cfg.block_span, span_adaptive=cfg.span_adaptive,
-                ).write.mode("append").partitionBy("pgroup").parquet(store.path("postings"))
+                ).write.options(**POSTINGS_WRITE_OPTIONS).mode("append").partitionBy(
+                    "pgroup"
+                ).parquet(store.path("postings"))
                 wall = int((time.time() - t0) * 1000)
                 # manifest AFTER the data commit → a crash between the two re-runs
                 # the batch; the cleanup above makes that idempotent
@@ -369,7 +386,8 @@ def _encode_postings(
        (a bare partitionBy write opened one file per (task, pgroup):
        measured 1601 ~21 KB files for a 34 MB table);
     4. sortWithinPartitions(pgroup, term, shard): each file holds its rows
-       in term order, so parquet row-group term stats can prune."""
+       in term order, so with ``POSTINGS_WRITE_OPTIONS`` its row groups
+       cover ascending, disjoint term ranges that the footer addresses."""
     sc = rows.sparkSession.sparkContext
     dl_bc = sc.broadcast(dl) if dl is not None else None
     pgroup = _pgroup_expr(n_pgroups)

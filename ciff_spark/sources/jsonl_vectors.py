@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ciff_spark.build import (
+    POSTINGS_WRITE_OPTIONS,
     _encode_postings,
     _table_num_rows,
     _write_shard_sizes,
@@ -264,7 +265,9 @@ def _write_tables(
         _encode_postings(
             tf, n_pgroups=n_pgroups, shard_size=shard_size, dl=None, avgdl=avgdl,
             block_size=block_size, block_span=BLOCK_SPAN, span_adaptive=True,
-        ).write.mode("append").partitionBy("pgroup").parquet(store.path("postings"))
+        ).write.options(**POSTINGS_WRITE_OPTIONS).mode("append").partitionBy(
+            "pgroup"
+        ).parquet(store.path("postings"))
     finally:
         # surface a failed concurrent write; never race one — and never let
         # the first future's failure skip draining the second or shutting

@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 
 from ciff_spark.build import (
     POSTINGS_SCHEMA,
+    POSTINGS_WRITE_OPTIONS,
     BuildConfig,
     _dl_array,
     _encode_postings,
@@ -160,16 +161,18 @@ def _commit_segment(
     could undershoot the true tfnorm — dl-free stays a true upper bound
     under any future avgdl; compaction re-encodes with exact bounds. The
     encode parallelism follows the base's n_pgroups; the rows land flat in
-    ``seg_postings/seg_<id>`` (no pgroup dirs)."""
+    ``seg_postings/seg_<id>`` (no pgroup dirs), each file term-sorted."""
     meta = store.meta_local() if store.exists("meta") else {}
     bspan, badapt = _span_policy(meta)
     _encode_postings(
         rows, n_pgroups=int(meta.get("n_pgroups") or BuildConfig.n_pgroups),
         shard_size=_SEGMENT_SHARD_SIZE, dl=None, avgdl=0.0,
         block_size=int(block_size), block_span=bspan, span_adaptive=badapt,
-    ).drop("pgroup").withColumn("segment", F.lit(int(batch_id))).write.mode(
-        "overwrite"
-    ).parquet(f"{store.path(SEG_POSTINGS)}/seg_{int(batch_id)}")
+    ).drop("pgroup").sortWithinPartitions("term", "shard").withColumn(
+        "segment", F.lit(int(batch_id))
+    ).write.options(**POSTINGS_WRITE_OPTIONS).mode("overwrite").parquet(
+        f"{store.path(SEG_POSTINGS)}/seg_{int(batch_id)}"
+    )
     docs.withColumn("segment", F.lit(int(batch_id))).write.mode("overwrite").parquet(
         f"{store.path(SEG_DOCS)}/seg_{int(batch_id)}"
     )  # commit marker — LAST
@@ -493,7 +496,9 @@ def _fold_segments(spark: SparkSession, store: IndexStore) -> None:
         _encode_postings(
             rows, n_pgroups=n_pgroups, shard_size=shard_size, dl=dl, avgdl=avgdl2,
             block_size=block_size, block_span=bspan, span_adaptive=badapt,
-        ).write.mode("append").partitionBy("pgroup").parquet(store.path("postings"))
+        ).write.options(**POSTINGS_WRITE_OPTIONS).mode("append").partitionBy(
+            "pgroup"
+        ).parquet(store.path("postings"))
 
         # ---- docs: append the segment rows in the base column order ---------
         base_cols = [f.name for f in store.read(spark, "docs").schema.fields]

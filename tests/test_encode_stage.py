@@ -16,10 +16,10 @@ from ciff_spark.sources.transcripts import transcripts_df, transcripts_pdf
 from ciff_spark.store import IndexStore
 
 
-def _vector_rows(spark, n_docs=300, seed=3):
+def _vector_rows(spark, n_docs=300, seed=3, vocab=200):
     rng = np.random.default_rng(seed)
     recs = [
-        (str(d), d, f"v{int(t) % 200}", float(rng.uniform(0.5, 9.0)))
+        (str(d), d, f"v{int(t) % vocab}", float(rng.uniform(0.5, 9.0)))
         for d in range(n_docs)
         for t in rng.zipf(1.3, int(rng.integers(1, 20)))
     ]
@@ -62,6 +62,55 @@ def test_postings_files_are_term_sorted(spark, tmp_path, source):
         # the fold appended a second file to (at least) one pgroup dir
         assert len(glob.glob(f"{root}/postings/pgroup=*/*.parquet")) > 2
     _assert_files_term_sorted(root)
+
+
+@pytest.mark.parametrize("source", ["build", "vector", "segment", "compact"])
+def test_postings_row_groups_bounded(spark, tmp_path, source):
+    """Every postings and segment postings file is a term lexicon in its
+    footer: row groups of at most 1024 rows (so a file above that has
+    several), no dictionary pages, and ascending, disjoint ``term`` ranges
+    from group to group. One pgroup puts every row of a build in one file,
+    so the files are large enough to need several groups."""
+    from ciff_spark.streaming.incremental import append_batch, compact_segments
+
+    root = str(tmp_path / source)
+    if source == "vector":
+        build_index_from_vector_rows(
+            spark, _vector_rows(spark, 600, vocab=2000), root, n_shards=4, n_pgroups=1,
+        )
+    else:
+        build_index(
+            transcripts_df(spark, 30, seed=9, partitions=2), root,
+            config=BuildConfig(n_shards=4, n_pgroups=1), resume=False,
+        )
+    if source in ("segment", "compact"):
+        seg = transcripts_pdf(30, seed=10)
+        seg["conv_id"] = "s_" + seg["conv_id"]
+        append_batch(spark, IndexStore(root), spark.createDataFrame(seg), 0)
+    if source == "compact":
+        compact_segments(spark, root)
+        assert len(glob.glob(f"{root}/postings/pgroup=*/*.parquet")) == 2
+    table = "seg_postings/seg_*" if source == "segment" else "postings/pgroup=*"
+    files = glob.glob(f"{root}/{table}/*.parquet")
+    assert files
+    sizes = []
+    for f in files:
+        md = papq.ParquetFile(f).metadata
+        groups = [md.row_group(i) for i in range(md.num_row_groups)]
+        sizes.append(md.num_rows)
+        assert all(g.num_rows <= 1024 for g in groups), f
+        assert md.num_rows <= 1024 or len(groups) > 1, f
+        for g in groups:
+            for j in range(g.num_columns):
+                enc = g.column(j).encodings
+                assert not any("DICTIONARY" in e for e in enc), (f, g.column(j).path_in_schema, enc)
+        ranges = [(g.column(0).statistics.min, g.column(0).statistics.max) for g in groups]
+        assert groups[0].column(0).path_in_schema == "term"
+        assert all(lo <= hi for lo, hi in ranges), f
+        # ascending and disjoint, except that one term's (term, shard) rows
+        # may straddle a cut: then it is both one group's max and the next's min
+        assert all(a[1] <= b[0] for a, b in zip(ranges, ranges[1:])), (f, ranges)
+    assert max(sizes) > 1024  # the fixture really spans several groups
 
 
 def test_write_shard_sizes_rejects_docid_gap(spark, tmp_path):

@@ -219,3 +219,155 @@ def test_fresh_lazy_term_stats_identical(segmented, monkeypatch):
             assert got == eager.search(q, k=10, prune=prune), q
     assert lazy.search(seg_only, k=10)
     assert lazy._df[seg_only] == 0 and seg_only not in lazy._pg
+
+
+# ---------------------------------------------------------------------------
+# the footer lexicon: a cold query reads only the row groups of its terms
+# ---------------------------------------------------------------------------
+
+def _spy_row_group_reads(monkeypatch) -> list[tuple[int, list[int]]]:
+    """Record (row groups in the file, groups read) per
+    ``ParquetFile.read_row_groups`` call."""
+    import pyarrow.parquet as pq
+
+    calls = []
+    read = pq.ParquetFile.read_row_groups
+
+    def spy(self, row_groups, *args, **kwargs):
+        calls.append((self.metadata.num_row_groups, list(row_groups)))
+        return read(self, row_groups, *args, **kwargs)
+
+    monkeypatch.setattr(pq.ParquetFile, "read_row_groups", spy)
+    return calls
+
+
+def _vocab_sample(root: str, n: int) -> list[str]:
+    """``n`` terms spread evenly over the sorted base vocabulary."""
+    import pyarrow.parquet as pq
+
+    terms = sorted(pq.read_table(f"{root}/term_stats", columns=["term"])["term"].to_pylist())
+    return [terms[i] for i in np.linspace(0, len(terms) - 1, n).astype(int)]
+
+
+def test_one_term_query_reads_at_most_two_row_groups(spark, tmp_path, monkeypatch):
+    """A cold one-term query reads at most the two row groups its rows can
+    straddle in each file it touches, on files of several groups, and
+    ranks exactly as the unpruned kernel and ``IndexReader`` exact."""
+    from ciff_spark.query import IndexReader
+
+    root = str(tmp_path / "idx")
+    build_index(
+        transcripts_df(spark, 40, seed=21, partitions=2), root,
+        config=BuildConfig(n_shards=4, n_pgroups=2, block_size=16), resume=False,
+    )
+    terms = _vocab_sample(root, 12)
+    exact: dict[int, list] = {}
+    for r in IndexReader(spark, root).topk(list(enumerate(terms)), k=10, mode="exact").collect():
+        exact.setdefault(r["qid"], []).append((r["docid"], r["score"]))
+    calls = _spy_row_group_reads(monkeypatch)
+    for qid, t in enumerate(terms):
+        n = len(calls)
+        got = LocalSearcher(root).search(t, k=10)
+        assert calls[n:] and all(len(groups) <= 2 for _, groups in calls[n:]), t
+        assert got == LocalSearcher(root).search(t, k=10, prune=False), t
+        want = sorted(exact[qid], key=lambda x: (-x[1], x[0]))
+        assert [d for d, _ in got] == [d for d, _ in want], t
+        assert np.allclose([s for _, s in got], [s for _, s in want], rtol=1e-12), t
+    assert max(n_groups for n_groups, _ in calls) > 2
+    # close releases the files the lexicon holds; a later miss reopens them
+    s = LocalSearcher(root)
+    first = s.search(terms[0], k=10)
+    held = [pf for lex in s._lex.values() for pf, _ in lex]
+    s.close()
+    assert held and all(pf.closed for pf in held) and s._lex == {}
+    assert s.search(terms[1], k=10) == LocalSearcher(root).search(terms[1], k=10)
+    assert s.search(terms[0], k=10) == first
+
+
+def test_lexicon_serves_legacy_layouts_identically(segmented, tmp_path):
+    """Indexes written before bounded row groups stay correct with no
+    fallback path: postings rewritten as ONE shuffled row group per pgroup,
+    one file without statistics, serve exactly as the original through
+    ``LocalSearcher`` and ``FreshSearcher``."""
+    import glob
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from ciff_spark.serve import FreshSearcher
+
+    legacy = str(tmp_path / "legacy")
+    shutil.copytree(segmented, legacy)
+    rng = np.random.default_rng(5)
+    dirs = sorted(glob.glob(f"{legacy}/postings/pgroup=*"))
+    for i, d in enumerate(dirs):
+        files = glob.glob(f"{d}/*.parquet")
+        t = pq.read_table(files)
+        t = t.take(rng.permutation(t.num_rows))
+        for f in files:
+            os.remove(f)
+        pq.write_table(t, f"{d}/part-0.parquet", row_group_size=t.num_rows,
+                       write_statistics=i != 0)
+        md = pq.ParquetFile(f"{d}/part-0.parquet").metadata
+        assert md.num_row_groups == 1
+        assert (md.row_group(0).column(0).statistics is None) == (i == 0)
+    terms = _vocab_sample(segmented, 30)
+    queries = QUERIES + [" ".join(terms[i::7]) for i in range(7)] + terms[::3]
+    for cls in (LocalSearcher, FreshSearcher):
+        new, old = cls(segmented), cls(legacy)
+        for q in queries:
+            for prune in (True, False):
+                assert old.search(q, k=10, prune=prune) == new.search(q, k=10, prune=prune), (
+                    cls.__name__, q, prune,
+                )
+
+
+def test_lexicon_orders_non_ascii_terms_like_str(spark, tmp_path, monkeypatch):
+    """An impact index with non-ASCII terms: footer min/max (unsigned UTF-8
+    byte order) agree with Python ``str`` order — including U+FF5A vs
+    U+1F600, which UTF-16 order would swap — and every term fetches exactly
+    its rows."""
+    import glob
+
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    from ciff_spark import serve
+    from ciff_spark.sources.jsonl_vectors import build_index_from_vector_rows
+
+    odd = ["é", "éa", "ÿ", "Ω", "日本", "ｚ", "\U0001f600", "z", "Z", "a b"]
+    vocab = [f"v{i:04d}" for i in range(1200)] + odd
+    rng = np.random.default_rng(11)
+    recs = [
+        (str(d), d, vocab[int(t)], float(rng.uniform(0.5, 9.0)))
+        for d in range(400)
+        for t in set(rng.integers(0, len(vocab), 12).tolist()) | {1200 + d % len(odd)}
+    ]
+    root = str(tmp_path / "impact")
+    build_index_from_vector_rows(
+        spark, spark.createDataFrame(pd.DataFrame(recs, columns=["ext_id", "pos", "term", "score"])),
+        root, n_shards=2, n_pgroups=1, block_size=8,
+    )
+    (f,) = glob.glob(f"{root}/postings/pgroup=*/*.parquet")
+    pf = pq.ParquetFile(f)
+    assert pf.metadata.num_row_groups > 1
+    prev_max = None
+    for i in range(pf.metadata.num_row_groups):
+        st = pf.metadata.row_group(i).column(0).statistics
+        got = pf.read_row_group(i, columns=["term"])["term"].to_pylist()
+        assert (st.min, st.max) == (min(got), max(got)) and got == sorted(got)
+        assert prev_max is None or prev_max <= st.min  # equal: a term's shards straddle the cut
+        prev_max = st.max
+    full = pq.read_table(f, columns=["term", "blocks"]).to_pylist()
+    searcher = LocalSearcher(root)
+    for t in odd + vocab[::97]:
+        rows = sorted((r for r in full if r["term"] == t), key=lambda r: r["blocks"][0]["max_docid"])
+        assert rows, t
+        got = searcher._fetch_lists([t])[t][0]
+        assert got == [b for r in rows for b in r["blocks"]], t
+    # the same terms through search (whitespace tokens, impact scoring)
+    monkeypatch.setattr(serve, "tokenize_py", lambda q: q.split("|"))
+    q = "|".join(odd)
+    got = LocalSearcher(root).search(q, k=20, scoring="impact")
+    assert got and got == searcher.search(q, k=20, scoring="impact", prune=False)

@@ -139,7 +139,8 @@ def test_torn_segment_invisible_to_readers(spark, tmp_path):
     assert read_segments(spark, store, SEG_DOCS).count() == 0
     searcher = FreshSearcher(root)
     assert searcher.num_docs == len(searcher.dl) == cut  # base only — no skewed stats
-    assert searcher._seg_ds is None and searcher._seg_df == {}  # no segment opened
+    # no segment opened: no segment table, term column or df
+    assert searcher._seg is None and searcher._seg_terms is None and searcher._seg_df == {}
     # scoring sees base docs only and never KeyErrors on orphan docids
     q = " ".join(pdf.iloc[0]["text"].split()[:2])
     for docid, _ in searcher.search(q, k=5):
