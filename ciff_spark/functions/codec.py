@@ -37,10 +37,12 @@ north-rule mandates:
   no per-value Python in the hot path.
 
 Everything here is pure NumPy over host memory; Spark invokes it inside
-Arrow-vectorized UDFs (``applyInPandas`` / ``mapInArrow``).
+Arrow-vectorized UDFs (``applyInArrow`` / ``mapInArrow``).
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 import numpy as np
 
@@ -166,23 +168,35 @@ def varint_encode(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
 
 
 def varint_decode(buf: bytes | np.ndarray, count: int | None = None) -> np.ndarray:
-    """Decode a LEB128 byte buffer to uint64 values (vectorized)."""
+    """Decode a LEB128 byte buffer to uint64 values (vectorized: one
+    ``add.reduceat`` over the bytes' shifted 7-bit groups, a plain widen when
+    every value is one byte). ``count`` (when given) must equal the number
+    of values; a stream ending inside a varint raises."""
     b = np.frombuffer(buf, dtype=np.uint8) if isinstance(buf, (bytes, bytearray, memoryview)) else np.asarray(buf, np.uint8)
     if b.size == 0:
-        return np.empty(0, np.uint64)
-    is_last = (b & 0x80) == 0
-    n = int(is_last.sum())
+        n = 0
+    elif b[-1] & 0x80:
+        raise ValueError("varint stream ends inside a value")
+    else:
+        last = np.flatnonzero(b < 0x80)
+        n = last.size
     if count is not None and count != n:
         raise ValueError(f"varint stream holds {n} values, expected {count}")
-    val_idx = np.zeros(b.size, np.int64)
-    val_idx[1:] = np.cumsum(is_last)[:-1]
-    starts = np.zeros(n, np.int64)
-    last_pos = np.flatnonzero(is_last)
-    starts[1:] = last_pos[:-1] + 1
-    k = (np.arange(b.size) - starts[val_idx]).astype(np.uint64)
-    vals = np.zeros(n, np.uint64)
-    np.add.at(vals, val_idx, (b & np.uint64(0x7F)).astype(np.uint64) << (np.uint64(7) * k))
-    return vals
+    if n == b.size:
+        return b.astype(np.uint64)
+    starts = np.empty(n, np.int64)
+    starts[0] = 0
+    starts[1:] = last[:-1] + 1
+    k = np.arange(b.size) - np.repeat(starts, last - starts + 1)
+    shifted = (b & np.uint8(0x7F)).astype(np.uint64) << (np.uint64(7) * k.astype(np.uint64))
+    return np.add.reduceat(shifted, starts)
+
+
+def concat_ranges(lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
+    """Indices of the concatenated half-open ranges ``[lo[i], hi[i])``."""
+    lens = hi - lo
+    out_start = np.cumsum(lens) - lens
+    return np.arange(int(lens.sum()), dtype=np.int64) + np.repeat(lo - out_start, lens)
 
 
 # ---------------------------------------------------------------------------
@@ -456,24 +470,157 @@ def decode_block(
     return docids, tfs
 
 
-def decode_block_dict(blk: dict, prev_max_docid: int) -> tuple[np.ndarray, np.ndarray]:
-    """``decode_block`` over a block mapping (dict / pyarrow struct scalar /
-    Spark Row) — the one decode entry point every reader should use."""
-    return decode_block(
-        blk["docs_bin"], blk["tfs_bin"], blk["count"], prev_max_docid,
-        blk["max_docid"], blk["max_tf"],
-    )
-
-
 def decode_postings(blocks: list[dict]) -> tuple[np.ndarray, np.ndarray]:
-    """Decode a full posting list from its blocks."""
+    """Decode a full posting list from its blocks, one block at a time (the
+    reference the batch decoder ``decode_blocks`` is tested against)."""
     if not blocks:
         return np.empty(0, np.int64), np.empty(0, np.int64)
     doc_parts, tf_parts = [], []
     prev_max = -1
     for blk in blocks:
-        d, t = decode_block_dict(blk, prev_max)
+        d, t = decode_block(
+            blk["docs_bin"], blk["tfs_bin"], blk["count"], prev_max,
+            blk["max_docid"], blk["max_tf"],
+        )
         doc_parts.append(d)
         tf_parts.append(t)
         prev_max = int(blk["max_docid"])
     return np.concatenate(doc_parts), np.concatenate(tf_parts)
+
+
+# ---------------------------------------------------------------------------
+# columnar blocks: Arrow list<struct<BLOCK_SCHEMA>> rows → numpy, batch decode
+# ---------------------------------------------------------------------------
+
+class BlockColumns(NamedTuple):
+    """The blocks of consecutive ``list<struct<BLOCK_SCHEMA>>`` rows as
+    owned numpy arrays, one entry per block in row order. ``prev`` is each
+    block's decode base (−1 at a row's first block, else the previous
+    block's ``max_docid``); null ``min_docid`` reads −1, null ``max_tfnorm``
+    NaN. ``docs``/``tfs`` hold the rows' concatenated bins, block ``i``'s
+    bytes at ``[docs_off[i], docs_off[i + 1])``; row ``r``'s blocks are
+    ``[row_off[r], row_off[r + 1])``."""
+
+    count: np.ndarray
+    min_docid: np.ndarray
+    max_docid: np.ndarray
+    max_tf: np.ndarray
+    max_tfnorm: np.ndarray
+    prev: np.ndarray
+    docs: np.ndarray
+    docs_off: np.ndarray
+    tfs: np.ndarray
+    tfs_off: np.ndarray
+    row_off: np.ndarray
+
+
+def owned_bytes(arr) -> tuple[np.ndarray, np.ndarray]:
+    """(data, offsets from 0) of a binary array, the data COPIED out of the
+    array's buffer: a slice of a row-group read would otherwise keep the
+    whole group's bytes alive."""
+    import pyarrow as pa
+
+    bufs = arr.buffers()
+    odt = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    off = np.frombuffer(bufs[1], odt)[arr.offset : arr.offset + len(arr) + 1].astype(np.int64)
+    if bufs[2] is None or off[-1] == off[0]:
+        return np.empty(0, np.uint8), off - off[0]
+    return np.frombuffer(bufs[2], np.uint8)[off[0] : off[-1]].copy(), off - off[0]
+
+
+def _numeric(arr, dtype, null) -> np.ndarray:
+    """An owned ``dtype`` copy of a numeric Arrow array, nulls read as
+    ``null``."""
+    bufs = arr.buffers()
+    n = len(arr)
+    vals = np.frombuffer(bufs[1], arr.type.to_pandas_dtype())[arr.offset : arr.offset + n]
+    if not arr.null_count:
+        return vals.astype(dtype)
+    bits = np.unpackbits(np.frombuffer(bufs[0], np.uint8), bitorder="little")
+    return np.where(bits[arr.offset : arr.offset + n].astype(bool), vals, null).astype(dtype)
+
+
+def block_columns(rows) -> BlockColumns:
+    """``BlockColumns`` of a ``list<struct<BLOCK_SCHEMA>>`` array (Array or
+    ChunkedArray, non-null rows) — buffer reads and copies, no per-block
+    Python."""
+    import pyarrow as pa
+
+    if isinstance(rows, pa.ChunkedArray):
+        rows = rows.combine_chunks()
+    offsets = rows.offsets.to_numpy().astype(np.int64)
+    blocks = rows.values.slice(offsets[0], offsets[-1] - offsets[0])
+    fields = blocks.flatten()
+
+    def col(name, dtype=np.int64, null=-1):
+        i = blocks.type.get_field_index(name)
+        if i < 0:  # written before the field existed
+            return np.full(len(blocks), null, dtype)
+        return _numeric(fields[i], dtype, null)
+
+    row_off = offsets - offsets[0]
+    max_docid = col("max_docid")
+    prev = np.empty_like(max_docid)
+    prev[1:] = max_docid[:-1]
+    prev[row_off[:-1][row_off[:-1] < len(prev)]] = -1
+    docs, docs_off = owned_bytes(fields[blocks.type.get_field_index("docs_bin")])
+    tfs, tfs_off = owned_bytes(fields[blocks.type.get_field_index("tfs_bin")])
+    return BlockColumns(
+        col("count"), col("min_docid"), max_docid, col("max_tf"),
+        col("max_tfnorm", np.float64, np.nan), prev, docs, docs_off, tfs, tfs_off, row_off,
+    )
+
+
+def _varint_blocks(buf, off, sel, counts) -> np.ndarray:
+    """The values of blocks ``sel`` of one bin column in ONE ``varint_decode``
+    over their concatenated byte ranges. Each block must hold exactly its
+    ``counts`` values and end on a value's last byte — a mismatch raises
+    rather than shifting values into a neighbouring block."""
+    lo, hi = off[sel], off[sel + 1]
+    if len(sel) and (lo[1:] == hi[:-1]).all():
+        b = buf[lo[0] : hi[-1]]
+        lo, hi = lo - lo[0], hi - lo[0]
+    else:
+        b = buf[concat_ranges(lo, hi)]
+        hi = np.cumsum(hi - lo)
+        lo = hi - (off[sel + 1] - off[sel])
+    ends = np.zeros(b.size + 1, np.int64)
+    np.cumsum(b < 0x80, out=ends[1:])
+    if (ends[hi] - ends[lo] != counts).any() or (b.size and (b[hi - 1] >= 0x80).any()):
+        raise ValueError("a block's varint bytes do not hold its count of values")
+    return varint_decode(b, int(counts.sum())).astype(np.int64)
+
+
+def decode_blocks(cols: BlockColumns, sel: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(docids, tfs) of blocks ``sel`` (int block indices), concatenated in
+    ``sel`` order — the batch form of ``decode_block``: one varint pass per
+    bin column over all selected blocks, then one cumsum that restarts at
+    each block's decode base. Implicit single-posting blocks (count 1,
+    empty bins) come from their ``max_docid``/``max_tf``."""
+    sel = np.asarray(sel, np.int64)
+    cnt = cols.count[sel]
+    explicit = cols.docs_off[sel + 1] > cols.docs_off[sel]
+    ex = np.flatnonzero(explicit)
+    if ex.size:
+        bsel, ecnt = sel[ex], cnt[ex]
+        gaps = _varint_blocks(cols.docs, cols.docs_off, bsel, ecnt)
+        tf = _varint_blocks(cols.tfs, cols.tfs_off, bsel, ecnt)
+        # segmented cumsum: each block restarts from its decode base
+        run = np.cumsum(gaps)
+        first = np.cumsum(ecnt) - ecnt
+        d = run - np.repeat(run[first] - gaps[first] - cols.prev[bsel], ecnt)
+        if ex.size == sel.size:
+            return d, tf
+    single = np.flatnonzero(~explicit)
+    if (cnt[single] != 1).any():
+        raise ValueError("a block of several postings has no docs_bin")
+    post = np.zeros(sel.size + 1, np.int64)
+    np.cumsum(cnt, out=post[1:])
+    docids = np.empty(post[-1], np.int64)
+    tfs = np.empty(post[-1], np.int64)
+    docids[post[single]] = cols.max_docid[sel[single]]
+    tfs[post[single]] = cols.max_tf[sel[single]]
+    if ex.size:
+        at = concat_ranges(post[ex], post[ex + 1])
+        docids[at], tfs[at] = d, tf
+    return docids, tfs

@@ -21,6 +21,7 @@ round scores to ``SCORE_DECIMALS``.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -36,7 +37,7 @@ from ciff_spark.functions.scoring import (
 )
 from ciff_spark.functions.tokenizer import tokenize_expr, tokenize_py, tokenize_sql
 from ciff_spark.store import IndexStore
-from ciff_spark.wand import allowed_mask, exhaustive_topk, wand_topk
+from ciff_spark.wand import PostingList, allowed_mask, exhaustive_topk, wand_topk
 
 #: below this many docid shards, ``shared_theta`` seeding is skipped (the
 #: result is identical either way): the seed pass is an extra Spark job plus
@@ -377,46 +378,57 @@ class IndexReader:
         # impact bounds (max_tf) are avgdl-independent — no drift inflation
         bscale = 1.0 if scoring == "impact" else self.bound_scale
 
-        def score_shard(key, pdf):
+        def score_shard(table):
+            import pyarrow as pa
+            import pyarrow.compute as pc
+
             dl = dlb.value
             mask = None if allowed is None else allowed.value
-            # per-row caches shared ACROSS the qid loop: a batch's shared
-            # (hot) terms walk block geometry and decode once per task, not
-            # once per query. Keyed by (term, first-block max_docid), NOT
-            # term alone: a compacted index holds base + appended rows for
-            # the SAME (term, shard) with disjoint docid ranges — a
-            # term-keyed cache would serve one row's blocks for the other.
-            # Lists go to the kernels in key order, so a doc's score sums
-            # its terms in the same order whatever order the rows arrive in.
-            caches: dict[tuple, tuple[dict, dict]] = {}
-            frames = []
-            for qid, qg in pdf.groupby("qid"):
-                lists, gcs, dcs = [], [], []
-                rows = [
-                    ((r.term, int(r.blocks[0]["max_docid"])), r)
-                    for r in qg.itertuples(index=False)
-                ]
-                for key_, r in sorted(rows, key=lambda x: x[0]):
-                    gc, dc = caches.setdefault(key_, ({}, {}))
-                    lists.append((float(r.idf), r.blocks))
-                    gcs.append(gc)
-                    dcs.append(dc)
+            # one PostingList per row, shared ACROSS the qid loop: a batch's
+            # shared (hot) terms build, decode and walk block geometry once
+            # per task, not once per query. Keyed by (term, first-block
+            # max_docid), NOT term alone: a compacted index holds base +
+            # appended rows for the SAME (term, shard) with disjoint docid
+            # ranges. Lists go to the kernels in key order, so a doc's score
+            # sums its terms in the same order whatever order rows arrive in.
+            blocks = table["blocks"].combine_chunks()
+            first = pc.struct_field(pc.list_element(blocks, 0), "max_docid")
+            keys = zip(
+                table["term"].to_numpy(zero_copy_only=False).tolist(),
+                first.to_numpy().tolist(),
+            )
+            plists: dict[tuple, PostingList] = {}
+            by_qid: dict[int, list] = {}
+            for i, (qid, w, key) in enumerate(zip(
+                table["qid"].to_numpy().tolist(), table["idf"].to_numpy().tolist(), keys
+            )):
+                if key not in plists:
+                    plists[key] = PostingList(blocks.slice(i, 1))
+                by_qid.setdefault(qid, []).append((key, w))
+            qids, docids, scores = [], [], []
+            for qid, rows in sorted(by_qid.items()):
+                lists = [(w, plists[key]) for key, w in sorted(rows)]
                 if wand:
-                    seed = theta0.get(int(qid)) if theta0 else None
+                    seed = theta0.get(qid) if theta0 else None
                     d, s = wand_topk(
                         lists, dl, 0, avgdl, k, round_decimals, seed,
-                        decode_caches=dcs, bound_scale=bscale, scoring=scoring,
-                        geom_caches=gcs,
+                        bound_scale=bscale, scoring=scoring,
                     )
                 else:
                     d, s = exhaustive_topk(
                         lists, dl, 0, avgdl, k, round_decimals,
-                        decode_caches=dcs, scoring=scoring, allowed=mask,
+                        scoring=scoring, allowed=mask,
                     )
-                frames.append(pd.DataFrame({"qid": int(qid), "docid": d, "score": s}))
-            return pd.concat(frames, ignore_index=True)
+                qids.append(np.full(len(d), qid, np.int32))
+                docids.append(d)
+                scores.append(s)
+            return pa.table({
+                "qid": pa.array(np.concatenate(qids), pa.int32()),
+                "docid": pa.array(np.concatenate(docids), pa.int64()),
+                "score": pa.array(np.concatenate(scores), pa.float64()),
+            })
 
-        local = self._shard_partitioned(pq).groupBy("shard").applyInPandas(
+        local = self._shard_partitioned(pq).groupBy("shard").applyInArrow(
             score_shard, schema="qid int, docid bigint, score double"
         )
         if round_decimals is not None:

@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import glob
 from collections import OrderedDict
+from itertools import groupby
 
 import numpy as np
 import pyarrow as pa
@@ -33,16 +34,17 @@ import pyarrow.compute as pc
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 
+from ciff_spark.functions.codec import concat_ranges, owned_bytes
 from ciff_spark.functions.scoring import idf_np
 from ciff_spark.functions.tokenizer import tokenize_py
-from ciff_spark.wand import allowed_mask, exhaustive_topk, wand_topk
+from ciff_spark.wand import PostingList, allowed_mask, exhaustive_topk, wand_topk
 
 
 class LocalSearcher:
     # hot posting lists stay resident across queries (query logs are Zipf):
-    # raw blocks AND their decoded arrays cache per term, LRU-bounded BY
-    # BYTES (count alone is unbounded memory when hot terms carry millions
-    # of postings — each entry holds raw bins plus int64 decoded arrays).
+    # a term's PostingList (raw bins, block columns, decoded arrays) caches
+    # per term, LRU-bounded BY BYTES (count alone is unbounded memory when
+    # hot terms carry millions of postings).
     # The analog of PISA serving from an mmap'd index with the page cache
     # warm — here the decode work is cached too, which mmap alone can't give.
     CACHE_TERMS = 65536
@@ -59,12 +61,17 @@ class LocalSearcher:
         # by the sup drift ratio so WAND pruning stays sound (see wand.py)
         self._bounds_avgdl = float(meta.get("bounds_avgdl") or self.avgdl) or 1.0
         self.bound_scale = max(1.0, self.avgdl / self._bounds_avgdl)
-        # doclengths: one dense u32 array assembled from shard_sizes
-        ss = pq.read_table(f"{self.root}/shard_sizes").to_pylist()
+        # doclengths: one dense u32 array assembled from shard_sizes' runs
+        ss = pq.read_table(
+            f"{self.root}/shard_sizes", columns=["start_docid", "count", "dl_bin"]
+        )
+        starts = ss["start_docid"].to_numpy().astype(np.int64)
+        counts = ss["count"].to_numpy().astype(np.int64)
+        data, off = owned_bytes(ss["dl_bin"].combine_chunks())
+        if not np.array_equal(np.diff(off), 4 * counts):
+            raise ValueError(f"{self.root}/shard_sizes: dl_bin lengths do not match count")
         self.dl = np.zeros(self.num_docs, np.uint32)
-        for r in sorted(ss, key=lambda r: r["shard"]):
-            a = np.frombuffer(r["dl_bin"], dtype="<u4")
-            self.dl[r["start_docid"] : r["start_docid"] + r["count"]] = a
+        self.dl[concat_ranges(starts, starts + counts)] = data.view("<u4")
         # term stats: eager dict for ordinary vocabularies; above the
         # threshold, PER-TERM lazy lookups against the (term-sorted, so
         # row-group-prunable) term_stats parquet — a billion-term index must
@@ -78,16 +85,15 @@ class LocalSearcher:
             ts = pq.read_table(
                 f"{self.root}/term_stats",
                 columns=["term", "df"] + (["pgroup"] if self._has_pg else []),
-            ).to_pylist()
-            self._df = {r["term"]: int(r["df"]) for r in ts}
+            )
             # term → pgroup lets a query open the footer lexicon of ONLY
             # its terms' postings/pgroup=* dirs (≤|q| of them) instead of
             # every postings file's — the r2 serving regression. Older
             # indexes without the column fall back to one lexicon over all
             # files.
-            self._pg = (
-                {r["term"]: int(r["pgroup"]) for r in ts} if self._has_pg else None
-            )
+            self._df = {}
+            self._pg = {} if self._has_pg else None
+            self._add_stats(ts)
             self._lazy_stats = False
         else:
             self._df = {}
@@ -99,10 +105,9 @@ class LocalSearcher:
         self._seg: pa.Table | None = None
         self._seg_terms: np.ndarray | None = None
         self._seg_df: dict[str, int] = {}
-        # term → (blocks, prevs, decode_cache, geom_cache) — LRU over
-        # CACHE_TERMS/_BYTES; geom_cache persists the kernel's per-list
-        # block-geometry arrays across queries (keyed by scoring mode)
-        self._hot: OrderedDict[str, tuple] = OrderedDict()
+        # term → PostingList, LRU over CACHE_TERMS/_BYTES; a list keeps its
+        # decoded blocks and block geometry across queries
+        self._hot: OrderedDict[str, PostingList] = OrderedDict()
         self._hot_bytes: dict[str, int] = {}
         self._hot_total = 0
 
@@ -122,12 +127,17 @@ class LocalSearcher:
             columns=["term", "df"] + (["pgroup"] if self._has_pg else []),
             filter=pc.field("term").isin(missing),
         )
-        for r in tbl.to_pylist():
-            self._df[r["term"]] = int(r["df"])
-            if self._pg is not None:
-                self._pg[r["term"]] = int(r["pgroup"])
+        self._add_stats(tbl)
         for t in missing:
             self._df.setdefault(t, 0)
+
+    def _add_stats(self, tbl: pa.Table) -> None:
+        """Merge a term_stats (term, df[, pgroup]) table into the term →
+        df and term → pgroup maps: column reads, no per-row dicts."""
+        terms = tbl["term"].to_numpy(zero_copy_only=False).tolist()
+        self._df.update(zip(terms, tbl["df"].to_numpy().tolist()))
+        if self._pg is not None:
+            self._pg.update(zip(terms, tbl["pgroup"].to_numpy().tolist()))
 
     def _lexicon(self, pgroup: int | None) -> list[tuple]:
         """Footer lexicon of one pgroup's postings files, read on first
@@ -156,21 +166,17 @@ class LocalSearcher:
             pf.close()
         self._lex.clear()
 
-    def _fetch_lists(self, terms: list[str]):
-        """term → (blocks in docid order, decode_prevs, decode_cache,
-        geom_cache).
-        Each row's first block (a shard, a compaction append or a segment)
-        decodes from −1 (how it was encoded); later blocks chain on their
-        predecessor's max_docid. Served from the hot LRU when possible; a
-        missing term reads only the row groups whose footer range covers it
-        (a group without statistics is read), and its segment rows are a
+    def _fetch_lists(self, terms: list[str]) -> dict[str, PostingList]:
+        """term → its ``PostingList``, served from the hot LRU when possible.
+        A missing term reads only the row groups whose footer range covers
+        it (a group without statistics is read), and its segment rows are a
         slice of the term-sorted segment table."""
         self._resolve_stats(terms)
         # df=0 is the lazy path's "known absent" sentinel — never fetch those
         present = [t for t in terms if self._df.get(t) or self._seg_df.get(t)]
         if not present:
             return {}
-        out: dict[str, tuple[list, list, dict, dict]] = {}
+        out: dict[str, PostingList] = {}
         missing = []
         for t in present:
             hit = self._hot.get(t)
@@ -192,43 +198,22 @@ class LocalSearcher:
                         if r is None or any(r[0] <= t <= r[1] for t in ts)
                     ]
                     if groups:
-                        tbl = pf.read_row_groups(groups, columns=["term", "blocks"])
+                        # one or two groups per file: pyarrow's thread pool
+                        # costs more than it overlaps (~10-15% on a read)
+                        tbl = pf.read_row_groups(
+                            groups, columns=["term", "blocks"], use_threads=False
+                        )
                         parts.append(tbl.filter(pc.is_in(tbl["term"], pa.array(ts))))
             for t in missing:
                 if self._seg_df.get(t):
                     lo = int(np.searchsorted(self._seg_terms, t, "left"))
                     hi = int(np.searchsorted(self._seg_terms, t, "right"))
                     parts.append(self._seg.slice(lo, hi - lo))
-            # rows of one term cover disjoint docid ranges (shards,
-            # compaction's appended rows, segments) and must concatenate in
-            # ascending docid order for the block geometry (lo/hi chain) to
-            # stay valid: the first block's max_docid alone orders them
-            rows = sorted(
-                (r for tbl in parts for r in tbl.to_pylist()),
-                key=lambda r: int(r["blocks"][0]["max_docid"]) if r["blocks"] else -1,
-            )
-            for r in rows:
-                entry = out.get(r["term"])
-                if entry is None:
-                    entry = out[r["term"]] = ([], [], {}, {})
-                blocks, prevs, _cache, _geom = entry
-                prev = -1  # row-local chain starts at -1
-                for b in r["blocks"]:
-                    blocks.append(b)
-                    prevs.append(prev)
-                    prev = int(b["max_docid"])
-            for t in missing:
-                if t in out:
-                    self._hot[t] = out[t]
-                    # entry footprint: raw bins + the decoded int64 arrays the
-                    # cache will hold once filled (16 B per posting), charged
-                    # up front so eviction never lags the lazy decode
-                    sz = sum(
-                        len(b["docs_bin"]) + len(b["tfs_bin"]) + 16 * int(b["count"])
-                        for b in out[t][0]
-                    )
-                    self._hot_bytes[t] = sz
-                    self._hot_total += sz
+            fetched = _term_lists(pa.concat_tables(parts)) if parts else {}
+            for t, plist in fetched.items():
+                out[t] = self._hot[t] = plist
+                self._hot_bytes[t] = plist.nbytes
+                self._hot_total += plist.nbytes
             while self._hot and (
                 len(self._hot) > self.CACHE_TERMS
                 or self._hot_total > self.CACHE_BYTES
@@ -265,32 +250,27 @@ class LocalSearcher:
         if not lists_by_term:
             return []
         impact = scoring == "impact"
-        lists, caches, geoms = [], [], []
+        lists = []
         # sorted-term order, not cache order: a doc's contributions add in
         # list order, so a warm query sums them exactly as a cold one does
         for t in terms:
             if t not in lists_by_term:
                 continue
-            blocks, prevs, cache, geom = lists_by_term[t]
             df = self._df.get(t, 0) + self._seg_df.get(t, 0)
             w = 1.0 if impact else float(idf_np(df, self.num_docs))
-            lists.append((w, blocks, np.asarray(prevs, np.int64)))
-            caches.append(cache)
-            geoms.append(geom)
+            lists.append((w, lists_by_term[t]))
         mask = allowed_mask(allowed_docids, self.num_docs)
         if prune:
             d, s = wand_topk(
                 lists, self.dl, 0, self.avgdl, k,
-                round_decimals=round_decimals, decode_caches=caches,
+                round_decimals=round_decimals,
                 bound_scale=1.0 if impact else self.bound_scale,
                 stats=stats, scoring=scoring, allowed=mask,
-                geom_caches=geoms,
             )
         else:
             d, s = exhaustive_topk(
                 lists, self.dl, 0, self.avgdl, k,
-                round_decimals=round_decimals, decode_caches=caches,
-                scoring=scoring, allowed=mask,
+                round_decimals=round_decimals, scoring=scoring, allowed=mask,
             )
         return list(zip(d.tolist(), s.tolist()))
 
@@ -310,6 +290,24 @@ class LocalSearcher:
         return [
             self.search(q, k=k, stats=stats, scoring=scoring) for q in queries
         ]
+
+
+def _term_lists(tbl: pa.Table) -> dict[str, PostingList]:
+    """term → ``PostingList`` over a (term, blocks) table holding every row
+    of its terms. A term's rows (shards, compaction appends, segments)
+    cover disjoint docid ranges; ordered by first-block ``max_docid`` they
+    concatenate into one docid-ascending list."""
+    terms = tbl["term"].to_numpy(zero_copy_only=False).tolist()
+    first = pc.struct_field(pc.list_element(tbl["blocks"], 0), "max_docid")
+    keys = list(zip(terms, first.to_numpy().tolist()))
+    order = sorted(range(len(keys)), key=keys.__getitem__)
+    blocks = tbl["blocks"].take(pa.array(order, pa.int64())).combine_chunks()
+    out, r0 = {}, 0
+    for t, rows in groupby(terms[i] for i in order):
+        n = sum(1 for _ in rows)
+        out[t] = PostingList(blocks.slice(r0, n))
+        r0 += n
+    return out
 
 
 class FreshSearcher(LocalSearcher):

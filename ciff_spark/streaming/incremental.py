@@ -58,7 +58,7 @@ from ciff_spark.build import (
     _write_table_local,
     build_index,
 )
-from ciff_spark.functions.codec import BLOCK_SPAN, decode_postings
+from ciff_spark.functions.codec import BLOCK_SPAN, block_columns, decode_blocks
 from ciff_spark.functions.tokenizer import tokenize_expr
 from ciff_spark.plans.rank import add_dense_docid, release_rank_cache
 from ciff_spark.store import IndexStore
@@ -393,19 +393,23 @@ def compact_segments(
 
 def _decode_segment_rows(iterator):
     """Segment postings ``(term, blocks)`` → one ``(term, docid, tf)`` row
-    per posting — a narrow decode, no exchange."""
+    per posting — a narrow decode, no exchange: each record batch's blocks
+    decode in one ``decode_blocks`` pass."""
     import pyarrow as pa
 
     for batch in iterator:
-        lists = [decode_postings(b) for b in batch.column("blocks").to_pylist()]
-        lens = np.array([len(d) for d, _ in lists], np.int64)
-        if not lens.sum():
+        cols = block_columns(batch.column("blocks"))
+        docids, tfs = decode_blocks(cols, np.arange(len(cols.count)))
+        if not len(docids):
             continue
+        post = np.zeros(len(cols.count) + 1, np.int64)
+        np.cumsum(cols.count, out=post[1:])
+        per_row = np.diff(post[cols.row_off])
         yield pa.RecordBatch.from_arrays(
             [
-                batch.column("term").take(pa.array(np.repeat(np.arange(len(lists)), lens))),
-                pa.array(np.concatenate([d for d, _ in lists]), pa.int64()),
-                pa.array(np.concatenate([t for _, t in lists]), pa.int64()),
+                batch.column("term").take(pa.array(np.repeat(np.arange(len(per_row)), per_row))),
+                pa.array(docids, pa.int64()),
+                pa.array(tfs, pa.int64()),
             ],
             ["term", "docid", "tf"],
         )

@@ -14,8 +14,9 @@ the pruning idea the north-rule mandates). Instead of pointer-chasing document
    upper bound U(interval) = Σ_t bound of t's covering block.
 3. Intervals are processed in descending U, in batches whose size doubles
    each round; each batch is scored EXACTLY in one vectorized pass (decode
-   the covering blocks of its intervals — cached — keep the postings that
-   fall in those intervals, and accumulate full BM25). The running top-k
+   the not-yet-decoded covering blocks of its intervals in one varint pass,
+   keep the postings that fall in those intervals, and accumulate full
+   BM25). The running top-k
    gives the threshold θ (its k-th score), checked before every batch: once
    the next interval's U < θ every remaining doc provably cannot enter the
    top-k.
@@ -29,10 +30,8 @@ from __future__ import annotations
 
 import numpy as np
 
-from ciff_spark.functions.codec import decode_block_dict
+from ciff_spark.functions.codec import block_columns, concat_ranges, decode_blocks
 from ciff_spark.functions.scoring import tfnorm_np
-
-_decode_block_arrays = decode_block_dict  # handles implicit single-posting blocks
 
 #: intervals in the first batch; each later batch doubles. A selective query
 #: stops after a batch or two, a query that scores hundreds of intervals pays
@@ -43,20 +42,90 @@ _decode_block_arrays = decode_block_dict  # handles implicit single-posting bloc
 _FIRST_BATCH = 8
 
 
+class PostingList:
+    """One term's posting list in columnar form: the kernels' only input.
+
+    Built from the term's ``list<struct<BLOCK_SCHEMA>>`` rows (shards,
+    compaction appends, segments) in ascending first-block ``max_docid``
+    order, so the blocks form one docid-ascending list; each row's first
+    block decodes from −1, as it was encoded (``codec.block_columns``).
+    Every array is owned, so ``nbytes`` is what holding the list costs.
+
+    Decoded postings fill lazily into flat ``int64`` arrays, per block on
+    first touch (``postings``); the block geometry caches per scoring mode.
+    A list can thus be shared across queries — the serving hot cache, the
+    per-task rows of a Spark scoring stage."""
+
+    __slots__ = ("cols", "post_off", "_docs", "_tfs", "_done", "_geom", "_geom_dl")
+
+    def __init__(self, rows) -> None:
+        self.cols = block_columns(rows)
+        self.post_off = np.zeros(len(self.cols.count) + 1, np.int64)
+        np.cumsum(self.cols.count, out=self.post_off[1:])
+        self._docs = self._tfs = None
+        self._done = np.zeros(len(self.cols.count), bool)
+        self._geom: dict = {}
+        self._geom_dl = None
+
+    def __len__(self) -> int:
+        return len(self.cols.count)
+
+    @property
+    def nbytes(self) -> int:
+        """Bytes the list owns. Its decoded postings (16 per posting) and
+        one cached geometry (``lo`` and ``mtf``, 16 per block) count from
+        the start, so a cache charge never lags the lazy fills."""
+        arrays = (*self.cols, self.post_off, self._done)
+        return sum(a.nbytes for a in arrays) + 16 * (int(self.post_off[-1]) + len(self))
+
+    def postings(self, blocks: np.ndarray) -> tuple[np.ndarray, np.ndarray, int]:
+        """(docids, tfs, newly decoded block count) of ``blocks`` (ascending
+        block indices). The not-yet-decoded ones decode in one
+        ``decode_blocks`` call; a run of consecutive blocks returns views."""
+        lo, hi = int(blocks[0]), int(blocks[-1]) + 1
+        run = hi - lo == len(blocks)
+        done = self._done[lo:hi] if run else self._done[blocks]
+        need = blocks[~done]
+        if need.size:
+            if self._docs is None:
+                self._docs = np.empty(self.post_off[-1], np.int64)
+                self._tfs = np.empty(self.post_off[-1], np.int64)
+            at = concat_ranges(self.post_off[need], self.post_off[need + 1])
+            self._docs[at], self._tfs[at] = decode_blocks(self.cols, need)
+            self._done[need] = True
+        if run:
+            a, b = self.post_off[lo], self.post_off[hi]
+            return self._docs[a:b], self._tfs[a:b], int(need.size)
+        at = concat_ranges(self.post_off[blocks], self.post_off[blocks + 1])
+        return self._docs[at], self._tfs[at], int(need.size)
+
+    def geometry(self, scoring: str, dl: np.ndarray, start_docid: int, avgdl: float):
+        """``list_geometry`` cached per (scoring, start_docid, avgdl); the
+        cache drops when a different ``dl`` array comes in."""
+        if dl is not self._geom_dl:
+            self._geom.clear()
+            self._geom_dl = dl
+        key = (scoring, start_docid, avgdl)
+        geom = self._geom.get(key)
+        if geom is None:
+            geom = self._geom[key] = list_geometry(
+                self, scoring == "impact", dl, start_docid, avgdl
+            )
+        return geom
+
+
 def list_geometry(
-    blocks: list[dict],
+    plist: PostingList,
     impact: bool,
     dl: np.ndarray,
     start_docid: int,
     avgdl: float,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(lo, hi, mtf) block-geometry arrays for one posting list — the
-    per-block Python dict walk, factored out so serving callers can cache
-    it per (term, scoring): it is query-INDEPENDENT (lo/hi from the stored
-    block ranges, mtf the raw per-block tf bound — idf/bound_scale apply
-    vectorized afterwards), and for hot multi-thousand-block lists it
-    dominates the per-query kernel setup cost otherwise."""
-    hi = np.array([b["max_docid"] for b in blocks], np.int64)
+    """(lo, hi, mtf) block-geometry arrays of one posting list:
+    query-INDEPENDENT (lo/hi from the stored block ranges, mtf the raw
+    per-block tf bound — idf/bound_scale apply vectorized afterwards)."""
+    c = plist.cols
+    hi = c.max_docid
     lo = np.empty_like(hi)
     lo[0] = 0
     lo[1:] = hi[:-1] + 1
@@ -67,59 +136,39 @@ def list_geometry(
     # posting blocks (count==1, null min_docid) cover exactly their one
     # docid. Indexes written before the field fall back to the
     # conservative prev_max+1 coverage.
-    counts = np.array([b["count"] for b in blocks], np.int64)
-    mins = np.array(
-        [b.get("min_docid") if b.get("min_docid") is not None else -1 for b in blocks],
-        np.int64,
-    )
-    lo = np.where(mins >= 0, np.maximum(lo, mins), lo)
-    lo = np.where(counts == 1, hi, lo)
+    lo = np.where(c.min_docid >= 0, np.maximum(lo, c.min_docid), lo)
+    lo = np.where(c.count == 1, hi, lo)
     if impact:
-        mtf = np.array([b["max_tf"] for b in blocks], np.float64)
-    else:
-        mtf = np.array(
-            [
-                b["max_tfnorm"] if b["max_tfnorm"] is not None else np.nan
-                for b in blocks
-            ],
-            np.float64,
-        )
-        nanm = np.isnan(mtf)
-        if nanm.any():
-            # implicit singles: the exact tf bound derives from the one
-            # posting's (max_tf, dl[max_docid]) at the caller's avgdl —
-            # exact, and bound_scale (≥1) keeps it a valid upper bound
-            mtf[nanm] = tfnorm_np(
-                np.array([b["max_tf"] for b, m in zip(blocks, nanm) if m], np.int64),
-                dl[hi[nanm] - start_docid],
-                avgdl,
-            )
+        return lo, hi, c.max_tf.astype(np.float64)
+    mtf = c.max_tfnorm.copy()
+    nanm = np.isnan(mtf)
+    if nanm.any():
+        # implicit singles: the exact tf bound derives from the one
+        # posting's (max_tf, dl[max_docid]) at the caller's avgdl —
+        # exact, and bound_scale (≥1) keeps it a valid upper bound
+        mtf[nanm] = tfnorm_np(c.max_tf[nanm], dl[hi[nanm] - start_docid], avgdl)
     return lo, hi, mtf
 
 
 def wand_topk(
-    lists: list[tuple[float, list[dict]]],
+    lists: list[tuple[float, PostingList]],
     dl: np.ndarray,
     start_docid: int,
     avgdl: float,
     k: int,
     round_decimals: int | None = None,
     initial_theta: float | None = None,
-    decode_caches: list[dict] | None = None,
     bound_scale: float = 1.0,
     stats: dict | None = None,
     scoring: str = "bm25",
     allowed: np.ndarray | None = None,
-    geom_caches: list[dict] | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Top-k over one docid shard.
 
-    lists: [(idf, blocks)] or [(idf, blocks, decode_prevs)] per query term.
-    ``decode_prevs`` (int64, one per block) overrides the decode base of each
-    block — required when a list is assembled by concatenating a term's
-    SHARDS, because each shard's first block was gap-encoded relative to −1,
-    not to the previous shard's last docid. Without it, blocks chain via the
-    previous block's max_docid (single-shard lists).
+    lists: [(idf, PostingList)] per query term. A list's decoded blocks and
+    geometry stay cached on it, so a caller that keeps lists across calls
+    (the serving hot cache: query logs are Zipf) decodes a hot term's
+    blocks once, not once per query; callers own eviction.
     dl: uint32 doclengths for the dense docid range starting at
     ``start_docid``. Returns (docids, scores) sorted by (-score, docid).
 
@@ -136,12 +185,6 @@ def wand_topk(
     scores, so ≥ k docs globally score ≥ θ₀, and ties at θ₀ survive the ε
     guard.
 
-    ``decode_caches``: optional per-list dicts (aligned with ``lists``) that
-    persist decoded block arrays ACROSS calls, keyed by block index — the
-    serving path's posting-list cache (query logs are Zipf; a hot term's
-    blocks decode once, not once per query). Callers own eviction. Without
-    it, a per-call cache deduplicates decodes within one invocation.
-
     ``bound_scale`` (≥ 1): inflate every block bound by this factor. Block
     bounds are exact under the avgdl they were ENCODED with; tfnorm grows
     with avgdl, so after compaction moves the collection avgdl past it the
@@ -155,12 +198,6 @@ def wand_topk(
     kernel — intervals already process in descending U, the query-time
     equivalent, and blocks must stay docid-ascending on disk for the lo/hi
     geometry — so decode count IS the pruning metric to watch.
-
-    ``geom_caches``: optional per-list dicts (aligned with ``lists``, like
-    ``decode_caches``) persisting the ``list_geometry`` arrays across calls
-    keyed by scoring mode — valid as long as the caller's dl/avgdl are
-    fixed (a searcher instance), since the cached mtf embeds the implicit-
-    single bound derivation at that avgdl.
 
     ``allowed``: optional boolean mask aligned with ``dl`` (index =
     docid − start_docid) — metadata-filtered top-k: only allowed docs enter
@@ -185,24 +222,13 @@ def wand_topk(
     eps = 0.5 * 10.0 ** (-round_decimals) if round_decimals is not None else 0.0
     theta_floor = -np.inf if initial_theta is None else float(initial_theta)
 
-    # block geometry: per list, arrays of lo/hi/bound (+ prev_max for decode)
-    los, his, bounds, prevs = [], [], [], []
-    lists = [entry if len(entry) == 3 else (*entry, None) for entry in lists]
-    gcaches = geom_caches if geom_caches is not None else [None] * len(lists)
-    for (idf, blocks, decode_prevs), gc in zip(lists, gcaches):
-        geom = gc.get(scoring) if gc is not None else None
-        if geom is None:
-            geom = list_geometry(blocks, impact, dl, start_docid, avgdl)
-            if gc is not None:
-                gc[scoring] = geom
-        lo, hi, mtf = geom
+    # block geometry: per list, arrays of lo/hi/bound
+    los, his, bounds = [], [], []
+    for idf, plist in lists:
+        lo, hi, mtf = plist.geometry(scoring, dl, start_docid, avgdl)
         los.append(lo)
         his.append(hi)
         bounds.append(np.maximum(idf * mtf, 0.0) * float(bound_scale))
-        if decode_prevs is not None:
-            prevs.append(np.asarray(decode_prevs, np.int64))
-        else:
-            prevs.append(np.concatenate(([np.int64(-1)], hi[:-1])))
 
     # intervals: refinement of all block boundaries
     pts = np.unique(np.concatenate([np.concatenate((lo, hi + 1)) for lo, hi in zip(los, his)]))
@@ -227,13 +253,8 @@ def wand_topk(
     neg_u = -U[order]  # ascending, for the θ cut
     rank = np.empty(len(order), np.int64)
     rank[order] = np.arange(len(order))
-    caches: list[dict] = (
-        decode_caches if decode_caches is not None else [{} for _ in lists]
-    )
     if stats is not None:
-        stats["total_blocks"] = stats.get("total_blocks", 0) + sum(
-            len(b) for _, b, _ in lists
-        )
+        stats["total_blocks"] = stats.get("total_blocks", 0) + sum(len(p) for _, p in lists)
 
     top_d = np.empty(0, np.int64)  # best k so far, sorted by (-score, docid)
     top_s = np.empty(0, np.float64)
@@ -249,20 +270,14 @@ def wand_topk(
         batch = order[pos:end]
         acc_docids: list[np.ndarray] = []
         acc_contrib: list[np.ndarray] = []
-        for i, (idf, blocks, _dp) in enumerate(lists):
+        for i, (idf, plist) in enumerate(lists):
             cover = np.unique(covers[i][batch])
-            parts = []
-            for b in cover[cover >= 0].tolist():
-                got = caches[i].get(b)
-                if got is None:
-                    got = caches[i][b] = _decode_block_arrays(blocks[b], int(prevs[i][b]))
-                    if stats is not None:
-                        stats["decoded_blocks"] = stats.get("decoded_blocks", 0) + 1
-                parts.append(got)
-            if not parts:
+            cover = cover[cover >= 0]
+            if not cover.size:
                 continue
-            d = np.concatenate([p[0] for p in parts])
-            tf = np.concatenate([p[1] for p in parts])
+            d, tf, fresh = plist.postings(cover)
+            if fresh and stats is not None:
+                stats["decoded_blocks"] = stats.get("decoded_blocks", 0) + fresh
             # keep the postings whose interval is in this batch: a covering
             # block also holds docs of intervals scored in other batches
             r = rank[np.searchsorted(pts, d, side="right") - 1]
@@ -289,44 +304,34 @@ def wand_topk(
 
 
 def exhaustive_topk(
-    lists: list[tuple[float, list[dict]]],
+    lists: list[tuple[float, PostingList]],
     dl: np.ndarray,
     start_docid: int,
     avgdl: float,
     k: int,
     round_decimals: int | None = None,
-    decode_caches: list[dict] | None = None,
     scoring: str = "bm25",
     allowed: np.ndarray | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Unpruned top-k over one docid shard: decode every block, sum each
     doc's contributions in one ``unique``/``add.at`` pass, take the top-k
-    with one ``lexsort``. Same inputs (``(idf, blocks)`` or
-    ``(idf, blocks, decode_prevs)`` lists), ``scoring``/``round_decimals``/
-    ``allowed`` semantics and result order as ``wand_topk``; no block bound
-    is read. A doc's contributions add in list order, as in ``wand_topk``,
-    so the two kernels return identical scores.
-    ``decode_caches``: as in ``wand_topk``, keyed by block index."""
+    with one ``lexsort``. Same ``(idf, PostingList)`` inputs,
+    ``scoring``/``round_decimals``/``allowed`` semantics and result order as
+    ``wand_topk``; no block bound is read. A doc's contributions add in list
+    order, as in ``wand_topk``, so the two kernels return identical scores."""
     if not lists or k <= 0:
         return np.empty(0, np.int64), np.empty(0, np.float64)
     impact = scoring == "impact"
     if not impact and scoring != "bm25":
         raise ValueError(f"unknown scoring {scoring!r}")
-    caches = decode_caches if decode_caches is not None else [{} for _ in lists]
     docids, contribs = [], []
-    for entry, cache in zip(lists, caches):
-        idf, blocks = entry[:2]
-        prevs = entry[2] if len(entry) == 3 else [-1, *(b["max_docid"] for b in blocks[:-1])]
-        for j, (blk, prev) in enumerate(zip(blocks, prevs)):
-            got = cache.get(j)
-            if got is None:
-                got = cache[j] = _decode_block_arrays(blk, int(prev))
-            d, tf = got
-            docids.append(d)
-            if impact:
-                contribs.append(idf * tf.astype(np.float64))
-            else:
-                contribs.append(idf * tfnorm_np(tf, dl[d - start_docid], avgdl))
+    for idf, plist in lists:
+        d, tf, _ = plist.postings(np.arange(len(plist)))
+        docids.append(d)
+        if impact:
+            contribs.append(idf * tf.astype(np.float64))
+        else:
+            contribs.append(idf * tfnorm_np(tf, dl[d - start_docid], avgdl))
     uniq, scores = _doc_scores(docids, contribs, round_decimals, allowed, start_docid)
     top = np.lexsort((uniq, -scores))[:k]
     return uniq[top], scores[top]

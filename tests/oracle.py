@@ -21,9 +21,29 @@ from collections import Counter
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from ciff_spark.functions.scoring import idf_np, tfnorm_np
 from ciff_spark.functions.tokenizer import tokenize_py
+from ciff_spark.wand import PostingList
+
+#: Arrow type of one stored block (``codec.BLOCK_SCHEMA``)
+BLOCK_TYPE = pa.struct([
+    ("count", pa.int32()), ("min_docid", pa.int64()), ("max_docid", pa.int64()),
+    ("max_tf", pa.int32()), ("max_tfnorm", pa.float64()),
+    ("docs_bin", pa.binary()), ("tfs_bin", pa.binary()),
+])
+
+
+def block_rows(*rows: list[dict]) -> pa.ListArray:
+    """``list<struct<BLOCK_SCHEMA>>`` rows from ``encode_postings`` outputs."""
+    return pa.array(list(rows), pa.list_(BLOCK_TYPE))
+
+
+def posting_list(*rows: list[dict]) -> PostingList:
+    """A ``PostingList`` over ``encode_postings`` outputs, one stored row
+    each (each row's first block decodes from −1), in docid order."""
+    return PostingList(block_rows(*rows))
 
 
 class OracleIndex:

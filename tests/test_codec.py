@@ -14,13 +14,16 @@ from hypothesis import strategies as st
 from ciff_spark.functions.codec import (
     BLOCK_SIZE,
     BLOCK_SPAN,
+    block_columns,
     decode_block,
+    decode_blocks,
     decode_postings,
     encode_postings,
     varint_decode,
     varint_encode,
 )
 from ciff_spark.functions.scoring import idf_np, tfnorm_np
+from oracle import BLOCK_TYPE, block_rows
 
 
 def _roundtrip(vals):
@@ -209,3 +212,136 @@ def test_encode_arrow_batch_equals_encode_postings(with_dl):
     sparse = [b for r in got if r["term"] == "zz_sparse" for b in r["blocks"]]
     assert any(b["count"] == 1 and b["min_docid"] is None for b in sparse)
     assert any(1 < b["count"] < block_size for b in sparse)  # window breaks
+
+
+# ---------------------------------------------------------------------------
+# batch decoder: decode_blocks over Arrow rows ≡ decode_block per block
+# ---------------------------------------------------------------------------
+
+def _per_block(rows):
+    """Every block of ``rows`` decoded one at a time, each row's chain from −1."""
+    out = []
+    for row in rows:
+        prev = -1
+        for b in row:
+            out.append(decode_block(b["docs_bin"], b["tfs_bin"], b["count"], prev,
+                                    b["max_docid"], b["max_tf"]))
+            prev = b["max_docid"]
+    return out
+
+
+def _check_batch_decode(rows, rng):
+    """``decode_blocks`` over all blocks, and over random ascending subsets,
+    equals the per-block reference in block order."""
+    cols = block_columns(block_rows(*rows))
+    ref = _per_block(rows)
+    assert len(cols.count) == len(ref)
+    subsets = [np.arange(len(ref))]
+    for _ in range(3):
+        m = rng.random(len(ref)) < rng.uniform(0.1, 0.9)
+        subsets.append(np.flatnonzero(m))
+    for sel in subsets:
+        d, t = decode_blocks(cols, sel)
+        want_d = np.concatenate([ref[i][0] for i in sel] or [np.empty(0, np.int64)])
+        want_t = np.concatenate([ref[i][1] for i in sel] or [np.empty(0, np.int64)])
+        np.testing.assert_array_equal(d, want_d)
+        np.testing.assert_array_equal(t, want_t)
+    return cols
+
+
+def _random_list(rng, gap_hi, n, **kw):
+    docids = np.cumsum(rng.integers(1, gap_hi, n)) - 1
+    return docids.astype(np.int64), rng.integers(1, 40, n)
+
+
+@pytest.mark.parametrize("seed", range(8))
+def test_batch_decode_fuzz(seed):
+    """Lists with and without doclengths, sparse span-capped lists of
+    implicit singles, and several rows per term (each its own −1 chain)."""
+    rng = np.random.default_rng(seed)
+    rows = []
+    for _ in range(int(rng.integers(1, 6))):
+        kind = rng.integers(3)
+        n = int(rng.integers(1, 600))
+        if kind == 0:  # dense, exact bounds
+            d, t = _random_list(rng, 8, n)
+            dl = rng.integers(1, 200, n)
+            rows.append(encode_postings(d, t, doclens=dl, avgdl=50.0,
+                                        block_size=int(rng.choice([4, 16, 128]))))
+        elif kind == 1:  # dl-free bounds
+            d, t = _random_list(rng, 40, n)
+            rows.append(encode_postings(d, t, block_size=int(rng.choice([3, 128]))))
+        else:  # sparse: width-capped, mostly implicit singles
+            d, t = _random_list(rng, 3000, n)
+            rows.append(encode_postings(d, t))
+            assert any(b["count"] == 1 and not b["docs_bin"] for b in rows[-1])
+    cols = _check_batch_decode(rows, rng)
+    assert (cols.prev[cols.row_off[:-1]] == -1).all()
+    # one row per term shard: the concatenated rows decode like the lists
+    d, t = decode_blocks(cols, np.arange(len(cols.count)))
+    want = [decode_postings(r) for r in rows]
+    np.testing.assert_array_equal(d, np.concatenate([w[0] for w in want]))
+    np.testing.assert_array_equal(t, np.concatenate([w[1] for w in want]))
+
+
+@pytest.mark.parametrize("shift", [14, 21, 28, 35, 42])
+def test_batch_decode_wide_gaps(shift):
+    """Gaps of 2^shift and more: 3- to 7-byte varints, docids past 2^32."""
+    rng = np.random.default_rng(shift)
+    gaps = rng.integers(1 << shift, 1 << (shift + 1), 300)
+    gaps[::7] = rng.integers(1, 100, len(gaps[::7]))  # mixed with short ones
+    docids = np.cumsum(gaps)
+    tfs = rng.integers(1, 1 << min(shift, 30), 300)
+    rows = [encode_postings(docids[:150], tfs[:150], block_size=16, block_span=None),
+            encode_postings(docids[150:], tfs[150:], block_size=5, block_span=None)]
+    _check_batch_decode(rows, rng)
+    d, t = decode_blocks(block_columns(block_rows(*rows)), np.arange(len(rows[0]) + len(rows[1])))
+    np.testing.assert_array_equal(d, docids)
+    np.testing.assert_array_equal(t, tfs)
+
+
+def test_batch_decode_rejects_misaligned_counts():
+    """A block whose bytes hold more or fewer values than its ``count`` —
+    also when the block counts still sum right — raises instead of
+    shifting values into its neighbour."""
+    docids = np.arange(0, 40, 2, dtype=np.int64)
+    blocks = encode_postings(docids, np.ones(20, np.int64), block_size=5, block_span=None)
+    assert len(blocks) == 4 and all(b["count"] == 5 for b in blocks)
+
+    def bad(mutate):
+        rows = [[dict(b) for b in blocks]]
+        mutate(rows[0])
+        cols = block_columns(block_rows(*rows))
+        with pytest.raises(ValueError):
+            decode_blocks(cols, np.arange(4))
+
+    bad(lambda bl: bl[1].update(count=4))  # Σ count short by one
+    bad(lambda bl: bl[2].update(docs_bin=bl[2]["docs_bin"] + b"\x01"))  # one value too many
+    bad(lambda bl: (bl[0].update(count=6), bl[3].update(count=4)))  # Σ count right
+    # counts match per block, but block 0 ends inside a value that would
+    # run on into block 1's bytes
+    bad(lambda bl: bl[0].update(count=4, docs_bin=bl[0]["docs_bin"][:-1] + b"\x82",
+                                tfs_bin=bl[0]["tfs_bin"][:-1]))
+    bad(lambda bl: bl[1].update(docs_bin=b""))  # several postings, no bins
+
+
+def test_block_columns_reads_rows_written_before_min_docid():
+    """Rows whose block struct has no ``min_docid`` (indexes written before
+    width-capped blocks) read it as −1 and decode unchanged."""
+    import pyarrow as pa
+
+    rng = np.random.default_rng(4)
+    rows = [encode_postings(*_random_list(rng, 9, 300), block_size=16) for _ in range(2)]
+    legacy_type = pa.struct([f for f in BLOCK_TYPE if f.name != "min_docid"])
+    legacy = pa.array(
+        [[{k: v for k, v in b.items() if k != "min_docid"} for b in r] for r in rows],
+        pa.list_(legacy_type),
+    )
+    cols, want = block_columns(legacy), block_columns(block_rows(*rows))
+    assert (cols.min_docid == -1).all()
+    for name in ("count", "max_docid", "max_tf", "prev", "docs", "tfs", "row_off"):
+        np.testing.assert_array_equal(getattr(cols, name), getattr(want, name))
+    np.testing.assert_array_equal(cols.max_tfnorm, want.max_tfnorm)
+    sel = np.arange(len(cols.count))
+    for got, exp in zip(decode_blocks(cols, sel), decode_blocks(want, sel)):
+        np.testing.assert_array_equal(got, exp)

@@ -209,8 +209,8 @@ def test_index_topk_is_one_scoring_stage(spark, mode):
     documents_index(spark, SF_DIR)
     reader = IndexReader(spark, index_root_for(SF_DIR))
     plan = _plan(reader.topk([(0, "dup batch"), (1, "data")], k=5, mode=mode))
-    assert plan.count("FlatMapGroupsInPandas") == 1, plan
-    assert "FlatMapCoGroupsInPandas" not in plan, plan
+    assert plan.count("FlatMapGroupsInArrow") == 1, plan
+    assert "FlatMapGroupsInPandas" not in plan and "FlatMapCoGroups" not in plan, plan
     assert "shard_sizes" not in plan, plan
     assert re.search(r"PartitionFilters: \[[^\]]*pgroup", plan), plan
     assert not re.search(r"hashpartitioning\(qid#\d+L?, docid#", plan), plan

@@ -11,7 +11,7 @@ import pytest
 from ciff_spark.build import BuildConfig, build_index
 from ciff_spark.serve import LocalSearcher
 from ciff_spark.sources.transcripts import transcripts_df, transcripts_pdf
-from oracle import OracleIndex
+from oracle import OracleIndex, posting_list
 
 QUERIES = [
     "w000001",
@@ -133,12 +133,12 @@ def test_search_sums_in_sorted_term_order_warm_or_cold(served, monkeypatch):
     real = serve.wand_topk
 
     def spy(lists, *a, **kw):
-        seen.append([id(blocks) for _, blocks, _ in lists])
+        seen.append([id(plist) for _, plist in lists])
         return real(lists, *a, **kw)
 
     monkeypatch.setattr(serve, "wand_topk", spy)
     got = warm.search(q, k=10)
-    assert seen == [[id(warm._hot[t][0]) for t in terms]]
+    assert seen == [[id(warm._hot[t]) for t in terms]]
     assert got == LocalSearcher(searcher.root).search(q, k=10)
 
 
@@ -219,6 +219,54 @@ def test_fresh_lazy_term_stats_identical(segmented, monkeypatch):
             assert got == eager.search(q, k=10, prune=prune), q
     assert lazy.search(seg_only, k=10)
     assert lazy._df[seg_only] == 0 and seg_only not in lazy._pg
+
+
+def test_serving_decodes_only_through_the_batch_decoder(served, segmented, monkeypatch):
+    """Serving decodes with ``codec.decode_blocks`` alone: with the
+    per-block ``decode_block`` made to raise, ``LocalSearcher`` and
+    ``FreshSearcher`` searches, pruned and unpruned, return exactly what
+    they return with it intact."""
+    from ciff_spark.functions import codec
+    from ciff_spark.serve import FreshSearcher
+
+    queries = QUERIES + ["w000000 w000001 w000002", "w000010 w000200"]
+    cases = [
+        (cls, root, q, prune)
+        for cls, root in ((LocalSearcher, served[0].root), (FreshSearcher, segmented))
+        for q in queries
+        for prune in (True, False)
+    ]
+    want = [cls(root).search(q, k=7, prune=prune) for cls, root, q, prune in cases]
+    assert sum(map(bool, want)) > len(cases) // 2
+
+    def per_block(*a, **kw):
+        raise AssertionError("per-block decode on the serving path")
+
+    monkeypatch.setattr(codec, "decode_block", per_block)
+    got = [cls(root).search(q, k=7, prune=prune) for cls, root, q, prune in cases]
+    assert got == want
+
+
+def test_hot_cache_charges_the_bytes_a_list_owns(segmented):
+    """A hot-cache entry is charged exactly the bytes its ``PostingList``
+    owns once decoded and its geometry cached, and it owns every array it
+    holds: a term's bins are copied out of the row-group read, so a
+    one-term entry never keeps a whole 1024-row group alive uncharged and
+    ``CACHE_BYTES`` bounds memory."""
+    from ciff_spark.serve import FreshSearcher
+
+    for cls in (LocalSearcher, FreshSearcher):
+        s = cls(segmented)
+        for q in QUERIES + ["w000000 w000001 w000002", "w000010 w000200"]:
+            s.search(q, k=7)
+            s.search(q, k=7, prune=False)  # decodes every block: all arrays allocated
+        assert s._hot, cls.__name__
+        for t, plist in s._hot.items():
+            (lo, _hi, mtf), = plist._geom.values()  # hi is cols.max_docid
+            arrays = [*plist.cols, plist.post_off, plist._done, plist._docs, plist._tfs, lo, mtf]
+            assert all(a.base is None for a in arrays), (cls.__name__, t)
+            assert s._hot_bytes[t] == plist.nbytes == sum(a.nbytes for a in arrays)
+        assert s._hot_total == sum(s._hot_bytes.values())
 
 
 # ---------------------------------------------------------------------------
@@ -364,8 +412,9 @@ def test_lexicon_orders_non_ascii_terms_like_str(spark, tmp_path, monkeypatch):
     for t in odd + vocab[::97]:
         rows = sorted((r for r in full if r["term"] == t), key=lambda r: r["blocks"][0]["max_docid"])
         assert rows, t
-        got = searcher._fetch_lists([t])[t][0]
-        assert got == [b for r in rows for b in r["blocks"]], t
+        got = searcher._fetch_lists([t])[t].cols
+        want = posting_list(*(r["blocks"] for r in rows)).cols
+        assert all(np.array_equal(a, b, equal_nan=True) for a, b in zip(got, want)), t
     # the same terms through search (whitespace tokens, impact scoring)
     monkeypatch.setattr(serve, "tokenize_py", lambda q: q.split("|"))
     q = "|".join(odd)

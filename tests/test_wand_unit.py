@@ -9,6 +9,12 @@ import pytest
 from ciff_spark.functions.codec import decode_postings, encode_postings
 from ciff_spark.functions.scoring import idf_np, tfnorm_np
 from ciff_spark.wand import exhaustive_topk, wand_topk
+from oracle import posting_list
+
+
+def _pl(lists):
+    """[(idf, blocks)] → the kernels' [(idf, PostingList)]."""
+    return [(idf, posting_list(blocks)) for idf, blocks in lists]
 
 
 def _brute(lists, dl, start, avgdl, k, round_decimals=None, allowed=None,
@@ -53,12 +59,12 @@ def test_wand_equals_brute_force(seed):
         lists.append(_mk_list(rng, n_docs, df, int(rng.integers(1, 8)), dl,
                               avgdl, num_total, block_size=int(rng.choice([4, 16, 128]))))
     k = int(rng.choice([1, 3, 10, 100]))
-    gd, gs = wand_topk(lists, dl, 0, avgdl, k)
+    gd, gs = wand_topk(_pl(lists), dl, 0, avgdl, k)
     ed, es = _brute(lists, dl, 0, avgdl, k)
     assert gd.tolist() == ed
     np.testing.assert_allclose(gs, es, atol=1e-12)
     # both kernels add a doc's contributions in list order: identical scores
-    xd, xs = exhaustive_topk(lists, dl, 0, avgdl, k)
+    xd, xs = exhaustive_topk(_pl(lists), dl, 0, avgdl, k)
     assert xd.tolist() == ed
     np.testing.assert_array_equal(xs, gs)
 
@@ -74,18 +80,18 @@ def test_wand_negative_idf_only():
         _mk_list(rng, n_docs, 290, 5, dl, avgdl, n_docs, 16),
         _mk_list(rng, n_docs, 250, 3, dl, avgdl, n_docs, 16),
     ]
-    gd, gs = wand_topk(lists, dl, 0, avgdl, 10)
+    gd, gs = wand_topk(_pl(lists), dl, 0, avgdl, 10)
     ed, es = _brute(lists, dl, 0, avgdl, 10)
     assert (np.array(es) < 0).all()
     assert gd.tolist() == ed
-    assert exhaustive_topk(lists, dl, 0, avgdl, 10)[0].tolist() == ed
+    assert exhaustive_topk(_pl(lists), dl, 0, avgdl, 10)[0].tolist() == ed
     np.testing.assert_allclose(gs, es, atol=1e-12)
 
 
 def test_wand_k_larger_than_candidates():
     rng = np.random.default_rng(3)
     dl = rng.integers(5, 40, 50).astype(np.uint32)
-    lists = [_mk_list(rng, 50, 5, 3, dl, 20.0, 50, 4)]
+    lists = _pl([_mk_list(rng, 50, 5, 3, dl, 20.0, 50, 4)])
     gd, gs = wand_topk(lists, dl, 0, 20.0, 100)
     assert len(gd) == 5  # all candidates, no padding
     assert len(exhaustive_topk(lists, dl, 0, 20.0, 100)[0]) == 5
@@ -94,7 +100,7 @@ def test_wand_k_larger_than_candidates():
 def test_wand_empty_and_k0():
     dl = np.ones(10, np.uint32)
     rng = np.random.default_rng(0)
-    lists = [_mk_list(rng, 10, 3, 2, dl, 1.0, 10, 2)]
+    lists = _pl([_mk_list(rng, 10, 3, 2, dl, 1.0, 10, 2)])
     for kernel in (wand_topk, exhaustive_topk):
         assert len(kernel([], dl, 0, 1.0, 10)[0]) == 0
         assert len(kernel(lists, dl, 0, 1.0, 0)[0]) == 0
@@ -109,7 +115,7 @@ def test_wand_exact_tie_break_by_docid():
     blocks = encode_postings(docids, tfs, doclens=dl[docids], avgdl=10.0, block_size=2)
     idf = float(idf_np(3, 12))
     for kernel in (wand_topk, exhaustive_topk):
-        gd, gs = kernel([(idf, blocks)], dl, 0, 10.0, 2)
+        gd, gs = kernel([(idf, posting_list(blocks))], dl, 0, 10.0, 2)
         assert gd.tolist() == [3, 7]  # 3 and 7 tie; both beat 9; order by docid
         assert gs[0] == gs[1]
 
@@ -130,7 +136,7 @@ def test_wand_kth_place_tie_across_intervals_prefers_smaller_docid():
     assert len(blocks) == 2
     dl = np.ones(200, np.uint32)
     for kernel in (wand_topk, exhaustive_topk):
-        d, s = kernel([(1.0, blocks)], dl, 0, 1.0, 5, scoring="impact")
+        d, s = kernel([(1.0, posting_list(blocks))], dl, 0, 1.0, 5, scoring="impact")
         assert d.tolist() == [105, 0, 1, 2, 3]  # tf2 doc, then smallest docids
         assert s.tolist() == [2.0, 1.0, 1.0, 1.0, 1.0]
 
@@ -159,15 +165,15 @@ def test_wand_implicit_singles_with_filter_and_theta():
         ((float(s), int(d)) for d, s in zip(docids[::2], exp_scores[::2])),
         key=lambda x: (-x[0], x[1]),
     )[:5]
-    d, s = wand_topk([(idf, blocks)], dl, 0, avgdl, 5, allowed=allowed)
+    d, s = wand_topk([(idf, posting_list(blocks))], dl, 0, avgdl, 5, allowed=allowed)
     assert d.tolist() == [p[1] for p in pairs]
     np.testing.assert_allclose(s, [p[0] for p in pairs], rtol=1e-12)
-    xd, xs = exhaustive_topk([(idf, blocks)], dl, 0, avgdl, 5, allowed=allowed)
+    xd, xs = exhaustive_topk([(idf, posting_list(blocks))], dl, 0, avgdl, 5, allowed=allowed)
     assert xd.tolist() == d.tolist()
     np.testing.assert_array_equal(xs, s)
     # θ seeded at the true 5th-best allowed score: identical results
     d2, s2 = wand_topk(
-        [(idf, blocks)], dl, 0, avgdl, 5, allowed=allowed,
+        [(idf, posting_list(blocks))], dl, 0, avgdl, 5, allowed=allowed,
         initial_theta=pairs[-1][0],
     )
     assert d2.tolist() == d.tolist()
@@ -186,7 +192,7 @@ def test_wand_bound_sums_in_score_order_keeps_kth_tie():
         return encode_postings(np.array(docids), np.ones(len(docids), np.int64),
                                block_size=2, block_span=None)
 
-    lists = [(a, blocks([0, 3])), (b, blocks([2, 5, 10, 13])), (c, blocks([9, 12]))]
+    lists = _pl([(a, blocks([0, 3])), (b, blocks([2, 5, 10, 13])), (c, blocks([9, 12]))])
     dl = np.ones(20, np.uint32)
     for theta in (None, b):
         d, s = wand_topk(lists, dl, 0, 1.0, 4, scoring="impact", initial_theta=theta)
@@ -196,29 +202,26 @@ def test_wand_bound_sums_in_score_order_keeps_kth_tie():
 
 
 def _sharded_list(rng, n_docs, df, dl, avgdl, cuts):
-    """One posting list twice: encoded whole (``exhaustive_topk``'s single-
-    shard form) and as the concatenation of per-shard encodings split at
-    ``cuts``, each shard gap-encoded from −1, with its ``decode_prevs``."""
+    """One posting list twice: encoded whole (one stored row) and as its
+    per-shard rows split at ``cuts``, each shard gap-encoded from −1."""
     docids = np.sort(rng.choice(n_docs, size=df, replace=False)).astype(np.int64)
     tfs = rng.integers(1, 6, df)
     idf = float(idf_np(df, n_docs))
     whole = encode_postings(docids, tfs, doclens=dl[docids], avgdl=avgdl, block_size=4)
-    blocks, prevs = [], []
+    rows = []
     for lo, hi in zip([0, *cuts], [*cuts, n_docs]):
         m = (docids >= lo) & (docids < hi)
         if not m.any():
             continue  # a shard without the term has no row for it
-        shard = encode_postings(docids[m], tfs[m], doclens=dl[docids[m]], avgdl=avgdl,
-                                block_size=4)
-        prevs += [-1] + [int(blk["max_docid"]) for blk in shard[:-1]]
-        blocks += shard
-    return (idf, whole), (idf, blocks, np.array(prevs, np.int64))
+        rows.append(encode_postings(docids[m], tfs[m], doclens=dl[docids[m]], avgdl=avgdl,
+                                    block_size=4))
+    return (idf, whole), (idf, rows)
 
 
 @pytest.mark.parametrize("k", [10, 100])
 def test_wand_many_intervals_sharded_filtered_rounded(k):
     """Thousands of small blocks, so the kernel runs through several batch
-    doublings; lists concatenate 2-3 shards with decode_prevs, scores round
+    doublings; lists hold 2-3 shard rows, each decoding from −1, scores round
     to 6 decimals, an allowed mask filters, and θ₀ is the attained k-th
     score. Docids and scores equal the exhaustive kernel and brute force."""
     rng = np.random.default_rng(k)
@@ -231,9 +234,10 @@ def test_wand_many_intervals_sharded_filtered_rounded(k):
         whole.append(w)
         sharded.append(sh)
     ed, es = _brute(whole, dl, 0, avgdl, k, round_decimals=6, allowed=allowed)
-    xd, xs = exhaustive_topk(whole, dl, 0, avgdl, k, round_decimals=6, allowed=allowed)
+    xd, xs = exhaustive_topk(_pl(whole), dl, 0, avgdl, k, round_decimals=6, allowed=allowed)
     assert xd.tolist() == ed
     np.testing.assert_array_equal(xs, es)
+    sharded = [(idf, posting_list(*rows)) for idf, rows in sharded]
     for theta in (None, es[-1]):
         gd, gs = wand_topk(sharded, dl, 0, avgdl, k, round_decimals=6,
                            initial_theta=theta, allowed=allowed)
@@ -246,16 +250,16 @@ def _fresh_list(rng, n_base, dl, enc_avgdl, seg_cuts):
     encoded whole (for ``_brute``) and as served fresh — ``_sharded_list``
     base shards (exact bounds at ``enc_avgdl``) followed by one dl-free
     tail per segment over the docid continuation, each row decoding from
-    −1. Returns (whole, served, df), or None when the term drew no postings."""
+    −1. Returns (whole, served rows, df), or None when the term drew no
+    postings."""
     empty = np.empty(0, np.int64)
-    base_d, base_tf, blocks, prevs = empty, empty, [], []
+    base_d, base_tf, rows = empty, empty, []
     df_base = int(rng.integers(0, max(2, n_base // int(rng.choice([2, 10, 50])))))
     if df_base:
         cuts = sorted(rng.choice(np.arange(1, n_base), int(rng.integers(0, 3)), replace=False))
-        (_, whole), (_, blocks, prevs) = _sharded_list(rng, n_base, df_base, dl, enc_avgdl,
-                                                       [int(c) for c in cuts])
+        (_, whole), (_, rows) = _sharded_list(rng, n_base, df_base, dl, enc_avgdl,
+                                              [int(c) for c in cuts])
         base_d, base_tf = decode_postings(whole)
-        prevs = prevs.tolist()
     seg_d, seg_tf = [base_d], [base_tf]
     for lo, hi in zip(seg_cuts[:-1], seg_cuts[1:]):
         n = int(rng.integers(0, hi - lo + 1))
@@ -263,15 +267,13 @@ def _fresh_list(rng, n_base, dl, enc_avgdl, seg_cuts):
             continue  # a segment without the term writes no row for it
         d = np.sort(rng.choice(np.arange(lo, hi), n, replace=False)).astype(np.int64)
         tf = rng.integers(1, 6, n)
-        tail = encode_postings(d, tf, block_size=int(rng.choice([2, 4, 16])))
-        prevs += [-1] + [int(b["max_docid"]) for b in tail[:-1]]
-        blocks += tail
+        rows.append(encode_postings(d, tf, block_size=int(rng.choice([2, 4, 16]))))
         seg_d.append(d)
         seg_tf.append(tf)
     d, tf = np.concatenate(seg_d), np.concatenate(seg_tf)
     if len(d) == 0:
         return None
-    return encode_postings(d, tf), (blocks, np.array(prevs, np.int64)), len(d)
+    return encode_postings(d, tf), rows, len(d)
 
 
 @pytest.mark.parametrize("chunk", range(4))
@@ -280,7 +282,7 @@ def test_fresh_shape_fuzz(chunk):
     at the encode avgdl, concatenated with 0–3 dl-free segment tails over
     the docid continuation, scored at a fresh avgdl above the encode one
     with ``bound_scale = max(1, drift)``. ``wand_topk`` and
-    ``exhaustive_topk`` (with ``decode_prevs``) equal brute force across
+    ``exhaustive_topk`` over the rows' ``PostingList`` equal brute force across
     allowed masks spanning base and segment docids, rounding, bm25 and
     impact scoring and k from 1 to 100 — 50 seeded cases per chunk."""
     for seed in range(50 * chunk, 50 * (chunk + 1)):
@@ -302,17 +304,19 @@ def test_fresh_shape_fuzz(chunk):
             got = _fresh_list(rng, n_base, dl, enc_avgdl, seg_cuts.tolist())
             if got is None:
                 continue
-            w_blocks, (blocks, prevs), df = got
+            w_blocks, rows, df = got
             w = 1.0 if scoring == "impact" else float(idf_np(df, n_total))
             whole.append((w, w_blocks))
-            served.append((w, blocks, prevs))
+            served.append((w, rows))
         case = (seed, scoring, rd, k, n_segs)
         ed, es = _brute(whole, dl, 0, avgdl, k, round_decimals=rd, allowed=allowed,
                         scoring=scoring)
-        gd, gs = wand_topk(served, dl, 0, avgdl, k, round_decimals=rd,
+        gd, gs = wand_topk([(w, posting_list(*rows)) for w, rows in served], dl, 0, avgdl, k,
+                           round_decimals=rd,
                            bound_scale=max(1.0, drift) if scoring == "bm25" else 1.0,
                            scoring=scoring, allowed=allowed)
-        xd, xs = exhaustive_topk(served, dl, 0, avgdl, k, round_decimals=rd,
+        xd, xs = exhaustive_topk([(w, posting_list(*rows)) for w, rows in served], dl, 0,
+                                 avgdl, k, round_decimals=rd,
                                  scoring=scoring, allowed=allowed)
         assert gd.tolist() == xd.tolist() == ed, case
         assert gs.tolist() == xs.tolist() == es, case
@@ -327,12 +331,12 @@ def test_wand_selective_query_decodes_a_fraction():
     dl = rng.integers(5, 60, n_docs).astype(np.uint32)
     rare = np.sort(rng.choice(n_docs, 40, replace=False)).astype(np.int64)
     hot = np.sort(rng.choice(n_docs, 10_000, replace=False)).astype(np.int64)
-    lists = [
+    lists = _pl([
         (float(idf_np(40, n_docs)),
          encode_postings(rare, np.full(40, 5), doclens=dl[rare], avgdl=avgdl)),
         (float(idf_np(10_000, n_docs)),
          encode_postings(hot, np.ones(10_000, np.int64), doclens=dl[hot], avgdl=avgdl)),
-    ]
+    ])
     stats: dict = {}
     gd, gs = wand_topk(lists, dl, 0, avgdl, 10, stats=stats)
     assert 0 < stats["decoded_blocks"] < stats["total_blocks"]
