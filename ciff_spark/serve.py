@@ -4,9 +4,12 @@ Spark builds and maintains the index; serving a single query does not need a
 distributed job. This reader keeps a footer lexicon of the index's Parquet
 postings files: each file is term-sorted in 1024-row groups, so a group's
 (min, max) ``term`` addresses its terms, and a query reads only the row
-groups that cover its terms. It runs the same interval Block-Max WAND
-kernel the distributed path uses. The role is exactly PISA's mmap'd query
-engine over CIFF-derived indexes, re-expressed on the Spark-built artifact:
+groups that cover its terms. A row group is read and decoded once per
+searcher: it stays resident in the hot LRU, so a later term it covers is
+filtered out of it rather than read again. It runs the same interval
+Block-Max WAND kernel the distributed path uses. The role is exactly PISA's
+mmap'd query engine over CIFF-derived indexes, re-expressed on the
+Spark-built artifact:
 
     Spark (build, refresh, heavy batch scoring)  ←  one storage layout  →
     LocalSearcher (interactive top-k, ~ms per query)
@@ -43,11 +46,14 @@ from ciff_spark.wand import PostingList, allowed_mask, exhaustive_topk, wand_top
 class LocalSearcher:
     # hot posting lists stay resident across queries (query logs are Zipf):
     # a term's PostingList (raw bins, block columns, decoded arrays) caches
-    # per term, LRU-bounded BY BYTES (count alone is unbounded memory when
-    # hot terms carry millions of postings).
+    # per term, and so does each postings row group a fetch read (its
+    # pyarrow (term, blocks) table), so a later cold term in that group
+    # filters it instead of reading and decoding it again. Both share one
+    # LRU, bounded in entries and BY BYTES (count alone is unbounded memory
+    # when hot terms carry millions of postings).
     # The analog of PISA serving from an mmap'd index with the page cache
     # warm — here the decode work is cached too, which mmap alone can't give.
-    CACHE_TERMS = 65536
+    CACHE_TERMS = 65536  # entries: term lists and row groups
     CACHE_BYTES = 1 << 30  # 1 GiB of raw bins + decoded-array estimate
 
     def __init__(self, index_root: str) -> None:
@@ -105,10 +111,12 @@ class LocalSearcher:
         self._seg: pa.Table | None = None
         self._seg_terms: np.ndarray | None = None
         self._seg_df: dict[str, int] = {}
-        # term → PostingList, LRU over CACHE_TERMS/_BYTES; a list keeps its
-        # decoded blocks and block geometry across queries
-        self._hot: OrderedDict[str, PostingList] = OrderedDict()
-        self._hot_bytes: dict[str, int] = {}
+        # one LRU over CACHE_TERMS/_BYTES: term → PostingList (a list keeps
+        # its decoded blocks and block geometry across queries) and
+        # (postings file, row group) → that group's (term, blocks) table,
+        # charged its buffers
+        self._hot: OrderedDict[str | tuple[str, int], PostingList | pa.Table] = OrderedDict()
+        self._hot_bytes: dict[str | tuple[str, int], int] = {}
         self._hot_total = 0
 
     #: above this vocabulary size, term stats resolve lazily per query
@@ -142,10 +150,10 @@ class LocalSearcher:
     def _lexicon(self, pgroup: int | None) -> list[tuple]:
         """Footer lexicon of one pgroup's postings files, read on first
         touch (``None``: every file, for indexes without a term → pgroup
-        map): per file its ``ParquetFile`` (open until ``close``) and each
-        row group's (min, max) ``term``, or ``None`` for a group without
-        statistics. Ranges compare as ``str``: unsigned UTF-8 byte order is
-        code-point order."""
+        map): per file its path, its ``ParquetFile`` (open until ``close``)
+        and each row group's (min, max) ``term``, or ``None`` for a group
+        without statistics. Ranges compare as ``str``: unsigned UTF-8 byte
+        order is code-point order."""
         lex = self._lex.get(pgroup)
         if lex is None:
             pat = "*" if pgroup is None else pgroup
@@ -155,22 +163,32 @@ class LocalSearcher:
                 md = pf.metadata
                 col = [md.schema.column(i).path for i in range(md.num_columns)].index("term")
                 sts = [md.row_group(i).column(col).statistics for i in range(md.num_row_groups)]
-                lex.append((pf, [
+                lex.append((f, pf, [
                     (s.min, s.max) if s is not None and s.has_min_max else None for s in sts
                 ]))
         return lex
 
     def close(self) -> None:
-        """Close the postings files the footer lexicon holds open."""
-        for pf, _ in (entry for lex in self._lex.values() for entry in lex):
+        """Close the postings files the footer lexicon holds open and drop
+        their row groups from the hot LRU; term lists stay."""
+        for _, pf, _ in (entry for lex in self._lex.values() for entry in lex):
             pf.close()
         self._lex.clear()
+        for key in [key for key in self._hot if isinstance(key, tuple)]:
+            del self._hot[key]
+            self._hot_total -= self._hot_bytes.pop(key)
 
-    def _fetch_lists(self, terms: list[str]) -> dict[str, PostingList]:
+    def _fetch_lists(
+        self, terms: list[str], stats: dict | None = None
+    ) -> dict[str, PostingList]:
         """term → its ``PostingList``, served from the hot LRU when possible.
-        A missing term reads only the row groups whose footer range covers
-        it (a group without statistics is read), and its segment rows are a
-        slice of the term-sorted segment table."""
+        A missing term is filtered out of the row groups whose footer range
+        covers it (a group without statistics covers every term): a group
+        already resident in the LRU is filtered where it lies, the others
+        are read, one group per read, and stay resident. Its segment rows
+        are a slice of the term-sorted segment table. ``stats`` accumulates
+        ``row_groups_read`` and ``row_groups_resident`` (covering groups
+        found in the LRU)."""
         self._resolve_stats(terms)
         # df=0 is the lazy path's "known absent" sentinel — never fetch those
         present = [t for t in terms if self._df.get(t) or self._seg_df.get(t)]
@@ -185,42 +203,65 @@ class LocalSearcher:
                 out[t] = hit
             else:
                 missing.append(t)
+        read = resident = 0
         if missing:
             parts = []
             # segment-only terms have no base pgroup
+            base = [t for t in missing if self._df.get(t)]
             by_pg: dict[int | None, list[str]] = {}
-            for t in (t for t in missing if self._df.get(t)):
+            for t in base:
                 by_pg.setdefault(None if self._pg is None else self._pg[t], []).append(t)
+            groups = []  # every covering group, resident or just read
             for g, ts in by_pg.items():
-                for pf, ranges in self._lexicon(g):
-                    groups = [
-                        i for i, r in enumerate(ranges)
-                        if r is None or any(r[0] <= t <= r[1] for t in ts)
-                    ]
-                    if groups:
-                        # one or two groups per file: pyarrow's thread pool
-                        # costs more than it overlaps (~10-15% on a read)
-                        tbl = pf.read_row_groups(
-                            groups, columns=["term", "blocks"], use_threads=False
-                        )
-                        parts.append(tbl.filter(pc.is_in(tbl["term"], pa.array(ts))))
+                for f, pf, ranges in self._lexicon(g):
+                    for i, r in enumerate(ranges):
+                        if r is not None and not any(r[0] <= t <= r[1] for t in ts):
+                            continue
+                        tbl = self._hot.get((f, i))
+                        if tbl is None:
+                            # pyarrow's thread pool costs more than it
+                            # overlaps on one group (~10-15% on a read)
+                            tbl = pf.read_row_groups(
+                                [i], columns=["term", "blocks"], use_threads=False
+                            )
+                            self._hold((f, i), tbl, tbl.get_total_buffer_size())
+                            read += 1
+                        else:
+                            self._hot.move_to_end((f, i))
+                            resident += 1
+                        groups.append(tbl)
+            if groups:
+                # not a searchsorted slice: legacy shuffled and stat-less
+                # groups are not term-sorted
+                tbl = pa.concat_tables(groups)
+                parts.append(tbl.filter(pc.is_in(tbl["term"], pa.array(base))))
             for t in missing:
                 if self._seg_df.get(t):
                     lo = int(np.searchsorted(self._seg_terms, t, "left"))
                     hi = int(np.searchsorted(self._seg_terms, t, "right"))
                     parts.append(self._seg.slice(lo, hi - lo))
+            # a PostingList copies its term's bytes out of the group, so
+            # evicting the group frees it
             fetched = _term_lists(pa.concat_tables(parts)) if parts else {}
             for t, plist in fetched.items():
-                out[t] = self._hot[t] = plist
-                self._hot_bytes[t] = plist.nbytes
-                self._hot_total += plist.nbytes
+                out[t] = plist
+                self._hold(t, plist, plist.nbytes)
             while self._hot and (
                 len(self._hot) > self.CACHE_TERMS
                 or self._hot_total > self.CACHE_BYTES
             ):
-                old_t, _ = self._hot.popitem(last=False)
-                self._hot_total -= self._hot_bytes.pop(old_t, 0)
+                old, _ = self._hot.popitem(last=False)
+                self._hot_total -= self._hot_bytes.pop(old)
+        if stats is not None:
+            stats["row_groups_read"] = stats.get("row_groups_read", 0) + read
+            stats["row_groups_resident"] = stats.get("row_groups_resident", 0) + resident
         return out
+
+    def _hold(self, key, value, nbytes: int) -> None:
+        """Put ``value`` in the hot LRU as its newest entry, charged ``nbytes``."""
+        self._hot[key] = value
+        self._hot_bytes[key] = nbytes
+        self._hot_total += nbytes
 
     def search(
         self, query: str, k: int = 10, stats: dict | None = None,
@@ -230,7 +271,8 @@ class LocalSearcher:
         """BM25 top-k: [(docid, score)] — identical semantics to the
         distributed readers (WAND over per-term blocks; a term's rows
         concatenate in docid order so their blocks form one valid list).
-        ``stats``: optional dict accumulating wand_topk's decode counters.
+        ``stats``: optional dict accumulating wand_topk's decode counters
+        and the fetch's ``row_groups_read``/``row_groups_resident``.
         ``scoring="impact"`` serves quantized impact indexes (Σ stored tf,
         term weight 1.0, max_tf block bounds) — PISA's quantized scorer over
         the same artifact the distributed impact reader queries.
@@ -246,7 +288,7 @@ class LocalSearcher:
         if scoring not in ("bm25", "impact"):
             raise ValueError(f"unknown scoring {scoring!r}")
         terms = sorted(set(tokenize_py(query)))
-        lists_by_term = self._fetch_lists(terms)
+        lists_by_term = self._fetch_lists(terms, stats)
         if not lists_by_term:
             return []
         impact = scoring == "impact"
@@ -278,15 +320,15 @@ class LocalSearcher:
         self, queries: list[str], k: int = 10, stats: dict | None = None,
         scoring: str = "bm25",
     ) -> list[list[tuple[int, float]]]:
-        """Top-k for a BATCH of queries, amortizing the storage round-trips:
-        ONE fetch covers the union of the batch's terms (a row group that
-        holds several batch terms is read and decoded once, not once per
-        query), then the WAND kernel runs per query against the now-hot
-        lists, sharing decoded blocks through the per-term caches. Results
-        are identical to ``search`` per query."""
+        """Top-k for a BATCH of queries: ONE fetch covers the union of the
+        batch's terms, then the WAND kernel runs per query against the
+        now-hot lists, sharing decoded blocks through the per-term caches.
+        A row group is read and decoded once per searcher, in a batch as
+        across ``search`` calls, since it stays resident in the hot LRU.
+        Results are identical to ``search`` per query."""
         all_terms = sorted({t for q in queries for t in tokenize_py(q)})
         if all_terms:
-            self._fetch_lists(all_terms)  # one scan warms every batch term
+            self._fetch_lists(all_terms, stats)  # one fetch warms every batch term
         return [
             self.search(q, k=k, stats=stats, scoring=scoring) for q in queries
         ]

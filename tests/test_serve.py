@@ -10,6 +10,7 @@ import pytest
 
 from ciff_spark.build import BuildConfig, build_index
 from ciff_spark.serve import LocalSearcher
+from ciff_spark.wand import PostingList
 from ciff_spark.sources.transcripts import transcripts_df, transcripts_pdf
 from oracle import OracleIndex, posting_list
 
@@ -248,11 +249,14 @@ def test_serving_decodes_only_through_the_batch_decoder(served, segmented, monke
 
 
 def test_hot_cache_charges_the_bytes_a_list_owns(segmented):
-    """A hot-cache entry is charged exactly the bytes its ``PostingList``
-    owns once decoded and its geometry cached, and it owns every array it
-    holds: a term's bins are copied out of the row-group read, so a
-    one-term entry never keeps a whole 1024-row group alive uncharged and
-    ``CACHE_BYTES`` bounds memory."""
+    """A hot-cache entry is charged exactly the bytes it holds. A term's
+    ``PostingList``, once decoded and its geometry cached, owns every array
+    it holds: its bins are copied out of the row-group read, so a term entry
+    never keeps a 1024-row group alive uncharged. A resident row group is
+    charged exactly its buffers, so ``CACHE_BYTES`` bounds memory."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     from ciff_spark.serve import FreshSearcher
 
     for cls in (LocalSearcher, FreshSearcher):
@@ -260,12 +264,22 @@ def test_hot_cache_charges_the_bytes_a_list_owns(segmented):
         for q in QUERIES + ["w000000 w000001 w000002", "w000010 w000200"]:
             s.search(q, k=7)
             s.search(q, k=7, prune=False)  # decodes every block: all arrays allocated
-        assert s._hot, cls.__name__
-        for t, plist in s._hot.items():
+        lists = {t: v for t, v in s._hot.items() if isinstance(v, PostingList)}
+        groups = {key: v for key, v in s._hot.items() if isinstance(v, pa.Table)}
+        assert lists and groups and len(lists) + len(groups) == len(s._hot), cls.__name__
+        for t, plist in lists.items():
             (lo, _hi, mtf), = plist._geom.values()  # hi is cols.max_docid
             arrays = [*plist.cols, plist.post_off, plist._done, plist._docs, plist._tfs, lo, mtf]
             assert all(a.base is None for a in arrays), (cls.__name__, t)
             assert s._hot_bytes[t] == plist.nbytes == sum(a.nbytes for a in arrays)
+        for (f, i), tbl in groups.items():
+            assert tbl.column_names == ["term", "blocks"]
+            assert tbl.num_rows == pq.ParquetFile(f).metadata.row_group(i).num_rows
+            buffers = [
+                b for col in tbl.columns for chunk in col.chunks
+                for b in chunk.buffers() if b is not None
+            ]
+            assert s._hot_bytes[(f, i)] == sum(b.size for b in buffers), (cls.__name__, f, i)
         assert s._hot_total == sum(s._hot_bytes.values())
 
 
@@ -273,8 +287,8 @@ def test_hot_cache_charges_the_bytes_a_list_owns(segmented):
 # the footer lexicon: a cold query reads only the row groups of its terms
 # ---------------------------------------------------------------------------
 
-def _spy_row_group_reads(monkeypatch) -> list[tuple[int, list[int]]]:
-    """Record (row groups in the file, groups read) per
+def _spy_row_group_reads(monkeypatch) -> list[tuple[object, list[int]]]:
+    """Record (``ParquetFile``, groups read) per
     ``ParquetFile.read_row_groups`` call."""
     import pyarrow.parquet as pq
 
@@ -282,7 +296,7 @@ def _spy_row_group_reads(monkeypatch) -> list[tuple[int, list[int]]]:
     read = pq.ParquetFile.read_row_groups
 
     def spy(self, row_groups, *args, **kwargs):
-        calls.append((self.metadata.num_row_groups, list(row_groups)))
+        calls.append((self, list(row_groups)))
         return read(self, row_groups, *args, **kwargs)
 
     monkeypatch.setattr(pq.ParquetFile, "read_row_groups", spy)
@@ -297,46 +311,167 @@ def _vocab_sample(root: str, n: int) -> list[str]:
     return [terms[i] for i in np.linspace(0, len(terms) - 1, n).astype(int)]
 
 
-def test_one_term_query_reads_at_most_two_row_groups(spark, tmp_path, monkeypatch):
-    """A cold one-term query reads at most the two row groups its rows can
-    straddle in each file it touches, on files of several groups, and
-    ranks exactly as the unpruned kernel and ``IndexReader`` exact."""
-    from ciff_spark.query import IndexReader
+def _covering(searcher: LocalSearcher, term: str) -> set[tuple[str, int]]:
+    """The (file, row group) pairs whose footer range covers ``term``."""
+    lex = searcher._lexicon(None if searcher._pg is None else searcher._pg[term])
+    return {
+        (f, i) for f, _, ranges in lex for i, r in enumerate(ranges)
+        if r is None or r[0] <= term <= r[1]
+    }
 
-    root = str(tmp_path / "idx")
+
+def _group_sharing_pairs(root: str, n: int) -> list[tuple[str, str]]:
+    """``n`` pairs of distinct base terms covered by the same row groups,
+    spread over the vocabulary."""
+    probe = LocalSearcher(root)
+    by_groups: dict[frozenset, list[str]] = {}
+    for t in _vocab_sample(root, 200):
+        by_groups.setdefault(frozenset(_covering(probe, t)), []).append(t)
+    probe.close()
+    pairs = [(ts[0], ts[-1]) for ts in by_groups.values() if len(ts) > 1]
+    return [pairs[i] for i in np.linspace(0, len(pairs) - 1, n).astype(int)]
+
+
+@pytest.fixture(scope="module")
+def grouped(spark, tmp_path_factory):
+    """An index whose postings files hold several 1024-row groups."""
+    root = str(tmp_path_factory.mktemp("grouped") / "idx")
     build_index(
         transcripts_df(spark, 40, seed=21, partitions=2), root,
         config=BuildConfig(n_shards=4, n_pgroups=2, block_size=16), resume=False,
     )
-    terms = _vocab_sample(root, 12)
+    return root
+
+
+def _exact_topk(spark, root: str, queries: list[str]) -> list[list[tuple[int, float]]]:
+    """``IndexReader.topk(mode="exact")`` per query, ranked by (−score, docid)."""
+    from ciff_spark.query import IndexReader
+
     exact: dict[int, list] = {}
-    for r in IndexReader(spark, root).topk(list(enumerate(terms)), k=10, mode="exact").collect():
+    for r in IndexReader(spark, root).topk(list(enumerate(queries)), k=10, mode="exact").collect():
         exact.setdefault(r["qid"], []).append((r["docid"], r["score"]))
+    return [sorted(exact.get(i, []), key=lambda x: (-x[1], x[0])) for i in range(len(queries))]
+
+
+def _assert_ranks_like(got: list, want: list, label) -> None:
+    assert [d for d, _ in got] == [d for d, _ in want], label
+    assert np.allclose([s for _, s in got], [s for _, s in want], rtol=1e-12), label
+
+
+def test_one_term_query_reads_at_most_two_row_groups(spark, grouped, monkeypatch):
+    """A cold one-term query reads at most the two row groups its rows can
+    straddle in each file it touches, on files of several groups, and
+    ranks exactly as the unpruned kernel and ``IndexReader`` exact."""
+    from collections import Counter
+
+    root = grouped
+    terms = _vocab_sample(root, 12)
+    exact = _exact_topk(spark, root, terms)
     calls = _spy_row_group_reads(monkeypatch)
-    for qid, t in enumerate(terms):
+    for t, want in zip(terms, exact):
         n = len(calls)
         got = LocalSearcher(root).search(t, k=10)
-        assert calls[n:] and all(len(groups) <= 2 for _, groups in calls[n:]), t
+        per_file = Counter(id(pf) for pf, groups in calls[n:] for _ in groups)
+        assert per_file and max(per_file.values()) <= 2, t
         assert got == LocalSearcher(root).search(t, k=10, prune=False), t
-        want = sorted(exact[qid], key=lambda x: (-x[1], x[0]))
-        assert [d for d, _ in got] == [d for d, _ in want], t
-        assert np.allclose([s for _, s in got], [s for _, s in want], rtol=1e-12), t
-    assert max(n_groups for n_groups, _ in calls) > 2
-    # close releases the files the lexicon holds; a later miss reopens them
+        _assert_ranks_like(got, want, t)
+    assert max(pf.metadata.num_row_groups for pf, _ in calls) > 2
+    # close releases the files the lexicon holds and the row groups read
+    # from them; a later miss reopens the files and reads the groups again
     s = LocalSearcher(root)
-    first = s.search(terms[0], k=10)
-    held = [pf for lex in s._lex.values() for pf, _ in lex]
+    a, b = _group_sharing_pairs(root, 1)[0]
+    first = s.search(a, k=10)
+    held = [pf for lex in s._lex.values() for _, pf, _ in lex]
+    assert any(isinstance(key, tuple) for key in s._hot)
     s.close()
     assert held and all(pf.closed for pf in held) and s._lex == {}
-    assert s.search(terms[1], k=10) == LocalSearcher(root).search(terms[1], k=10)
-    assert s.search(terms[0], k=10) == first
+    assert not any(isinstance(key, tuple) for key in s._hot)
+    assert s._hot_total == sum(s._hot_bytes.values())
+    st: dict = {}
+    n = len(calls)
+    got = s.search(b, k=10, stats=st)
+    assert st["row_groups_read"] == len(calls) - n == len(_covering(s, b)) > 0
+    assert st["row_groups_resident"] == 0
+    assert got == LocalSearcher(root).search(b, k=10)
+    assert s.search(a, k=10) == first
+
+
+def test_cold_terms_read_a_shared_row_group_once(spark, grouped, monkeypatch):
+    """Two cold queries on one searcher whose terms lie in the same row
+    groups: the second filters the groups the first read, issuing no read,
+    and both rank exactly as a fresh searcher, the unpruned kernel and
+    ``IndexReader`` exact."""
+    root = grouped
+    pairs = _group_sharing_pairs(root, 3)
+    exact = _exact_topk(spark, root, [t for pair in pairs for t in pair])
+    calls = _spy_row_group_reads(monkeypatch)
+    for j, (a, b) in enumerate(pairs):
+        s = LocalSearcher(root)
+        cover = _covering(s, a)
+        assert cover == _covering(s, b) and a != b
+        for i, t in enumerate((a, b)):
+            st: dict = {}
+            n = len(calls)
+            got = s.search(t, k=10, stats=st)
+            if i == 0:  # cold: reads every covering group, one per read
+                assert st["row_groups_read"] == len(calls) - n == len(cover), t
+                assert st["row_groups_resident"] == 0, t
+            else:  # the same groups are resident: no read at all
+                assert calls[n:] == [] and st["row_groups_read"] == 0, t
+                assert st["row_groups_resident"] == len(cover), t
+            assert got == LocalSearcher(root).search(t, k=10), t
+            assert got == LocalSearcher(root).search(t, k=10, prune=False), t
+            assert got == s.search(t, k=10, prune=False), t
+            _assert_ranks_like(got, exact[2 * j + i], t)
+
+
+@pytest.mark.parametrize("budget", ["bytes", "entries"])
+def test_hot_cache_budget_evicts_row_groups_soundly(grouped, monkeypatch, budget):
+    """Under a budget smaller than one row group (or than a query's
+    entries), every query still equals an unbounded searcher's, and after
+    every fetch the LRU total is the sum of its charges and within the
+    budget: no group stays resident under the byte budget, and later
+    queries read evicted groups again."""
+    import pyarrow as pa
+
+    root = grouped
+    terms = _vocab_sample(root, 24)
+    queries = [" ".join(terms[i::5]) for i in range(5)] + terms[::2]
+    unbounded = LocalSearcher(root)
+    want = [unbounded.search(q, k=10) for q in queries]
+    sizes = [v.get_total_buffer_size() for v in unbounded._hot.values() if isinstance(v, pa.Table)]
+    if budget == "bytes":
+        monkeypatch.setattr(LocalSearcher, "CACHE_BYTES", min(sizes) - 1)
+    else:
+        monkeypatch.setattr(LocalSearcher, "CACHE_TERMS", 2)
+    real = LocalSearcher._fetch_lists
+
+    def checked(self, *a, **kw):
+        out = real(self, *a, **kw)
+        assert self._hot_bytes.keys() == self._hot.keys()
+        assert self._hot_total == sum(self._hot_bytes.values())
+        assert self._hot_total <= self.CACHE_BYTES and len(self._hot) <= self.CACHE_TERMS
+        if budget == "bytes":
+            assert not any(isinstance(v, pa.Table) for v in self._hot.values())
+        return out
+
+    monkeypatch.setattr(LocalSearcher, "_fetch_lists", checked)
+    s = LocalSearcher(root)
+    st: dict = {}
+    for _ in range(2):
+        for q, w in zip(queries, want):
+            assert s.search(q, k=10, stats=st) == w, q
+    assert st["row_groups_read"] > len(sizes)  # evicted groups were read again
+    if budget == "bytes":
+        assert st["row_groups_resident"] == 0
 
 
 def test_lexicon_serves_legacy_layouts_identically(segmented, tmp_path):
     """Indexes written before bounded row groups stay correct with no
     fallback path: postings rewritten as ONE shuffled row group per pgroup,
     one file without statistics, serve exactly as the original through
-    ``LocalSearcher`` and ``FreshSearcher``."""
+    ``LocalSearcher`` and ``FreshSearcher``, with the groups resident or
+    read cold."""
     import glob
     import os
     import shutil
@@ -363,12 +498,17 @@ def test_lexicon_serves_legacy_layouts_identically(segmented, tmp_path):
     terms = _vocab_sample(segmented, 30)
     queries = QUERIES + [" ".join(terms[i::7]) for i in range(7)] + terms[::3]
     for cls in (LocalSearcher, FreshSearcher):
+        # ONE searcher per layout serves every query, so a later query's
+        # cold terms are filtered out of a shuffled group already resident;
+        # each result also equals a fresh legacy searcher's
         new, old = cls(segmented), cls(legacy)
+        st: dict = {}
         for q in queries:
             for prune in (True, False):
-                assert old.search(q, k=10, prune=prune) == new.search(q, k=10, prune=prune), (
-                    cls.__name__, q, prune,
-                )
+                got = old.search(q, k=10, prune=prune, stats=st)
+                assert got == new.search(q, k=10, prune=prune), (cls.__name__, q, prune)
+                assert got == cls(legacy).search(q, k=10, prune=prune), (cls.__name__, q, prune)
+        assert st["row_groups_read"] <= len(dirs) < st["row_groups_resident"], cls.__name__
 
 
 def test_lexicon_orders_non_ascii_terms_like_str(spark, tmp_path, monkeypatch):
