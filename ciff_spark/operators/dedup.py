@@ -494,18 +494,19 @@ def connected_components(
     :func:`dedup_clusters` for the algorithm and scale notes). Edge sets at
     or below ``driver_max_edges`` short-circuit to a driver union-find +
     one broadcast join — same fixpoint, none of the per-round jobs."""
-    if driver_max_edges > 0:
-        probe = pairs.select("d1", "d2").limit(driver_max_edges + 1).toPandas()
-        if len(probe) <= driver_max_edges:
-            return _driver_components(docs, probe)
-    edges = (
-        pairs.selectExpr("d1 AS src", "d2 AS dst")
-        .unionAll(pairs.selectExpr("d2 AS src", "d1 AS dst"))
-        .cache()
-    )
-    labels = docs.select("docid", F.col("docid").alias("cluster"))
-    prev = None  # the previous round's checkpoint
+    # persisted once: above the gate, the probe, every round's edges and a
+    # star escalation all read it, so the pairs pipeline runs once
+    pairs = pairs.select("d1", "d2").persist()
     try:
+        if driver_max_edges > 0:
+            probe = pairs.limit(driver_max_edges + 1).toPandas()
+            if len(probe) <= driver_max_edges:
+                return _driver_components(docs, probe)
+        edges = pairs.selectExpr("d1 AS src", "d2 AS dst").unionAll(
+            pairs.selectExpr("d2 AS src", "d1 AS dst")
+        )
+        labels = docs.select("docid", F.col("docid").alias("cluster"))
+        prev = None  # the previous round's checkpoint
         for _ in range(max_iters):
             nbr = (
                 edges.join(
@@ -547,7 +548,7 @@ def connected_components(
         _release_checkpoint(prev)
         return connected_components_star(docs, pairs)
     finally:
-        edges.unpersist()
+        pairs.unpersist()
 
 
 def connected_components_star(

@@ -211,7 +211,7 @@ def _packed_blocks(spark: SparkSession, sf_dir: str, n_blocks: int) -> DataFrame
 
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
 
-    def pack(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def pack(key, pdf):
         pdf = pdf.sort_values("vec_id")
         mat = np.stack([np.asarray(v, np.float64) for v in pdf["embedding"]])
         norms = np.linalg.norm(mat, axis=1)

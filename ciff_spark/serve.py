@@ -15,10 +15,10 @@ Spark-built artifact:
     LocalSearcher (interactive top-k, ~ms per query)
 
 ``FreshSearcher`` serves base ∪ committed streaming segments through the
-SAME path: segments are the dense docid continuation of the base, so a
-term's segment rows concatenate after its base rows exactly like one more
-shard, and every search is one ``wand_topk`` (or, unpruned, one
-``exhaustive_topk``) call over those lists.
+SAME path: segment files join the footer lexicon, their row groups resident
+from the open on; a term's segment rows concatenate after its base rows
+exactly like one more shard, and every search is one ``wand_topk`` (or,
+unpruned, one ``exhaustive_topk``) call over those lists.
 
 Rank-identity with both the distributed reader and the pytest oracle is
 asserted in tests. Doc lengths load once from ``shard_sizes`` (the .sizes
@@ -47,8 +47,9 @@ class LocalSearcher:
     # hot posting lists stay resident across queries (query logs are Zipf):
     # a term's PostingList (raw bins, block columns, decoded arrays) caches
     # per term, and so does each postings row group a fetch read (its
-    # pyarrow (term, blocks) table), so a later cold term in that group
-    # filters it instead of reading and decoding it again. Both share one
+    # pyarrow (term, blocks) table; FreshSearcher's open reads every segment
+    # group), so a later cold term in that group filters it instead of
+    # reading and decoding it again. Both share one
     # LRU, bounded in entries and BY BYTES (count alone is unbounded memory
     # when hot terms carry millions of postings).
     # The analog of PISA serving from an mmap'd index with the page cache
@@ -85,31 +86,20 @@ class LocalSearcher:
         ts_files = sorted(glob.glob(f"{self.root}/term_stats/*.parquet"))
         n_terms = sum(pq.ParquetFile(f).metadata.num_rows for f in ts_files)
         self._ts_ds = ds.dataset(ts_files, format="parquet")
-        cols = self._ts_ds.schema.names
-        self._has_pg = "pgroup" in cols
-        if n_terms <= self.EAGER_STATS_MAX_TERMS:
-            ts = pq.read_table(
-                f"{self.root}/term_stats",
-                columns=["term", "df"] + (["pgroup"] if self._has_pg else []),
-            )
-            # term → pgroup lets a query open the footer lexicon of ONLY
-            # its terms' postings/pgroup=* dirs (≤|q| of them) instead of
-            # every postings file's — the r2 serving regression. Older
-            # indexes without the column fall back to one lexicon over all
-            # files.
-            self._df = {}
-            self._pg = {} if self._has_pg else None
-            self._add_stats(ts)
-            self._lazy_stats = False
-        else:
-            self._df = {}
-            self._pg = {} if self._has_pg else None
-            self._lazy_stats = True
-        self._lex: dict[int | None, list[tuple]] = {}  # see _lexicon
-        # streaming segments (FreshSearcher opens them): their postings and
-        # term column, sorted by term, and term → Σ segment df
-        self._seg: pa.Table | None = None
-        self._seg_terms: np.ndarray | None = None
+        # term → pgroup lets a query open the footer lexicon of ONLY its
+        # terms' postings/pgroup=* dirs (≤|q| of them) instead of every
+        # postings file's — the r2 serving regression. Older indexes
+        # without the column fall back to one lexicon over all files.
+        self._ts_cols = [c for c in ("term", "df", "pgroup") if c in self._ts_ds.schema.names]
+        self._df: dict[str, int] = {}
+        self._pg = {} if "pgroup" in self._ts_cols else None
+        self._lazy_stats = n_terms > self.EAGER_STATS_MAX_TERMS
+        if not self._lazy_stats:
+            self._add_stats(self._ts_ds.to_table(columns=self._ts_cols))
+        self._lex: dict[int | str | None, list[tuple]] = {}  # see _lexicon
+        # streaming segments (FreshSearcher opens them): their committed
+        # postings files, lexicon key "seg", and term → Σ segment df
+        self._seg_files: list[str] = []
         self._seg_df: dict[str, int] = {}
         # one LRU over CACHE_TERMS/_BYTES: term → PostingList (a list keeps
         # its decoded blocks and block geometry across queries) and
@@ -131,11 +121,9 @@ class LocalSearcher:
         missing = [t for t in terms if t not in self._df]
         if not missing:
             return
-        tbl = self._ts_ds.to_table(
-            columns=["term", "df"] + (["pgroup"] if self._has_pg else []),
-            filter=pc.field("term").isin(missing),
+        self._add_stats(
+            self._ts_ds.to_table(columns=self._ts_cols, filter=pc.field("term").isin(missing))
         )
-        self._add_stats(tbl)
         for t in missing:
             self._df.setdefault(t, 0)
 
@@ -147,18 +135,19 @@ class LocalSearcher:
         if self._pg is not None:
             self._pg.update(zip(terms, tbl["pgroup"].to_numpy().tolist()))
 
-    def _lexicon(self, pgroup: int | None) -> list[tuple]:
-        """Footer lexicon of one pgroup's postings files, read on first
-        touch (``None``: every file, for indexes without a term → pgroup
-        map): per file its path, its ``ParquetFile`` (open until ``close``)
-        and each row group's (min, max) ``term``, or ``None`` for a group
-        without statistics. Ranges compare as ``str``: unsigned UTF-8 byte
-        order is code-point order."""
-        lex = self._lex.get(pgroup)
+    def _lexicon(self, key: int | str | None) -> list[tuple]:
+        """Footer lexicon of one pgroup's postings files (``None``: every
+        file, for indexes without a term → pgroup map; ``"seg"``: the
+        committed segment files), read on first touch: per file its path,
+        its ``ParquetFile`` (open until ``close``) and each row group's
+        (min, max) ``term``, or ``None`` for a group without statistics.
+        Ranges compare as ``str``: unsigned UTF-8 byte order is code-point
+        order."""
+        lex = self._lex.get(key)
         if lex is None:
-            pat = "*" if pgroup is None else pgroup
-            lex = self._lex[pgroup] = []
-            for f in sorted(glob.glob(f"{self.root}/postings/pgroup={pat}/*.parquet")):
+            pat = f"{self.root}/postings/pgroup={'*' if key is None else key}/*.parquet"
+            lex = self._lex[key] = []
+            for f in self._seg_files if key == "seg" else sorted(glob.glob(pat)):
                 pf = pq.ParquetFile(f)
                 md = pf.metadata
                 col = [md.schema.column(i).path for i in range(md.num_columns)].index("term")
@@ -169,8 +158,8 @@ class LocalSearcher:
         return lex
 
     def close(self) -> None:
-        """Close the postings files the footer lexicon holds open and drop
-        their row groups from the hot LRU; term lists stay."""
+        """Close the postings files the footer lexicon holds open (segment
+        files too) and drop their row groups from the hot LRU; term lists stay."""
         for _, pf, _ in (entry for lex in self._lex.values() for entry in lex):
             pf.close()
         self._lex.clear()
@@ -183,17 +172,15 @@ class LocalSearcher:
     ) -> dict[str, PostingList]:
         """term → its ``PostingList``, served from the hot LRU when possible.
         A missing term is filtered out of the row groups whose footer range
-        covers it (a group without statistics covers every term): a group
-        already resident in the LRU is filtered where it lies, the others
-        are read, one group per read, and stay resident. Its segment rows
-        are a slice of the term-sorted segment table. ``stats`` accumulates
-        ``row_groups_read`` and ``row_groups_resident`` (covering groups
-        found in the LRU)."""
+        covers it (a group without statistics covers every term), in its
+        pgroup's files if it has base rows and in the segment files if it
+        has segment rows: a group already resident in the LRU is filtered
+        where it lies, the others are read, one group per read, and stay
+        resident. ``stats`` accumulates ``row_groups_read`` and
+        ``row_groups_resident`` (covering groups found in the LRU)."""
         self._resolve_stats(terms)
         # df=0 is the lazy path's "known absent" sentinel — never fetch those
         present = [t for t in terms if self._df.get(t) or self._seg_df.get(t)]
-        if not present:
-            return {}
         out: dict[str, PostingList] = {}
         missing = []
         for t in present:
@@ -204,64 +191,54 @@ class LocalSearcher:
             else:
                 missing.append(t)
         read = resident = 0
-        if missing:
-            parts = []
-            # segment-only terms have no base pgroup
-            base = [t for t in missing if self._df.get(t)]
-            by_pg: dict[int | None, list[str]] = {}
-            for t in base:
-                by_pg.setdefault(None if self._pg is None else self._pg[t], []).append(t)
-            groups = []  # every covering group, resident or just read
-            for g, ts in by_pg.items():
-                for f, pf, ranges in self._lexicon(g):
-                    for i, r in enumerate(ranges):
-                        if r is not None and not any(r[0] <= t <= r[1] for t in ts):
-                            continue
-                        tbl = self._hot.get((f, i))
-                        if tbl is None:
-                            # pyarrow's thread pool costs more than it
-                            # overlaps on one group (~10-15% on a read)
-                            tbl = pf.read_row_groups(
-                                [i], columns=["term", "blocks"], use_threads=False
-                            )
-                            self._hold((f, i), tbl, tbl.get_total_buffer_size())
-                            read += 1
-                        else:
-                            self._hot.move_to_end((f, i))
-                            resident += 1
-                        groups.append(tbl)
-            if groups:
-                # not a searchsorted slice: legacy shuffled and stat-less
-                # groups are not term-sorted
-                tbl = pa.concat_tables(groups)
-                parts.append(tbl.filter(pc.is_in(tbl["term"], pa.array(base))))
-            for t in missing:
-                if self._seg_df.get(t):
-                    lo = int(np.searchsorted(self._seg_terms, t, "left"))
-                    hi = int(np.searchsorted(self._seg_terms, t, "right"))
-                    parts.append(self._seg.slice(lo, hi - lo))
-            # a PostingList copies its term's bytes out of the group, so
-            # evicting the group frees it
-            fetched = _term_lists(pa.concat_tables(parts)) if parts else {}
+        by_key: dict[int | str | None, list[str]] = {}
+        for t in missing:
+            if self._df.get(t):  # segment-only terms have no base pgroup
+                by_key.setdefault(None if self._pg is None else self._pg[t], []).append(t)
+            if self._seg_df.get(t):
+                by_key.setdefault("seg", []).append(t)
+        groups = []  # every covering group, resident or just read
+        for key, ts in by_key.items():
+            for f, pf, ranges in self._lexicon(key):
+                for i, r in enumerate(ranges):
+                    if r is not None and not any(r[0] <= t <= r[1] for t in ts):
+                        continue
+                    tbl = self._hot.get((f, i))
+                    if tbl is None:
+                        # pyarrow's thread pool costs more than it overlaps
+                        # on one group (~10-15% on a read)
+                        tbl = pf.read_row_groups([i], columns=["term", "blocks"], use_threads=False)
+                        self._hold((f, i), tbl, tbl.get_total_buffer_size())
+                        read += 1
+                    else:
+                        self._hot.move_to_end((f, i))
+                        resident += 1
+                    groups.append(tbl)
+        if groups:
+            # not a searchsorted slice: legacy shuffled and stat-less
+            # groups are not term-sorted. A PostingList copies its
+            # term's bytes out of the group, so evicting the group frees it
+            tbl = pa.concat_tables(groups)
+            fetched = _term_lists(tbl.filter(pc.is_in(tbl["term"], pa.array(missing))))
             for t, plist in fetched.items():
                 out[t] = plist
                 self._hold(t, plist, plist.nbytes)
-            while self._hot and (
-                len(self._hot) > self.CACHE_TERMS
-                or self._hot_total > self.CACHE_BYTES
-            ):
-                old, _ = self._hot.popitem(last=False)
-                self._hot_total -= self._hot_bytes.pop(old)
         if stats is not None:
             stats["row_groups_read"] = stats.get("row_groups_read", 0) + read
             stats["row_groups_resident"] = stats.get("row_groups_resident", 0) + resident
         return out
 
     def _hold(self, key, value, nbytes: int) -> None:
-        """Put ``value`` in the hot LRU as its newest entry, charged ``nbytes``."""
+        """Put ``value`` in the hot LRU as its newest entry, charged ``nbytes``,
+        and evict the oldest entries (even it) until within the budget."""
         self._hot[key] = value
         self._hot_bytes[key] = nbytes
         self._hot_total += nbytes
+        while self._hot and (
+            len(self._hot) > self.CACHE_TERMS or self._hot_total > self.CACHE_BYTES
+        ):
+            old, _ = self._hot.popitem(last=False)
+            self._hot_total -= self._hot_bytes.pop(old)
 
     def search(
         self, query: str, k: int = 10, stats: dict | None = None,
@@ -363,6 +340,9 @@ class FreshSearcher(LocalSearcher):
     segment rows concatenate after its base rows (merge by concatenation,
     as for shards); every search is one ``wand_topk`` or ``exhaustive_topk``
     call over base ∪ segment lists, sharing the hot LRU and decode caches.
+    Segment files join the footer lexicon (key ``"seg"``); the open reads
+    each of their row groups once, sums Σ df from it and holds it in the hot
+    LRU like a base group a fetch read, so it is filtered or re-read alike.
 
     Pruning stays sound under the scalar ``bound_scale``: base block bounds
     are exact under ``meta.bounds_avgdl`` and tfnorm grows with avgdl, so
@@ -407,17 +387,18 @@ class FreshSearcher(LocalSearcher):
         self.num_docs = len(self.dl)
         self.avgdl = int(self.dl.sum()) / self.num_docs if self.num_docs else 0.0
         self.bound_scale = max(1.0, self.avgdl / self._bounds_avgdl)
-        post_files = files("seg_postings")
-        if post_files:
-            # the segment postings stay resident, sorted by term once here
-            # (a query slices its terms' rows by searchsorted, opening no
-            # segment file); the table grows with the uncompacted segments
-            # until compaction folds them back into the base
-            seg = pq.read_table(post_files, columns=["term", "df", "blocks"]).sort_by("term")
-            self._seg = seg.select(["term", "blocks"])
-            # to_numpy, not to_pylist: ~1 ms instead of ~15 ms per 15k terms
-            self._seg_terms = seg["term"].to_numpy()
-            seg_df = seg.group_by("term").aggregate([("df", "sum")])
+        self._seg_files = files("seg_postings")
+        dfs = []
+        for f, pf, ranges in self._lexicon("seg"):
+            for i in range(len(ranges)):
+                tbl = pf.read_row_groups([i], columns=["term", "df", "blocks"], use_threads=False)
+                dfs.append(tbl.select(["term", "df"]))
+                tbl = tbl.select(["term", "blocks"])
+                self._hold((f, i), tbl, tbl.get_total_buffer_size())
+        if dfs:
+            seg_df = pa.concat_tables(dfs).group_by("term", use_threads=False).aggregate(
+                [("df", "sum")]
+            )
             self._seg_df = dict(zip(
                 seg_df["term"].to_numpy().tolist(), seg_df["df_sum"].to_numpy().tolist()
             ))

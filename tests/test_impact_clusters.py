@@ -307,6 +307,32 @@ def test_cc_driver_shortcut_matches_distributed(spark):
     assert f[3] == 0 and f[6] == 5 and f[4] == 4
 
 
+def test_cc_probe_above_gate_matches_driver_path(spark):
+    """With ``0 < driver_max_edges <`` the edge count, the driver probe
+    collects a partial edge list and falls through to the distributed
+    propagation over the same persisted pairs: the pairs pipeline runs
+    once, the labeling equals the driver path's, and the pairs are released
+    (the autouse fixture fails the test on a leaked persisted RDD)."""
+    from pyspark.sql import functions as F
+
+    edges = [(3, 2), (2, 1), (1, 0), (5, 6), (9, 8), (8, 7), (11, 10)]
+    docs = spark.range(12).selectExpr("id AS docid")
+    pairs = spark.createDataFrame(edges, "d1 long, d2 long")
+    driver = connected_components(docs, pairs).toPandas()
+    evaluated = spark.sparkContext.accumulator(0)
+
+    def counted(d1):
+        evaluated.add(1)
+        return d1
+
+    pairs = pairs.withColumn("d1", F.udf(counted, "long")("d1"))
+    probed = connected_components(docs, pairs, driver_max_edges=3).toPandas()
+    assert evaluated.value == len(edges)  # the probe and every round share one pass
+    assert dict(zip(probed["docid"].astype(int), probed["cluster"].astype(int))) == dict(
+        zip(driver["docid"].astype(int), driver["cluster"].astype(int))
+    )
+
+
 def test_impact_compaction_preserves_quantizer_range(spark, tmp_path):
     """Compacting an impact index must (a) keep serving Σ-impact results
     identical to pre-compaction fresh serving, and (b) carry the frozen

@@ -312,11 +312,14 @@ def _vocab_sample(root: str, n: int) -> list[str]:
 
 
 def _covering(searcher: LocalSearcher, term: str) -> set[tuple[str, int]]:
-    """The (file, row group) pairs whose footer range covers ``term``."""
-    lex = searcher._lexicon(None if searcher._pg is None else searcher._pg[term])
+    """The (file, row group) pairs whose footer range covers ``term``: in
+    its pgroup's files if it has base rows, in the segment files if it has
+    segment rows."""
+    keys = [None if searcher._pg is None else searcher._pg[term]] if searcher._df.get(term) else []
+    keys += ["seg"] if searcher._seg_df.get(term) else []
     return {
-        (f, i) for f, _, ranges in lex for i, r in enumerate(ranges)
-        if r is None or r[0] <= term <= r[1]
+        (f, i) for key in keys for f, _, ranges in searcher._lexicon(key)
+        for i, r in enumerate(ranges) if r is None or r[0] <= term <= r[1]
     }
 
 
@@ -376,13 +379,27 @@ def test_one_term_query_reads_at_most_two_row_groups(spark, grouped, monkeypatch
         assert got == LocalSearcher(root).search(t, k=10, prune=False), t
         _assert_ranks_like(got, want, t)
     assert max(pf.metadata.num_row_groups for pf, _ in calls) > 2
-    # close releases the files the lexicon holds and the row groups read
-    # from them; a later miss reopens the files and reads the groups again
-    s = LocalSearcher(root)
-    a, b = _group_sharing_pairs(root, 1)[0]
+
+
+@pytest.mark.parametrize("fresh", [False, True], ids=["LocalSearcher", "FreshSearcher"])
+def test_close_releases_lexicon_files_and_row_groups(request, monkeypatch, fresh):
+    """``close`` releases the files the lexicon holds (FreshSearcher's
+    segment files too) and the row groups read from them; a later miss
+    reopens the files and reads the groups again."""
+    from ciff_spark.serve import FreshSearcher
+
+    cls = FreshSearcher if fresh else LocalSearcher
+    root = request.getfixturevalue("segmented" if fresh else "grouped")
+    calls = _spy_row_group_reads(monkeypatch)
+    s = cls(root)
+    if fresh:  # two terms with segment rows
+        a, b = [t for t in _vocab_sample(root, 30) if s._seg_df.get(t)][:2]
+    else:
+        a, b = _group_sharing_pairs(root, 1)[0]
     first = s.search(a, k=10)
     held = [pf for lex in s._lex.values() for _, pf, _ in lex]
     assert any(isinstance(key, tuple) for key in s._hot)
+    assert ("seg" in s._lex) == fresh
     s.close()
     assert held and all(pf.closed for pf in held) and s._lex == {}
     assert not any(isinstance(key, tuple) for key in s._hot)
@@ -392,7 +409,9 @@ def test_one_term_query_reads_at_most_two_row_groups(spark, grouped, monkeypatch
     got = s.search(b, k=10, stats=st)
     assert st["row_groups_read"] == len(calls) - n == len(_covering(s, b)) > 0
     assert st["row_groups_resident"] == 0
-    assert got == LocalSearcher(root).search(b, k=10)
+    assert not any(pf.closed for lex in s._lex.values() for _, pf, _ in lex)
+    assert ("seg" in s._lex) == fresh
+    assert got == cls(root).search(b, k=10)
     assert s.search(a, k=10) == first
 
 
@@ -425,19 +444,30 @@ def test_cold_terms_read_a_shared_row_group_once(spark, grouped, monkeypatch):
             _assert_ranks_like(got, exact[2 * j + i], t)
 
 
-@pytest.mark.parametrize("budget", ["bytes", "entries"])
-def test_hot_cache_budget_evicts_row_groups_soundly(grouped, monkeypatch, budget):
+@pytest.mark.parametrize("budget,fresh", [
+    pytest.param("bytes", False, id="bytes"),
+    pytest.param("entries", False, id="entries"),
+    pytest.param("bytes", True, id="fresh-bytes"),
+    pytest.param("entries", True, id="fresh-entries"),
+])
+def test_hot_cache_budget_evicts_row_groups_soundly(request, monkeypatch, budget, fresh):
     """Under a budget smaller than one row group (or than a query's
-    entries), every query still equals an unbounded searcher's, and after
-    every fetch the LRU total is the sum of its charges and within the
-    budget: no group stays resident under the byte budget, and later
-    queries read evicted groups again."""
+    entries), every query still equals an unbounded searcher's, and right
+    after open and after every fetch the LRU total is the sum of its
+    charges and within the budget: no group stays resident under the byte
+    budget, and later queries read evicted groups again. A
+    ``FreshSearcher`` on a segmented index holds its segment groups under
+    the same budget from the open on, and reads evicted ones again through
+    the lexicon."""
     import pyarrow as pa
 
-    root = grouped
+    from ciff_spark.serve import FreshSearcher
+
+    cls = FreshSearcher if fresh else LocalSearcher
+    root = request.getfixturevalue("segmented" if fresh else "grouped")
     terms = _vocab_sample(root, 24)
     queries = [" ".join(terms[i::5]) for i in range(5)] + terms[::2]
-    unbounded = LocalSearcher(root)
+    unbounded = cls(root)
     want = [unbounded.search(q, k=10) for q in queries]
     sizes = [v.get_total_buffer_size() for v in unbounded._hot.values() if isinstance(v, pa.Table)]
     if budget == "bytes":
@@ -446,17 +476,23 @@ def test_hot_cache_budget_evicts_row_groups_soundly(grouped, monkeypatch, budget
         monkeypatch.setattr(LocalSearcher, "CACHE_TERMS", 2)
     real = LocalSearcher._fetch_lists
 
-    def checked(self, *a, **kw):
-        out = real(self, *a, **kw)
+    def within_budget(self):
         assert self._hot_bytes.keys() == self._hot.keys()
         assert self._hot_total == sum(self._hot_bytes.values())
         assert self._hot_total <= self.CACHE_BYTES and len(self._hot) <= self.CACHE_TERMS
         if budget == "bytes":
             assert not any(isinstance(v, pa.Table) for v in self._hot.values())
+
+    def checked(self, *a, **kw):
+        out = real(self, *a, **kw)
+        within_budget(self)
         return out
 
     monkeypatch.setattr(LocalSearcher, "_fetch_lists", checked)
-    s = LocalSearcher(root)
+    calls = _spy_row_group_reads(monkeypatch)
+    s = cls(root)
+    within_budget(s)
+    n = len(calls)
     st: dict = {}
     for _ in range(2):
         for q, w in zip(queries, want):
@@ -464,12 +500,16 @@ def test_hot_cache_budget_evicts_row_groups_soundly(grouped, monkeypatch, budget
     assert st["row_groups_read"] > len(sizes)  # evicted groups were read again
     if budget == "bytes":
         assert st["row_groups_resident"] == 0
+    if fresh:  # segment groups among them, through the lexicon's files
+        seg = {id(pf) for _, pf, _ in s._lex["seg"]}
+        assert seg and any(id(pf) in seg for pf, _ in calls[n:])
 
 
 def test_lexicon_serves_legacy_layouts_identically(segmented, tmp_path):
     """Indexes written before bounded row groups stay correct with no
     fallback path: postings rewritten as ONE shuffled row group per pgroup,
-    one file without statistics, serve exactly as the original through
+    one file without statistics, and segment postings rewritten as shuffled
+    single groups without statistics, serve exactly as the original through
     ``LocalSearcher`` and ``FreshSearcher``, with the groups resident or
     read cold."""
     import glob
@@ -484,17 +524,20 @@ def test_lexicon_serves_legacy_layouts_identically(segmented, tmp_path):
     shutil.copytree(segmented, legacy)
     rng = np.random.default_rng(5)
     dirs = sorted(glob.glob(f"{legacy}/postings/pgroup=*"))
-    for i, d in enumerate(dirs):
+    seg_dirs = sorted(glob.glob(f"{legacy}/seg_postings/seg_*"))
+    assert seg_dirs
+    for i, d in enumerate(dirs + seg_dirs):
         files = glob.glob(f"{d}/*.parquet")
         t = pq.read_table(files)
         t = t.take(rng.permutation(t.num_rows))
         for f in files:
             os.remove(f)
+        stat_less = i == 0 or d in seg_dirs
         pq.write_table(t, f"{d}/part-0.parquet", row_group_size=t.num_rows,
-                       write_statistics=i != 0)
+                       write_statistics=not stat_less)
         md = pq.ParquetFile(f"{d}/part-0.parquet").metadata
         assert md.num_row_groups == 1
-        assert (md.row_group(0).column(0).statistics is None) == (i == 0)
+        assert (md.row_group(0).column(0).statistics is None) == stat_less
     terms = _vocab_sample(segmented, 30)
     queries = QUERIES + [" ".join(terms[i::7]) for i in range(7)] + terms[::3]
     for cls in (LocalSearcher, FreshSearcher):

@@ -139,12 +139,16 @@ def test_torn_segment_invisible_to_readers(spark, tmp_path):
     assert read_segments(spark, store, SEG_DOCS).count() == 0
     searcher = FreshSearcher(root)
     assert searcher.num_docs == len(searcher.dl) == cut  # base only — no skewed stats
-    # no segment opened: no segment table, term column or df
-    assert searcher._seg is None and searcher._seg_terms is None and searcher._seg_df == {}
     # scoring sees base docs only and never KeyErrors on orphan docids
     q = " ".join(pdf.iloc[0]["text"].split()[:2])
     for docid, _ in searcher.search(q, k=5):
         assert docid < cut
+    # no segment opened, even after a search: no segment file in any
+    # lexicon entry, no segment row group in the hot LRU, no segment df
+    seg_dir = store.path(SEG_POSTINGS)
+    assert not any(f.startswith(seg_dir) for lex in searcher._lex.values() for f, _, _ in lex)
+    assert not any(isinstance(key, tuple) and key[0].startswith(seg_dir) for key in searcher._hot)
+    assert searcher._seg_df == {}
     # the retry heals: recommit, readers see the segment again
     append_batch(spark, store, spark.createDataFrame(pdf.iloc[cut:]), 0)
     assert read_segments(spark, store, SEG_DOCS).count() == len(pdf) - cut
