@@ -29,10 +29,10 @@ north-rule mandates:
   sparse lists into 1-posting blocks (63% of all blocks on the 131k-turn
   corpus), whose min_docid == max_docid, max_tfnorm derives from (max_tf,
   dl[max_docid]) and whose bins re-encode the two stored fields — so they
-  persist as (count=1, max_docid, max_tf, NULL, NULL, b"", b""). Readers
-  synthesize the arrays (``decode_block``) and the kernel sets lo = hi and
-  derives the bound. Measured: 28.7 → 24.8 MB postings on that corpus, no
-  decode-ratio/serving change;
+  persist as (count=1, max_docid, max_tf, NULL, NULL, b"", b""). The
+  batch decoder (``decode_blocks``) synthesizes their arrays and the kernel
+  sets lo = hi and derives the bound. Measured: 28.7 → 24.8 MB postings on
+  that corpus, no decode-ratio/serving change;
 - all integers are LEB128 varints, encoded/decoded with vectorized NumPy —
   no per-value Python in the hot path.
 
@@ -167,6 +167,42 @@ def varint_encode(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return out, nbytes
 
 
+def uvarint(n: int) -> bytes:
+    """LEB128 bytes of ONE int — the scalar form of ``varint_encode``, for
+    single header, tag and length fields where a NumPy call costs more than
+    it saves. A negative value is written as its 64-bit two's complement
+    (10 bytes), as proto3 writes a negative int32/int64."""
+    if n < 0:
+        n &= (1 << 64) - 1
+    out = bytearray()
+    while n > 0x7F:
+        out.append(n & 0x7F | 0x80)
+        n >>= 7
+    out.append(n)
+    return bytes(out)
+
+
+def read_uvarint(buf, pos: int) -> tuple[int, int]:
+    """(value, next position) of the LEB128 varint at ``buf[pos]`` (bytes,
+    memoryview or mmap) — the scalar form of ``varint_decode``. A stream
+    that ends inside the varint, or one longer than the 10 bytes a 64-bit
+    value takes, raises ValueError."""
+    n = shift = 0
+    i = pos
+    try:
+        while True:
+            b = buf[i]
+            i += 1
+            n |= (b & 0x7F) << shift
+            if b < 0x80:
+                return n, i
+            shift += 7
+            if shift == 70:
+                raise ValueError(f"varint at byte {pos} is longer than 10 bytes")
+    except IndexError:
+        raise ValueError(f"stream ends inside the varint at byte {pos}") from None
+
+
 def varint_decode(buf: bytes | np.ndarray, count: int | None = None) -> np.ndarray:
     """Decode a LEB128 byte buffer to uint64 values (vectorized: one
     ``add.reduceat`` over the bytes' shifted 7-bit groups, a plain widen when
@@ -260,7 +296,7 @@ def encode_postings(
             # max_tf) — min_docid/max_tfnorm/bins all derive from it at read
             # time (62% of a Zipf corpus's width-capped blocks are singles;
             # dropping their redundant fields is most of the block-metadata
-            # byte cost). Readers: decode_block synthesizes the arrays; the
+            # byte cost). Readers: decode_blocks synthesizes the arrays; the
             # WAND kernel sets lo=hi and derives the tf bound from max_tf.
             blocks.append(
                 {
@@ -445,49 +481,6 @@ def encode_arrow_batch(
     )
 
 
-def decode_block(
-    docs_bin: bytes,
-    tfs_bin: bytes,
-    count: int,
-    prev_max_docid: int,
-    max_docid: int | None = None,
-    max_tf: int | None = None,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Decode one block given the previous block's max_docid (−1 for first).
-
-    Implicit single-posting blocks (count == 1, empty bins — see
-    encode_postings) synthesize their arrays from the block metadata; callers
-    pass ``max_docid``/``max_tf`` to enable that path."""
-    if count == 1 and not docs_bin:
-        if max_docid is None or max_tf is None:
-            raise ValueError(
-                "implicit single-posting block needs max_docid/max_tf"
-            )
-        return np.array([max_docid], np.int64), np.array([max_tf], np.int64)
-    gaps = varint_decode(docs_bin, count).astype(np.int64)
-    docids = gaps.cumsum() + prev_max_docid
-    tfs = varint_decode(tfs_bin, count).astype(np.int64)
-    return docids, tfs
-
-
-def decode_postings(blocks: list[dict]) -> tuple[np.ndarray, np.ndarray]:
-    """Decode a full posting list from its blocks, one block at a time (the
-    reference the batch decoder ``decode_blocks`` is tested against)."""
-    if not blocks:
-        return np.empty(0, np.int64), np.empty(0, np.int64)
-    doc_parts, tf_parts = [], []
-    prev_max = -1
-    for blk in blocks:
-        d, t = decode_block(
-            blk["docs_bin"], blk["tfs_bin"], blk["count"], prev_max,
-            blk["max_docid"], blk["max_tf"],
-        )
-        doc_parts.append(d)
-        tf_parts.append(t)
-        prev_max = int(blk["max_docid"])
-    return np.concatenate(doc_parts), np.concatenate(tf_parts)
-
-
 # ---------------------------------------------------------------------------
 # columnar blocks: Arrow list<struct<BLOCK_SCHEMA>> rows → numpy, batch decode
 # ---------------------------------------------------------------------------
@@ -593,10 +586,10 @@ def _varint_blocks(buf, off, sel, counts) -> np.ndarray:
 
 def decode_blocks(cols: BlockColumns, sel: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """(docids, tfs) of blocks ``sel`` (int block indices), concatenated in
-    ``sel`` order — the batch form of ``decode_block``: one varint pass per
-    bin column over all selected blocks, then one cumsum that restarts at
-    each block's decode base. Implicit single-posting blocks (count 1,
-    empty bins) come from their ``max_docid``/``max_tf``."""
+    ``sel`` order: one varint pass per bin column over all selected blocks,
+    then one cumsum that restarts at each block's decode base. Implicit
+    single-posting blocks (count 1, empty bins) come from their
+    ``max_docid``/``max_tf``."""
     sel = np.asarray(sel, np.int64)
     cnt = cols.count[sel]
     explicit = cols.docs_off[sel + 1] > cols.docs_off[sel]

@@ -27,6 +27,8 @@ import struct
 
 import numpy as np
 
+from ciff_spark.functions.codec import read_uvarint, uvarint
+
 
 # ---------------------------------------------------------------------------
 # binary collection
@@ -144,27 +146,6 @@ def open_lexicon(path: str) -> LexiconView:
 FC_MAGIC = b"FCLX"
 
 
-def _uvarint(n: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = n & 0x7F
-        n >>= 7
-        out.append(b | (0x80 if n else 0))
-        if not n:
-            return bytes(out)
-
-
-def _read_uvarint(buf, pos: int) -> tuple[int, int]:
-    shift = n = 0
-    while True:
-        b = buf[pos]
-        pos += 1
-        n |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return n, pos
-        shift += 7
-
-
 def build_fc_lexicon(strings: list[str], block: int = 16) -> bytes:
     """Front-coded payload vector: ``[FCLX][u64 count][u32 block]``, a
     ``u64`` offset per block (+1 sentinel), then blocks of up to ``block``
@@ -176,7 +157,7 @@ def build_fc_lexicon(strings: list[str], block: int = 16) -> bytes:
     blocks: list[bytes] = []
     for i in range(0, len(payloads), block):
         chunk = payloads[i : i + block]
-        out = bytearray(_uvarint(len(chunk[0])))
+        out = bytearray(uvarint(len(chunk[0])))
         out += chunk[0]
         prev = chunk[0]
         for p in chunk[1:]:
@@ -184,7 +165,7 @@ def build_fc_lexicon(strings: list[str], block: int = 16) -> bytes:
             m = min(len(prev), len(p))
             while lcp < m and prev[lcp] == p[lcp]:
                 lcp += 1
-            out += _uvarint(lcp) + _uvarint(len(p) - lcp) + p[lcp:]
+            out += uvarint(lcp) + uvarint(len(p) - lcp) + p[lcp:]
             prev = p
         blocks.append(bytes(out))
     offsets = np.zeros(len(blocks) + 1, dtype="<u8")
@@ -200,38 +181,53 @@ def build_fc_lexicon(strings: list[str], block: int = 16) -> bytes:
 class FcLexiconView:
     """Random access + sorted search over a front-coded lexicon buffer
     (bytes or mmap). Only the block offset table loads eagerly — 8 bytes per
-    ``block`` strings vs the plain payload vector's 8 per string."""
+    ``block`` strings vs the plain payload vector's 8 per string. A buffer
+    shorter than its header, offset table or blocks raises ValueError at
+    open; a corrupt block raises ValueError when read."""
 
     def __init__(self, buf) -> None:
-        if bytes(buf[:4]) != FC_MAGIC:
+        if len(buf) < 16 or bytes(buf[:4]) != FC_MAGIC:
             raise ValueError("not a front-coded lexicon (bad magic)")
         self._count, self._block = struct.unpack_from("<QI", buf, 4)
+        if self._count and not self._block:
+            raise ValueError("front-coded lexicon has block size 0")
         n_blocks = -(-self._count // self._block) if self._count else 0
-        self._offsets = np.frombuffer(buf, dtype="<u8", count=n_blocks + 1, offset=16)
         self._base = 16 + 8 * (n_blocks + 1)
+        if self._base > len(buf):
+            raise ValueError("front-coded lexicon is truncated (offset table)")
+        self._offsets = np.frombuffer(buf, dtype="<u8", count=n_blocks + 1, offset=16)
+        if self._offsets[0] or (self._offsets[1:] <= self._offsets[:-1]).any():
+            raise ValueError("front-coded lexicon block offsets are not increasing")
+        if self._base + int(self._offsets[-1]) > len(buf):
+            raise ValueError("front-coded lexicon is truncated (blocks)")
         self._buf = buf
 
     def __len__(self) -> int:
         return self._count
 
     def _head(self, bi: int) -> bytes:
-        pos = self._base + int(self._offsets[bi])
-        ln, pos = _read_uvarint(self._buf, pos)
-        return bytes(self._buf[pos : pos + ln])
+        return next(self._iter_block(bi))
 
     def _iter_block(self, bi: int):
-        pos = self._base + int(self._offsets[bi])
-        end = self._base + int(self._offsets[bi + 1])
-        ln, pos = _read_uvarint(self._buf, pos)
-        cur = bytes(self._buf[pos : pos + ln])
-        pos += ln
-        yield cur
-        while pos < end:
-            lcp, pos = _read_uvarint(self._buf, pos)
-            sl, pos = _read_uvarint(self._buf, pos)
-            cur = cur[:lcp] + bytes(self._buf[pos : pos + sl])
-            pos += sl
+        """The strings of block ``bi`` in order. A string running past its
+        block, or a block holding other than its count of strings, raises
+        ValueError."""
+        blk = bytes(self._buf[self._base + int(self._offsets[bi]):
+                              self._base + int(self._offsets[bi + 1])])
+        want = min(self._block, self._count - bi * self._block)
+        pos, cur = 0, b""
+        for j in range(want):
+            lcp = 0
+            if j:
+                lcp, pos = read_uvarint(blk, pos)
+            ln, pos = read_uvarint(blk, pos)
+            if lcp > len(cur) or pos + ln > len(blk):
+                raise ValueError(f"front-coded block {bi} is corrupt")
+            cur = cur[:lcp] + blk[pos : pos + ln]
+            pos += ln
             yield cur
+        if pos != len(blk):
+            raise ValueError(f"front-coded block {bi} holds more than {want} strings")
 
     def __getitem__(self, i: int) -> str:
         if not 0 <= i < self._count:
@@ -240,7 +236,6 @@ class FcLexiconView:
         for j, p in enumerate(self._iter_block(bi)):
             if j == off:
                 return p.decode()
-        raise IndexError(i)  # pragma: no cover — offsets guarantee presence
 
     def __iter__(self):
         n_blocks = len(self._offsets) - 1
@@ -413,164 +408,80 @@ def export_index_to_pisa(
     lexicons: bool = True,
 ) -> None:
     """Distributed index → PISA canonical files (terms lex-ordered, shards
-    concatenated in shard order) — DISTRIBUTED, like
-    :func:`ciff_spark.ciff_io.export_index_to_ciff`: executors u32-encode
-    per-term ``.docs``/``.freqs`` sequences and per-docid-range ``.sizes``/
-    ``.documents`` runs as ordered chunks (repartitionByRange keeps the
-    global term / docid order across partitions; postings chunks break only
-    at term boundaries), and the driver concatenates the chunk payloads into
-    each output file row-group-at-a-time — nothing index-sized materializes
-    on the driver.
+    concatenated in shard order) — DISTRIBUTED, through the same chunk
+    frames as :func:`ciff_spark.ciff_io.export_index_to_ciff`: executors
+    u32-encode per-term ``.docs``/``.freqs`` sequences and per-docid-range
+    ``.sizes``/``.documents`` runs as ordered chunks (repartitionByRange
+    keeps the global term / docid order across partitions; postings chunks
+    break only at term boundaries), and the driver concatenates the chunk
+    payloads into each output file row-group-at-a-time — nothing
+    index-sized materializes on the driver.
 
     The term/title LEXICONS are offset tables over the full string set; they
     are built by re-streaming the just-written ``.terms``/``.documents``
     text files on the driver (memory ∝ vocabulary / title bytes — the
     lexicon files themselves are that size, so a single-file lexicon is
     inherently driver-bounded; pass ``lexicons=False`` to skip)."""
-    import glob as _glob
-    import shutil
-    import uuid
-
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from ciff_spark.ciff_io import _chunk_file_order, _concat_chunk_files
-    from ciff_spark.functions.codec import decode_postings
+    from ciff_spark.ciff_io import (
+        _concat_chunks,
+        _docs_chunks,
+        _postings_chunks,
+        _written_chunks,
+    )
     from ciff_spark.store import IndexStore
 
     store = IndexStore(index_root)
-    meta = store.meta(spark)
-    num_docs = int(meta["num_docs"])
+    num_docs = int(store.meta(spark)["num_docs"])
     parts = n_parts or max(2, min(64, spark.sparkContext.defaultParallelism))
-    cb = int(chunk_bytes)
-    sep = id_sep
 
-    rp = (
-        store.read(spark, "postings")
-        .select("term", "shard", "blocks")
-        .repartitionByRange(parts, "term")
-        # third key: compaction appends extra rows per (term, shard); rows of
-        # a term must concatenate in ascending docid order
-        .sortWithinPartitions("term", "shard", F.expr("blocks[0].max_docid"))
-    )
+    def frame_lists(terms, _df, _cf, off, docids, tfs):
+        # each term's [u32 len][len × u32] sequence: lengths in front of lists
+        lens = np.diff(off)
+        return (
+            np.insert(docids.astype("<u4"), off[:-1], lens).tobytes(),
+            np.insert(tfs.astype("<u4"), off[:-1], lens).tobytes(),
+            "".join(t + "\n" for t in terms).encode(),
+        )
 
-    def enc_postings_chunks(iterator):
-        dbuf, fbuf, tbuf = bytearray(), bytearray(), []
-        first_term = None
-        n_msgs = 0
-        cur_term = None
-        d_parts: list = []
-        t_parts: list = []
+    def frame_docs(_docids, doclengths, titles):
+        return (
+            np.ascontiguousarray(doclengths, "<u4").tobytes(),
+            ("\n".join(titles) + "\n").encode(),
+        )
 
-        def flush_term():
-            nonlocal n_msgs, first_term, d_parts, t_parts
-            if cur_term is None:
-                return
-            d = np.concatenate(d_parts) if d_parts else np.empty(0, np.int64)
-            tf = np.concatenate(t_parts) if t_parts else np.empty(0, np.int64)
-            dbuf.extend(encode_u32_sequence(d))
-            fbuf.extend(encode_u32_sequence(tf))
-            tbuf.append(cur_term)
-            if first_term is None:
-                first_term = cur_term
-            n_msgs += 1
-            d_parts, t_parts = [], []
-
-        def chunk_row():
-            return pd.DataFrame(
-                [(
-                    first_term, n_msgs, bytes(dbuf), bytes(fbuf),
-                    ("\n".join(tbuf) + "\n").encode(),
-                )],
-                columns=["key", "n_msgs", "docs_bin", "freqs_bin", "terms_txt"],
-            )
-
-        for pdf in iterator:
-            for r in pdf.itertuples(index=False):
-                if r.term != cur_term:
-                    flush_term()
-                    if len(dbuf) >= cb:  # break only at term boundaries
-                        yield chunk_row()
-                        dbuf, fbuf, tbuf = bytearray(), bytearray(), []
-                        first_term, n_msgs = None, 0
-                    cur_term = r.term
-                d, t = decode_postings([dict(b) for b in r.blocks])
-                if len(d):
-                    d_parts.append(d)
-                    t_parts.append(t)
-        flush_term()
-        if n_msgs:
-            yield chunk_row()
-
-    docs_df = store.read(spark, "docs")
-    id_cols = [c for c in docs_df.columns if c not in ("docid", "doclength")]
-    docs_rp = docs_df.repartitionByRange(parts, "docid").sortWithinPartitions("docid")
-
-    def enc_doc_chunks(iterator):
-        for pdf in iterator:
-            if not len(pdf):
-                continue
-            dids = pdf["docid"].to_numpy(np.int64)
-            if len(dids) > 1 and not (np.diff(dids) == 1).all():
-                raise ValueError("docs table is not dense in docid order")
-            sizes = pdf["doclength"].to_numpy()
-            if id_cols:
-                titles = [
-                    sep.join(str(v) for v in row)
-                    for row in zip(*(pdf[c] for c in id_cols))
-                ]
-            else:
-                titles = [""] * len(dids)
-            yield pd.DataFrame(
-                [(
-                    int(dids[0]), len(dids),
-                    np.ascontiguousarray(sizes, "<u4").tobytes(),
-                    ("\n".join(titles) + "\n").encode(),
-                )],
-                columns=["key", "n_msgs", "sizes_bin", "titles_txt"],
-            )
-
-    tmp = f"{base}.__chunks_{uuid.uuid4().hex[:8]}"
-    try:
-        rp.mapInPandas(
-            enc_postings_chunks,
-            schema="key string, n_msgs long, docs_bin binary, freqs_bin binary, terms_txt binary",
-        ).write.mode("overwrite").parquet(f"{tmp}/postings")
-        docs_rp.mapInPandas(
-            enc_doc_chunks,
-            schema="key bigint, n_msgs long, sizes_bin binary, titles_txt binary",
-        ).write.mode("overwrite").parquet(f"{tmp}/docs")
-
-        pfiles = sorted(_glob.glob(f"{tmp}/postings/*.parquet"))
-        dfiles = sorted(_glob.glob(f"{tmp}/docs/*.parquet"))
-        p_order = _chunk_file_order(pfiles, "key")
-        d_order = _chunk_file_order(dfiles, "key")
+    with _written_chunks(
+        base,
+        postings=_postings_chunks(
+            spark, store, parts, int(chunk_bytes),
+            ["docs_bin", "freqs_bin", "terms_txt"], frame_lists,
+        ),
+        docs=_docs_chunks(spark, store, parts, id_sep, ["sizes_bin", "titles_txt"], frame_docs),
+    ) as order:
+        p_order, d_order = order["postings"], order["docs"]
         with open(f"{base}.docs", "wb") as fd:
             fd.write(encode_u32_sequence([num_docs]))  # singleton header seq
-            _concat_chunk_files(fd, pfiles, "key", "docs_bin", order=p_order)
+            _concat_chunks(fd, p_order, "docs_bin")
         with open(f"{base}.freqs", "wb") as ff:
-            _concat_chunk_files(ff, pfiles, "key", "freqs_bin", order=p_order)
+            _concat_chunks(ff, p_order, "freqs_bin")
         with open(f"{base}.terms", "wb") as ft:
-            _concat_chunk_files(ft, pfiles, "key", "terms_txt", order=p_order)
+            _concat_chunks(ft, p_order, "terms_txt")
         with open(f"{base}.sizes", "wb") as fs:
             fs.write(struct.pack("<I", num_docs))
-            n_written = _concat_chunk_files(fs, dfiles, "key", "sizes_bin", order=d_order)
+            n_written = _concat_chunks(fs, d_order, "sizes_bin")
         if n_written != num_docs:
             raise ValueError(f"exported {n_written} doclengths, meta says {num_docs}")
         with open(f"{base}.documents", "wb") as fdoc:
-            _concat_chunk_files(fdoc, dfiles, "key", "titles_txt", order=d_order)
-        if lexicons:
-            # the text files were written as raw UTF-8 with "\n" joins:
-            # decode explicitly (locale-independent) and split on "\n" only
-            # (splitlines() would also split on U+0085/U+2028 inside a title,
-            # misaligning the lexicon with the positional .documents file)
-            def _lines(path: str) -> list[str]:
-                txt = open(path, "rb").read().decode("utf-8")
-                return txt.split("\n")[:-1] if txt else []
+            _concat_chunks(fdoc, d_order, "titles_txt")
+    if lexicons:
+        # the text files were written as raw UTF-8 with "\n" joins:
+        # decode explicitly (locale-independent) and split on "\n" only
+        # (splitlines() would also split on U+0085/U+2028 inside a title,
+        # misaligning the lexicon with the positional .documents file)
+        def _lines(path: str) -> list[str]:
+            txt = open(path, "rb").read().decode("utf-8")
+            return txt.split("\n")[:-1] if txt else []
 
-            with open(f"{base}.termlex", "wb") as f:
-                f.write(build_lexicon(_lines(f"{base}.terms")))
-            with open(f"{base}.doclex", "wb") as f:
-                f.write(build_lexicon(_lines(f"{base}.documents")))
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        with open(f"{base}.termlex", "wb") as f:
+            f.write(build_lexicon(_lines(f"{base}.terms")))
+        with open(f"{base}.doclex", "wb") as f:
+            f.write(build_lexicon(_lines(f"{base}.documents")))

@@ -13,16 +13,25 @@ Semantics pinned here and mirrored by the engine:
 - query terms are deduplicated; score accumulation iterates terms in
   lexicographic order (pins f64 summation order);
 - top-k orders by (-score, docid).
+
+It also keeps the one-at-a-time codec references the engine's batch paths
+are tested against: the per-block decoders (``decode_block``,
+``decode_postings``, built on the engine's array varint decoder) and the
+per-posting CIFF PostingsList encoder (built on the engine's proto3 field
+writer).
 """
 
 from __future__ import annotations
 
+import io
 from collections import Counter
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 
+from ciff_spark.ciff_io import _emit_field
+from ciff_spark.functions.codec import varint_decode
 from ciff_spark.functions.scoring import idf_np, tfnorm_np
 from ciff_spark.functions.tokenizer import tokenize_py
 from ciff_spark.wand import PostingList
@@ -44,6 +53,69 @@ def posting_list(*rows: list[dict]) -> PostingList:
     """A ``PostingList`` over ``encode_postings`` outputs, one stored row
     each (each row's first block decodes from −1), in docid order."""
     return PostingList(block_rows(*rows))
+
+
+def decode_block(
+    docs_bin: bytes,
+    tfs_bin: bytes,
+    count: int,
+    prev_max_docid: int,
+    max_docid: int | None = None,
+    max_tf: int | None = None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Decode one block given the previous block's max_docid (−1 for the
+    first), one varint pass per bin — the per-block reference the batch
+    decoder ``codec.decode_blocks`` is tested against. Implicit
+    single-posting blocks (count 1, empty bins) come from
+    ``max_docid``/``max_tf``."""
+    if count == 1 and not docs_bin:
+        if max_docid is None or max_tf is None:
+            raise ValueError("implicit single-posting block needs max_docid/max_tf")
+        return np.array([max_docid], np.int64), np.array([max_tf], np.int64)
+    gaps = varint_decode(docs_bin, count).astype(np.int64)
+    tfs = varint_decode(tfs_bin, count).astype(np.int64)
+    return gaps.cumsum() + prev_max_docid, tfs
+
+
+def decode_postings(blocks: list[dict]) -> tuple[np.ndarray, np.ndarray]:
+    """A full posting list decoded from its block dicts, block by block."""
+    if not blocks:
+        return np.empty(0, np.int64), np.empty(0, np.int64)
+    doc_parts, tf_parts = [], []
+    prev_max = -1
+    for blk in blocks:
+        d, t = decode_block(
+            blk["docs_bin"], blk["tfs_bin"], blk["count"], prev_max,
+            blk["max_docid"], blk["max_tf"],
+        )
+        doc_parts.append(d)
+        tf_parts.append(t)
+        prev_max = int(blk["max_docid"])
+    return np.concatenate(doc_parts), np.concatenate(tf_parts)
+
+
+def ciff_postings_list(term: str, df: int, cf: int, postings) -> bytes:
+    """A CIFF PostingsList message written field by field, one
+    ``_emit_field`` call per posting — the reference for the engine's
+    one-call list framer ``ciff_io._enc_postings_list``."""
+    def posting(gap: int, tf: int) -> bytes:
+        out = io.BytesIO()
+        if gap:
+            _emit_field(out, 1, 0, gap)
+        if tf:
+            _emit_field(out, 2, 0, tf)
+        return out.getvalue()
+
+    out = io.BytesIO()
+    if term:
+        _emit_field(out, 1, 2, term.encode())
+    if df:
+        _emit_field(out, 2, 0, df)
+    if cf:
+        _emit_field(out, 3, 0, cf)
+    for gap, tf in postings:
+        _emit_field(out, 4, 2, posting(gap, tf))
+    return out.getvalue()
 
 
 class OracleIndex:

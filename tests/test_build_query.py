@@ -13,11 +13,10 @@ import pandas as pd
 import pytest
 
 from ciff_spark.build import BuildConfig, build_index
-from ciff_spark.functions.codec import decode_postings
 from ciff_spark.functions.scoring import B, K1
 from ciff_spark.query import IndexReader, bm25_topk_relational
 from ciff_spark.sources.transcripts import transcripts_df, transcripts_pdf
-from oracle import OracleIndex
+from oracle import OracleIndex, decode_postings
 
 N_CONVS = 40  # sf-small-ish: ~250 docs
 

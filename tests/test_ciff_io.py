@@ -102,7 +102,7 @@ def test_export_import_our_index(spark, tmp_path):
     }
     from collections import defaultdict
 
-    from ciff_spark.functions.codec import decode_postings
+    from oracle import decode_postings
 
     exp = {}
     rows = store.read(spark, "postings").orderBy("term", "shard").collect()
@@ -165,21 +165,246 @@ def test_iter_ciff_streams_toy():
     assert kinds["doc"] == docs
 
 
-def test_export_chunking_is_byte_invariant(spark, tmp_path):
-    """The distributed export's output must be a pure function of the index:
-    forcing one-term chunks across many range partitions (chunk_bytes=1,
-    n_parts=7) has to produce byte-identical output to one big chunk —
-    proving the chunk ordering (file ranges disjoint, chunks break at term
-    boundaries) reconstructs the exact global message order."""
-    from ciff_spark.build import BuildConfig, build_index
-    from ciff_spark.sources.transcripts import transcripts_df
+PISA_FILES = ("docs", "freqs", "sizes", "terms", "documents", "termlex", "doclex")
 
-    df = transcripts_df(spark, 10, seed=9, partitions=3)
-    root = str(tmp_path / "idx")
-    build_index(df, root, config=BuildConfig(n_shards=3, n_pgroups=4), resume=False)
-    one = str(tmp_path / "one.ciff")
-    many = str(tmp_path / "many.ciff")
-    export_index_to_ciff(spark, root, one, chunk_bytes=1 << 30, n_parts=2)
-    export_index_to_ciff(spark, root, many, chunk_bytes=1, n_parts=7)
-    with open(one, "rb") as a, open(many, "rb") as b:
-        assert a.read() == b.read()
+
+@pytest.fixture(scope="module")
+def export_indexes(spark, tmp_path_factory):
+    """Three indexes: ``plain``, one build; ``compacted``, a base plus two
+    appended segments folded in by concat compaction, so a (term, shard)
+    has several postings rows; ``rebuilt``, the compacted corpus in one
+    build, with the same docids."""
+    from ciff_spark.build import BuildConfig, build_index
+    from ciff_spark.sources.transcripts import transcripts_df, transcripts_pdf
+    from ciff_spark.store import IndexStore
+    from ciff_spark.streaming.incremental import append_batch, compact_segments
+
+    tmp = tmp_path_factory.mktemp("export_indexes")
+    cfg = BuildConfig(n_shards=3, n_pgroups=4)
+    roots = {name: str(tmp / name) for name in ("plain", "compacted", "rebuilt")}
+    build_index(transcripts_df(spark, 10, seed=9, partitions=3), roots["plain"],
+                config=cfg, resume=False)
+    pdf = transcripts_pdf(30, seed=11).sort_values(["conv_id", "turn_idx"])
+    convs = sorted(pdf["conv_id"].unique())
+    build_index(spark.createDataFrame(pdf[pdf.conv_id.isin(convs[:18])]),
+                roots["compacted"], config=cfg, resume=False)
+    store = IndexStore(roots["compacted"])
+    for i, part in enumerate((convs[18:24], convs[24:])):
+        append_batch(spark, store, spark.createDataFrame(pdf[pdf.conv_id.isin(part)]), i)
+    compact_segments(spark, roots["compacted"])
+    build_index(spark.createDataFrame(pdf), roots["rebuilt"], config=cfg, resume=False)
+    return roots
+
+
+def _export(spark, fmt, root, out, **kw) -> dict[str, bytes]:
+    """Every output file of one export, by suffix."""
+    if fmt == "ciff":
+        export_index_to_ciff(spark, root, out, **kw)
+        return {"ciff": open(out, "rb").read()}
+    from ciff_spark.pisa_io import export_index_to_pisa
+
+    export_index_to_pisa(spark, root, out, **kw)
+    return {ext: open(f"{out}.{ext}", "rb").read() for ext in PISA_FILES}
+
+
+@pytest.mark.parametrize("index", ["plain", "compacted"])
+@pytest.mark.parametrize("fmt", ["ciff", "pisa"])
+def test_export_chunking_is_byte_invariant(spark, tmp_path, export_indexes, fmt, index):
+    """The distributed export's output must be a pure function of the index:
+    one big chunk, one-term chunks across many range partitions
+    (chunk_bytes=1, n_parts=7), and Arrow batches of 2 rows (a term's rows
+    straddle batches) all produce byte-identical files — proving the chunk
+    ordering (file ranges disjoint, chunks break at term boundaries) and
+    the term stream's carry across batches reconstruct the exact global
+    message order. ``compacted`` has several rows per (term, shard), so
+    the third sort key orders them."""
+    root = export_indexes[index]
+    one = _export(spark, fmt, root, str(tmp_path / "one"), chunk_bytes=1 << 30, n_parts=2)
+    many = _export(spark, fmt, root, str(tmp_path / "many"), chunk_bytes=1, n_parts=7)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = dict(spark.conf.getAll).get(key)
+    spark.conf.set(key, "2")
+    try:
+        tiny = _export(spark, fmt, root, str(tmp_path / "tiny"), chunk_bytes=1, n_parts=3)
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    assert all(one.values())
+    assert one == many
+    assert one == tiny
+
+
+@pytest.mark.parametrize("fmt", ["ciff", "pisa"])
+def test_export_of_compacted_index_equals_rebuilt(spark, tmp_path, export_indexes, fmt):
+    """Concat compaction keeps a term's segment postings in extra (term,
+    shard) rows; the export joins them in docid order, so its posting
+    lists equal those of one build over the same corpus."""
+    got = _export(spark, fmt, export_indexes["compacted"], str(tmp_path / "c"))
+    want = _export(spark, fmt, export_indexes["rebuilt"], str(tmp_path / "r"))
+    if fmt == "ciff":
+        assert read_ciff(str(tmp_path / "c"))[1] == read_ciff(str(tmp_path / "r"))[1]
+    else:
+        for ext in ("docs", "freqs", "terms", "termlex"):
+            assert got[ext] == want[ext], ext
+
+
+# ---------------------------------------------------------------------------
+# the term stream and the PostingsList framer, without Spark
+# ---------------------------------------------------------------------------
+
+def test_term_stream_joins_rows_across_any_batch_split():
+    """``_term_postings`` yields every term once, in order, its rows joined
+    in row order with summed df/cf, however the rows are cut into batches
+    (one row per batch, a term straddling several)."""
+    import pyarrow as pa
+
+    from ciff_spark.ciff_io import _term_postings
+    from ciff_spark.functions.codec import encode_postings
+    from oracle import BLOCK_TYPE
+
+    rng = np.random.default_rng(3)
+    rows = []
+    for term in sorted(f"w{j:03d}" for j in range(30)):
+        for shard in range(int(rng.integers(1, 4))):
+            for extra in range(int(rng.integers(1, 3))):  # compaction's extra rows
+                n = int(rng.integers(1, 200))
+                d = shard * 100_000 + extra * 10_000 + np.sort(rng.choice(9000, n, replace=False))
+                t = rng.integers(1, 9, n)
+                rows.append((term, n, int(t.sum()), encode_postings(d, t, block_size=8), d, t))
+    table = pa.table({
+        "term": [r[0] for r in rows], "df": [r[1] for r in rows], "cf": [r[2] for r in rows],
+        "blocks": pa.array([r[3] for r in rows], pa.list_(BLOCK_TYPE)),
+    })
+    want = {}
+    for term, df, cf, _, d, t in rows:
+        w = want.setdefault(term, [0, 0, [], []])
+        w[0] += df
+        w[1] += cf
+        w[2].append(d)
+        w[3].append(t)
+    for size in (1, 2, 5, len(rows)):
+        seen = []
+        for terms, df, cf, off, d, t in _term_postings(table.to_batches(max_chunksize=size)):
+            assert len(terms) == len(df) == len(cf) == len(off) - 1 and off[-1] == len(d) == len(t)
+            for i, term in enumerate(terms):
+                seen.append(term)
+                w = want[term]
+                assert (df[i], cf[i]) == (w[0], w[1])
+                np.testing.assert_array_equal(d[off[i] : off[i + 1]], np.concatenate(w[2]))
+                np.testing.assert_array_equal(t[off[i] : off[i + 1]], np.concatenate(w[3]))
+        assert seen == sorted(want), size
+
+
+def _framer_cases(rng):
+    yield [("first-docid-0", [(0, 3), (5, 1)])]  # gap field omitted
+    yield [("tf-0", [(4, 0), (1, 0), (2, 7)])]
+    yield [("single", [(9, 2)])]
+    yield [("empty", [])]
+    yield [("", [(1, 1)])]  # empty term: the field is omitted
+    edges = [v for e in (7, 14, 21, 28) for v in ((1 << e) - 1, 1 << e, (1 << e) + 1)]
+    yield [("edges", [(g, t) for g in edges for t in edges[::-1][:3]])]
+    for _ in range(30):  # several lists framed in one call
+        lists = []
+        for j in range(int(rng.integers(1, 5))):
+            n = int(rng.integers(0, 400))
+            g = rng.integers(0, 1 << int(rng.integers(1, 31)), n)
+            t = rng.integers(0, 1 << int(rng.integers(1, 31)), n)
+            g[rng.random(n) < 0.1] = 0
+            t[rng.random(n) < 0.1] = 0
+            lists.append((f"t{j}", list(zip(g.tolist(), t.tolist()))))
+        yield lists
+
+
+def test_postings_list_framer_equals_per_posting_encoder():
+    """The one-call framer ``_enc_postings_lists`` writes, byte for byte,
+    what the field-by-field encoder writes: first docid 0 (gap omitted),
+    tf 0, values crossing 2^7, 2^14, 2^21 and 2^28, a single posting, the
+    empty list, and negative int32 values (10-byte two's complement)."""
+    from ciff_spark.ciff_io import _enc_postings_lists
+    from oracle import ciff_postings_list
+
+    rng = np.random.default_rng(11)
+    cases = list(_framer_cases(rng)) + [[("neg", [(-1, 5), (3, -2)])]]
+    for lists in cases:
+        terms = [t for t, _ in lists]
+        df = [len(p) for _, p in lists]
+        cf = [sum(tf for _, tf in p) for _, p in lists]
+        off = np.cumsum([0] + df)
+        flat = np.array([x for _, p in lists for x in p], np.int64).reshape(-1, 2)
+        got = _enc_postings_lists(terms, df, cf, off, flat[:, 0], flat[:, 1])
+        want = [ciff_postings_list(t, d, c, p) for (t, p), d, c in zip(lists, df, cf)]
+        assert got == want, terms
+
+
+# ---------------------------------------------------------------------------
+# corrupt input: a clean ValueError, never IndexError or a short parse
+# ---------------------------------------------------------------------------
+
+def _small_ciff(path) -> bytes:
+    header = CiffHeader(
+        version=1, num_postings_lists=2, num_docs=2, total_postings_lists=2,
+        total_docs=2, total_terms_in_collection=7, average_doclength=3.5,
+        description="fuzz",
+    )
+    pls = [
+        CiffPostingsList("alpha", 2, 3, [(0, 2), (300, 1)]),
+        CiffPostingsList("beta", 1, 4, [(1, 1 << 20)]),
+    ]
+    docs = [CiffDocRecord(0, "d0", 3), CiffDocRecord(1, "d1", 4)]
+    write_ciff(path, header, pls, docs)
+    return open(path, "rb").read()
+
+
+def test_truncated_ciff_raises(tmp_path):
+    """Every proper prefix of a valid file raises ValueError from both
+    readers: a cut message, or one the header promises but the file lacks,
+    is never parsed short."""
+    from ciff_spark.ciff_io import iter_ciff
+
+    path = str(tmp_path / "t.ciff")
+    data = _small_ciff(path)
+    assert read_ciff(path)[0].description == "fuzz"
+    for k in range(len(data)):
+        with open(path, "wb") as f:
+            f.write(data[:k])
+        with pytest.raises(ValueError):
+            read_ciff(path)
+        with pytest.raises(ValueError):
+            list(iter_ciff(path))
+
+
+def test_ciff_readers_never_panic_on_arbitrary_bytes(tmp_path):
+    """Parse-fuzz parity with ``test_binary_collection_never_panics_on_
+    arbitrary_bytes``: arbitrary bytes, and a valid file with bytes
+    overwritten, either parse into the counts the header promises or raise
+    ValueError."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    path = str(tmp_path / "f.ciff")
+    valid = _small_ciff(path)
+    mutated = st.lists(
+        st.tuples(st.integers(0, len(valid) - 1), st.integers(0, 255)), min_size=1, max_size=3
+    ).map(lambda edits: _overwrite(valid, edits))
+
+    @settings(max_examples=300, deadline=None)
+    @given(st.binary(max_size=128) | mutated)
+    def check(data):
+        with open(path, "wb") as f:
+            f.write(data)
+        try:
+            header, pls, docs = read_ciff(path)
+        except ValueError:
+            return
+        assert (len(pls), len(docs)) == (header.num_postings_lists, header.num_docs)
+
+    check()
+
+
+def _overwrite(data: bytes, edits) -> bytes:
+    out = bytearray(data)
+    for i, b in edits:
+        out[i] = b
+    return bytes(out)

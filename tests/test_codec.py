@@ -15,15 +15,15 @@ from ciff_spark.functions.codec import (
     BLOCK_SIZE,
     BLOCK_SPAN,
     block_columns,
-    decode_block,
     decode_blocks,
-    decode_postings,
     encode_postings,
+    read_uvarint,
+    uvarint,
     varint_decode,
     varint_encode,
 )
 from ciff_spark.functions.scoring import idf_np, tfnorm_np
-from oracle import BLOCK_TYPE, block_rows
+from oracle import BLOCK_TYPE, block_rows, decode_block, decode_postings
 
 
 def _roundtrip(vals):
@@ -50,6 +50,47 @@ def test_varint_roundtrip_edges():
 @given(st.lists(st.integers(min_value=0, max_value=2**62), max_size=300))
 def test_varint_roundtrip_property(vals):
     _roundtrip(vals)
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.lists(st.integers(min_value=-(2**63), max_value=2**64 - 1), max_size=20))
+def test_scalar_varint_pair_matches_the_array_pair(vals):
+    """``uvarint``/``read_uvarint`` write and read the bytes of
+    ``varint_encode``; a negative value is its 64-bit two's complement."""
+    u64 = [v & (2**64 - 1) for v in vals]
+    buf = b"".join(uvarint(v) for v in vals)
+    want, _ = varint_encode(np.array(u64, np.uint64))
+    assert buf == want.tobytes()
+    pos, got = 0, []
+    while pos < len(buf):
+        v, pos = read_uvarint(buf, pos)
+        got.append(v)
+    assert got == u64
+
+
+def test_read_uvarint_rejects_truncated_and_overlong():
+    """A stream ending inside a varint, and a varint of more than 10 bytes,
+    raise ValueError — never IndexError, never a value past 64 bits."""
+    assert read_uvarint(uvarint(-1), 0) == (2**64 - 1, 10)
+    for bad in (b"", b"\x80", b"\x80\x80", b"\xff" * 9):
+        with pytest.raises(ValueError, match="ends inside"):
+            read_uvarint(bad, 0)
+    for bad in (b"\xff" * 10 + b"\x01", b"\x80" * 20 + b"\x01"):
+        with pytest.raises(ValueError, match="longer than 10 bytes"):
+            read_uvarint(bad, 0)
+    with pytest.raises(ValueError):
+        read_uvarint(b"\x05", 1)  # nothing left at pos
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.binary(max_size=24), st.integers(0, 24))
+def test_read_uvarint_never_panics_on_arbitrary_bytes(data, pos):
+    try:
+        v, end = read_uvarint(data, pos)
+    except ValueError:
+        return
+    assert pos < end <= min(len(data), pos + 10) and v < 2**70
+    assert data[end - 1] < 0x80 and all(b >= 0x80 for b in data[pos : end - 1])
 
 
 @settings(max_examples=100, deadline=None)

@@ -7,8 +7,8 @@ import json
 import numpy as np
 import pytest
 
-from ciff_spark.functions.codec import decode_postings
 from ciff_spark.sources.jsonl_vectors import build_index_from_doc_vectors
+from oracle import decode_postings
 
 DOCS = [
     {"id": "zebra", "vector": {"apple": 3.0, "pear": 1.0}},

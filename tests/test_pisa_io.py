@@ -128,7 +128,7 @@ def test_export_index_to_pisa(spark, tmp_path):
     assert int(sizes.sum()) == meta["total_terms"]
     assert terms == sorted(terms)
     # postings agree with the index's own decode
-    from ciff_spark.functions.codec import decode_postings
+    from oracle import decode_postings
 
     for r in store.read(spark, "postings").collect():
         d, tf = decode_postings([b.asDict() for b in r["blocks"]])
@@ -248,3 +248,54 @@ def _check_one(data):
     assert sum(4 + 4 * len(s) for s in seqs) == len(data)
     # a successfully parsed buffer round-trips byte-identically
     assert b"".join(encode_u32_sequence(s) for s in seqs) == data
+
+
+def test_fc_lexicon_rejects_short_buffers():
+    """A front-coded lexicon cut short by any number of bytes raises
+    ValueError when opened — it never serves ``'ban'`` for ``'banana'``."""
+    from ciff_spark.pisa_io import FcLexiconView, build_fc_lexicon
+
+    buf = build_fc_lexicon(["apple", "banana"], block=16)
+    assert FcLexiconView(buf)[1] == "banana"
+    for full in (buf, build_fc_lexicon([])):
+        for k in range(len(full)):
+            with pytest.raises(ValueError):
+                FcLexiconView(full[:k])
+
+
+def test_fc_lexicon_never_panics_on_arbitrary_bytes():
+    """Arbitrary bytes behind the magic, and a valid lexicon with bytes
+    overwritten, either open and read consistently (iteration, indexing and
+    search agree) or raise ValueError — never IndexError, struct.error or a
+    string cut at its block's end."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from ciff_spark.pisa_io import FC_MAGIC, FcLexiconView, build_fc_lexicon
+
+    valid = build_fc_lexicon(["alpha", "alps", "banana", "band", "bandana", "zed"], block=4)
+
+    def overwrite(edits):
+        out = bytearray(valid)
+        for i, b in edits:
+            out[i] = b
+        return bytes(out)
+
+    mutated = st.lists(
+        st.tuples(st.integers(0, len(valid) - 1), st.integers(0, 255)), min_size=1, max_size=3
+    ).map(overwrite)
+
+    @settings(max_examples=300, deadline=None)
+    @given(st.binary(max_size=96).map(lambda b: FC_MAGIC + b) | mutated)
+    def check(data):
+        try:
+            v = FcLexiconView(data)
+            strings = list(v)
+            assert len(strings) == len(v)
+            for i, s in enumerate(strings):
+                assert v[i] == s
+                v.index_of(s)
+        except ValueError:
+            return
+
+    check()

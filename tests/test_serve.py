@@ -223,13 +223,15 @@ def test_fresh_lazy_term_stats_identical(segmented, monkeypatch):
 
 
 def test_serving_decodes_only_through_the_batch_decoder(served, segmented, monkeypatch):
-    """Serving decodes with ``codec.decode_blocks`` alone: with the
-    per-block ``decode_block`` made to raise, ``LocalSearcher`` and
-    ``FreshSearcher`` searches, pruned and unpruned, return exactly what
-    they return with it intact."""
+    """Serving decodes with ``codec.decode_blocks`` alone: the codec has no
+    per-block decoder, and with the batch decoder spied on where the kernel
+    looks it up, ``LocalSearcher`` and ``FreshSearcher`` searches, pruned
+    and unpruned, call it and return exactly what they return unspied."""
+    from ciff_spark import wand
     from ciff_spark.functions import codec
     from ciff_spark.serve import FreshSearcher
 
+    assert not hasattr(codec, "decode_block") and not hasattr(codec, "decode_postings")
     queries = QUERIES + ["w000000 w000001 w000002", "w000010 w000200"]
     cases = [
         (cls, root, q, prune)
@@ -240,12 +242,16 @@ def test_serving_decodes_only_through_the_batch_decoder(served, segmented, monke
     want = [cls(root).search(q, k=7, prune=prune) for cls, root, q, prune in cases]
     assert sum(map(bool, want)) > len(cases) // 2
 
-    def per_block(*a, **kw):
-        raise AssertionError("per-block decode on the serving path")
+    calls = []
 
-    monkeypatch.setattr(codec, "decode_block", per_block)
+    def spy(cols, sel):
+        calls.append(len(sel))
+        return codec.decode_blocks(cols, sel)
+
+    monkeypatch.setattr(wand, "decode_blocks", spy)
     got = [cls(root).search(q, k=7, prune=prune) for cls, root, q, prune in cases]
     assert got == want
+    assert calls and sum(calls) > 0
 
 
 def test_hot_cache_charges_the_bytes_a_list_owns(segmented):

@@ -8,9 +8,9 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from ciff_spark.build import BuildConfig, build_index
-from ciff_spark.functions.codec import decode_postings
 from ciff_spark.query import IndexReader
 from ciff_spark.sources.transcripts import transcripts_df
+from oracle import decode_postings
 
 
 def test_hot_term_splits_across_shards(spark, tmp_path):

@@ -23,7 +23,7 @@ def test_incremental_equals_batch(spark, tmp_path):
     from collections import defaultdict
 
     from ciff_spark.build import BuildConfig, build_index
-    from ciff_spark.functions.codec import decode_postings
+    from oracle import decode_postings
 
     pdf = transcripts_pdf(20, seed=9)
     indir = tmp_path / "in"
@@ -201,10 +201,10 @@ def test_concat_compaction_equals_rebuild(spark, tmp_path):
     import glob as g
 
     from ciff_spark.build import BuildConfig, build_index
-    from ciff_spark.functions.codec import decode_postings
     from ciff_spark.query import IndexReader
     from ciff_spark.serve import LocalSearcher
     from ciff_spark.streaming.incremental import compact_segments
+    from oracle import decode_postings
 
     pdf = transcripts_pdf(30, seed=11).sort_values(["conv_id", "turn_idx"])
     convs = sorted(pdf["conv_id"].unique())

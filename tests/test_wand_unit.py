@@ -6,10 +6,10 @@ the k boundary."""
 import numpy as np
 import pytest
 
-from ciff_spark.functions.codec import decode_postings, encode_postings
+from ciff_spark.functions.codec import encode_postings
 from ciff_spark.functions.scoring import idf_np, tfnorm_np
 from ciff_spark.wand import exhaustive_topk, wand_topk
-from oracle import posting_list
+from oracle import decode_postings, posting_list
 
 
 def _pl(lists):
